@@ -32,9 +32,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // stats-bearing table answers from the sidecar with no scan (see
     // graft.storage.MetadataAggRule for the exactness bail-outs).
     ext.injectOptimizerRule(_ => graft.storage.MetadataAggRule)
-    // The maintenance SQL surface (OPTIMIZE [ZORDER BY] / RESTORE /
-    // VACUUM / SHALLOW CLONE — see GraftSqlParser): additive, delegates
-    // everything else to Spark's parser.
+    // The versioned-table SQL surface (see GraftSqlParser): Delta-only
+    // maintenance statements, and Spark's parsed DML mapped onto the
+    // engine's executors.
     ext.injectParser((session, delegate) =>
       new GraftSqlParser(delegate, session))
   }

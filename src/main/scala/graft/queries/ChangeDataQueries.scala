@@ -273,7 +273,7 @@ object ChangeDataQueries {
     * expr` that leaves unnamed columns untouched, a conditional DELETE
     * as the fallthrough matched clause, and a conditional `INSERT
     * (cols) VALUES (exprs)` that null-fills the unnamed target column.
-    * Parsed by [[graft.ext.GraftSqlParser]]'s general grammar and
+    * Parsed by Spark, mapped by [[graft.ext.GraftSqlParser]], and
     * executed with the same touched-file write economics as u10 (probe
     * matched files, rewrite only those, carry the rest by name —
     * StorageSpec pins the counts). The oracle replays Delta's clause
@@ -398,8 +398,8 @@ object ChangeDataQueries {
     * API). Two DV deletes accumulate; the gated read is AS OF the
     * first — the second delete must be invisible to it. Works on both
     * wiring paths: the injected parser rewrites the RelationTimeTravel
-    * node at plan level, a live session binds the readAt frame under
-    * the statement (GraftSqlParser.sql).
+    * node at plan level, and a live session runs the same parse
+    * (GraftSqlParser.sql).
     */
   val u13VersionAsOfSql = withOracle(
     "u13_version_as_of_sql",

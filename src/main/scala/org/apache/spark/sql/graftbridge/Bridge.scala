@@ -16,6 +16,14 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The frame of a logical plan — `Dataset.ofRows`, private[sql]. A
+    * command in the plan executes here, eagerly, as in `spark.sql`. */
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
   /** The batch frame re-rooted as a STREAMING plan — what a v1
     * streaming Source's getBatch must return (MicroBatchExecution
     * asserts `isStreaming` on it). FileStreamSource does exactly this

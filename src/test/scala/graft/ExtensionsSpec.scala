@@ -84,6 +84,12 @@ class ExtensionsSpec extends SparkSpec {
       .isInstanceOf[GraftMaintenanceCommand])
     assert(p.parsePlan("CREATE TABLE d SHALLOW CLONE s")
       .isInstanceOf[GraftMaintenanceCommand])
+    // Spark parses the DML; its plans on a single-part target map to
+    // commands without touching any table (none of these exist).
+    Seq("DELETE FROM t WHERE x = 1", "UPDATE t SET x = x + 1",
+      "-- c\nINSERT INTO t SELECT 1", "CREATE TABLE t AS SELECT 1 AS x",
+      "MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN DELETE")
+      .foreach(q => assert(p.parsePlan(q).isInstanceOf[GraftMaintenanceCommand], q))
     // A near-miss stays Spark's problem, not silently ours.
     assert(!p.parsePlan("CREATE TABLE d (x INT) USING parquet")
       .isInstanceOf[GraftMaintenanceCommand])
@@ -1527,5 +1533,112 @@ class ExtensionsSpec extends SparkSpec {
     intercept[Exception](GraftSqlParser.sql(spark,
       "CONVERT TO DELTA convert_view"))
     spark.catalog.dropTempView("convert_view")
+  }
+
+  test("INSERT shapes Spark parses never write into a published version: " +
+      "each commits a version with the model's rows or fails loudly") {
+    import org.apache.spark.sql.functions._
+    import graft.ext.GraftSqlParser
+    import graft.storage.{DeletionVectors, SnapshotCommit}
+    val tbl = "ins_shape_tbl"
+    val base = (0L until 10L).map(i => i -> i * 10).toSet
+    def v1Listing(): Map[String, Long] = {
+      val d = SnapshotCommit.resolveDir(spark, tbl, 1).get
+      d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(d).map(st => st.getPath.getName -> st.getLen).toMap
+    }
+    def rows(): Set[(Long, Long)] = DeletionVectors.read(spark, tbl)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    // A one-version versioned table, rebuilt before every statement.
+    def fresh(): Map[String, Long] = {
+      spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+      SnapshotCommit.destroy(spark, tbl)
+      graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
+      SnapshotCommit.commit(spark, tbl) { dir =>
+        spark.range(0, 10).select(col("id").as("k"), (col("id") * 10).as("v"))
+          .coalesce(1).write.parquet(dir)
+      }
+      SnapshotCommit.register(spark, tbl)
+      v1Listing()
+    }
+    // statement -> Some(the model's rows after it) | None (must be loud)
+    val cases: Seq[(String, Option[Set[(Long, Long)]])] = Seq(
+      s"-- c\nINSERT INTO $tbl SELECT 100 AS k, 1000 AS v" ->
+        Some(base + (100L -> 1000L)),
+      s"/* c */ INSERT INTO $tbl VALUES (101, 1010)" ->
+        Some(base + (101L -> 1010L)),
+      s"INSERT INTO $tbl BY NAME SELECT 1020 AS v, 102 AS k" ->
+        Some(base + (102L -> 1020L)),
+      s"INSERT OVERWRITE TABLE $tbl (k, v) SELECT 103, 1030" ->
+        Some(Set(103L -> 1030L)),
+      s"WITH c AS (SELECT 104 AS k, 1040 AS v) INSERT INTO $tbl " +
+        "SELECT * FROM c" -> Some(base + (104L -> 1040L)),
+      s"INSERT INTO default.$tbl VALUES (105, 1050)" -> None,
+      s"INSERT INTO $tbl PARTITION (k = 1) SELECT 1060" -> None,
+      s"INSERT OVERWRITE TABLE $tbl PARTITION (k = 1) IF NOT EXISTS " +
+        "SELECT 1070" -> None)
+    for ((stmt, model) <- cases) {
+      val v1 = fresh()
+      val outcome = scala.util.Try(GraftSqlParser.sql(spark, stmt).collect())
+      assert(v1Listing() === v1, s"`$stmt` changed the v1 directory")
+      model match {
+        case Some(want) =>
+          assert(outcome.isSuccess, s"`$stmt` failed: $outcome")
+          assert(SnapshotCommit.currentVersion(spark, tbl) === Some(2L),
+            s"`$stmt` must publish a new version")
+          assert(rows() === want, s"`$stmt` committed the wrong rows")
+        case None =>
+          assert(outcome.failed.toOption.exists(
+            _.getMessage.contains("versioned table")),
+            s"`$stmt` must fail loudly, naming the versioned target: $outcome")
+          assert(SnapshotCommit.currentVersion(spark, tbl) === Some(1L))
+          assert(rows() === base)
+      }
+    }
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+    // A plain catalog table runs Spark's own plan for the same shapes.
+    val plain = "ins_shape_plain"
+    spark.sql(s"DROP TABLE IF EXISTS $plain")
+    graft.core.CatalogUtil.dropOrphanLocation(spark, plain)
+    spark.sql(s"CREATE TABLE $plain (v BIGINT, k BIGINT) USING parquet " +
+      "PARTITIONED BY (k)")
+    GraftSqlParser.sql(spark, s"INSERT INTO default.$plain VALUES (7, 1)")
+    GraftSqlParser.sql(spark, s"INSERT INTO $plain PARTITION (k = 2) SELECT 8")
+    assert(spark.table(plain).collect().map(r => r.getLong(0) -> r.getLong(1))
+      .toSet === Set(7L -> 1L, 8L -> 2L))
+    assert(SnapshotCommit.currentVersion(spark, plain).isEmpty)
+    spark.sql(s"DROP TABLE IF EXISTS $plain")
+  }
+
+  test("MERGE from a subquery source: the source is Spark's parsed plan, " +
+      "on the upsert and the conditional clause paths") {
+    import org.apache.spark.sql.functions._
+    import graft.ext.GraftSqlParser
+    import graft.storage.{DeletionVectors, SnapshotCommit}
+    val tbl = "merge_subq_tbl"
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+    SnapshotCommit.commit(spark, tbl) { dir =>
+      spark.range(0, 10).select(col("id"), (col("id") * 10).as("v"))
+        .coalesce(1).write.parquet(dir)
+    }
+    def rows() = DeletionVectors.read(spark, tbl).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    GraftSqlParser.sql(spark,
+      s"MERGE INTO $tbl t USING (SELECT id, id * 100 AS v " +
+        "FROM range(5, 15)) s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    assert(rows() === ((0L until 5L).map(i => i -> i * 10) ++
+      (5L until 15L).map(i => i -> i * 100)).toMap)
+    GraftSqlParser.sql(spark,
+      s"MERGE INTO $tbl AS t USING (SELECT id, -1L AS v FROM range(0, 3)) " +
+        "AS s ON t.id = s.id WHEN MATCHED AND t.id = 1 THEN DELETE " +
+        "WHEN MATCHED THEN UPDATE SET v = s.v")
+    val after = rows()
+    assert(after.size === 14 && !after.contains(1L))
+    assert(after(0L) === -1L && after(2L) === -1L && after(3L) === 30L)
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
   }
 }
