@@ -597,9 +597,6 @@ object Dedup {
       converged = acc.value == 0L
       labels.unpersist(false)
       labels = next
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc-debug] round $it done converged=$converged " +
-          s"t=${System.nanoTime() / 1e9}")
     }
     lastIterations = it
     // Partially-propagated labels are silently WRONG (a component wider

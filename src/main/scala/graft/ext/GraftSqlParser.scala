@@ -2,13 +2,14 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.catalog.ClusterBySpec
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
-import org.apache.spark.sql.catalyst.plans.logical.{CreateTableAsSelect, DeleteAction, DeleteFromTable, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, ReplaceTableAsSelect, SubqueryAlias, TableSpecBase, UnresolvedTableSpec, UnresolvedWith, UpdateAction, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AddColumns, AlterTableClusterBy, AlterTableCommand, CreateTableAsSelect, DeleteAction, DeleteFromTable, DropColumns, DropConstraint, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, RenameTable, ReplaceTableAsSelect, SetTableProperties, SubqueryAlias, TableSpecBase, UnresolvedTableSpec, UnresolvedWith, UnsetTableProperties, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The SQL surface of the engine's versioned tables, in two parts.
   *
@@ -29,11 +30,22 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *      THEN DELETE]                        as the unconditional full sync
   *   SELECT ... FROM t VERSION|TIMESTAMP -> DV-history time travel, and
   *     AS OF ..., table_changes(...)        the change feed, at plan level
+  *   ALTER TABLE t SET|UNSET TBLPROPERTIES -> `_properties` sidecar +
+  *                                          catalog entry
+  *   ALTER TABLE t ADD|DROP COLUMN(S)    -> metadata-only schema-ledger
+  *                                          commit
+  *   ALTER TABLE t ADD CONSTRAINT c CHECK (e),
+  *     DROP CONSTRAINT [IF EXISTS] c     -> CHECK constraints
+  *   ALTER TABLE t CLUSTER BY (...)|NONE -> liquid-clustering decl
   *
-  * Other shapes of these statements keep Spark's meaning, except that
-  * an INSERT the executors do not take (PARTITION, IF NOT EXISTS, a
-  * multi-part name) fails loudly on a versioned table instead of
-  * writing into its published version directory.
+  * Other shapes of these statements keep Spark's meaning, except where
+  * Spark's own plan would write or alter a versioned table behind the
+  * engine's back: an INSERT the executors do not take (PARTITION, IF
+  * NOT EXISTS, a multi-part name), every other ALTER TABLE form (RENAME,
+  * ALTER|REPLACE COLUMN(S), SET LOCATION, ...) and a mapped ALTER with
+  * a clause the executors cannot honour (a multi-part name, ADD COLUMN
+  * FIRST|AFTER|DEFAULT or nested, CLUSTER BY a nested field). These go
+  * to [[foreign]]: loud on a versioned table, Spark's plan elsewhere.
   *
   * Delta-only statements Spark does not parse keep a regex each:
   *
@@ -43,11 +55,6 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *     AS OF ...                         -> DeletionVectors.restore
   *   VACUUM t RETAIN n VERSIONS|HOURS
   *     [DRY RUN]                         -> DeletionVectors.vacuum
-  *   ALTER TABLE t CLUSTER BY (...)|NONE -> liquid-clustering decl
-  *   ALTER TABLE t SET TBLPROPERTIES,
-  *     ADD|DROP COLUMN(S),
-  *     ADD|DROP CONSTRAINT               -> properties / schema ledger /
-  *                                          CHECK constraints
   *   CREATE TABLE d SHALLOW CLONE s      -> SnapshotCommit.clone
   *   CONVERT TO DELTA t [NO STATISTICS]  -> in-place migration
   *   COPY INTO t FROM 'path' ...         -> idempotent batch ingest
@@ -195,38 +202,6 @@ object GraftSqlParser {
   private val RestoreTsRe =
     (s"(?is)\\s*RESTORE\\s+TABLE\\s+$Ident\\s+TO\\s+TIMESTAMP\\s+AS" +
       "\\s+OF\\s+'([^']+)'\\s*").r
-  // ALTER ... SET TBLPROPERTIES on the versioned surface: properties
-  // live in the snapshot-root `_properties` sidecar (what OPTIMIZE and
-  // clones consult) AND, when a catalog entry exists, in the catalog —
-  // one statement keeps both in step.
-  private val SetPropsRe =
-    (s"(?is)\\s*ALTER\\s+TABLE\\s+$Ident\\s+SET\\s+TBLPROPERTIES" +
-      "\\s*\\((.*)\\)\\s*").r
-  // ALTER ... ADD COLUMN(S) — schema evolution on the versioned
-  // surface: a metadata-only commit (every file carries) plus a ledger
-  // entry in the root `_properties` sidecar; time travel below the
-  // alter keeps serving the old schema. Plain catalog tables delegate
-  // to Spark's own AlterTableAddColumnsCommand.
-  private val AddColsRe =
-    (s"(?is)\\s*ALTER\\s+TABLE\\s+$Ident\\s+ADD\\s+COLUMNS?" +
-      "\\s*\\((.+)\\)\\s*").r
-  // ALTER ... DROP COLUMN(S) — logical removal through the schema
-  // ledger: a metadata-only commit; the files keep the column's bytes
-  // (Delta's drop is logical too) and time travel below the alter
-  // still serves it.
-  private val DropColsRe =
-    (s"(?is)\\s*ALTER\\s+TABLE\\s+$Ident\\s+DROP\\s+COLUMNS?" +
-      "\\s*\\(?\\s*([A-Za-z_][A-Za-z0-9_,\\s`]*?)\\s*\\)?\\s*").r
-  // ALTER ... ADD/DROP CONSTRAINT — Delta's CHECK constraints:
-  // `delta.constraints.<name>` properties in the root `_properties`
-  // sidecar, validated against EXISTING data at ADD time and enforced
-  // on every versioned write (INSERT/OVERWRITE/COPY/UPDATE/MERGE).
-  private val AddConstraintRe =
-    (s"(?is)\\s*ALTER\\s+TABLE\\s+$Ident\\s+ADD\\s+CONSTRAINT\\s+" +
-      s"$Ident\\s+CHECK\\s*\\((.+)\\)\\s*").r
-  private val DropConstraintRe =
-    (s"(?is)\\s*ALTER\\s+TABLE\\s+$Ident\\s+DROP\\s+CONSTRAINT\\s+" +
-      s"(IF\\s+EXISTS\\s+)?$Ident\\s*").r
   private val VacuumRe =
     s"(?is)\\s*VACUUM\\s+$Ident\\s+RETAIN\\s+(\\d+)\\s+VERSIONS\\s*".r
   // Delta's actual retention form: fold delete versions whose commit
@@ -238,14 +213,6 @@ object GraftSqlParser {
   private val VacuumDryRe =
     (s"(?is)\\s*VACUUM\\s+$Ident\\s+RETAIN\\s+(\\d+)\\s+" +
       "(VERSIONS|HOURS)\\s+DRY\\s+RUN\\s*").r
-  // Databricks' liquid-clustering declaration: record the clustering
-  // columns (Delta's `clusteringColumns` vocabulary) so a later plain
-  // `OPTIMIZE t` re-clusters instead of merely compacting.
-  private val AlterClusterByRe =
-    (s"(?is)\\s*ALTER\\s+TABLE\\s+$Ident\\s+CLUSTER\\s+BY" +
-      "\\s*\\(([^)]+)\\)\\s*").r
-  private val AlterClusterNoneRe =
-    s"(?is)\\s*ALTER\\s+TABLE\\s+$Ident\\s+CLUSTER\\s+BY\\s+NONE\\s*".r
   // COPY INTO — Databricks' idempotent batch ingest: load a path's
   // files into a versioned table as an append commit, SKIPPING files a
   // previous COPY already loaded (the `_copy:` sidecar ledger);
@@ -322,8 +289,9 @@ object GraftSqlParser {
     require(cols.map(_.toLowerCase).distinct.size == cols.size,
       s"$stmt names a column twice: ${cols.mkString(", ")}")
 
-  /** Spark's parsed DML mapped onto the executors; None leaves the plan
-    * to Spark. Builds commands only: no I/O happens before execution. */
+  /** Spark's parsed DML and ALTER TABLE mapped onto the executors; None
+    * leaves the plan to Spark. Builds commands only: no I/O happens
+    * before execution. */
   private def dml(plan: LogicalPlan): Option[LogicalPlan] =
     plan match {
       case DeleteFromTable(SinglePart(tbl), cond) =>
@@ -352,7 +320,9 @@ object GraftSqlParser {
           insertCommand(tbl, i.query,
             Some(i.userSpecifiedCols).filter(_.nonEmpty), i.byName,
             i.overwrite)
-        case _ => foreignInsert(i)
+        case _ => foreign(i, i.table, "INSERT INTO", "this INSERT form " +
+          "(PARTITION spec, IF NOT EXISTS or a multi-part name) is not " +
+          "supported on it — use INSERT INTO <table> [(cols)] <query>")
       })
       // `WITH c AS (...) INSERT INTO t ...`: the CTEs belong to the query.
       case w: UnresolvedWith => w.child match {
@@ -367,6 +337,10 @@ object GraftSqlParser {
         ctasCommand(r.name, r.partitioning, r.query, r.tableSpec,
           r.writeOptions, replace = true)
       case m: MergeIntoTable => mergeCommand(m)
+      case a: AlterTableCommand => Some(alterCommand(a, a.table))
+      case c: AddCheckConstraint => Some(alterCommand(c, c.child))
+      case r: RenameTable => Some(foreign(r, r.child, "ALTER TABLE",
+        "ALTER TABLE ... RENAME TO is not supported on it"))
       case _ => None
     }
 
@@ -397,24 +371,27 @@ object GraftSqlParser {
     }
   }
 
-  /** An INSERT the executors do not take (a PARTITION spec, IF NOT
-    * EXISTS, a multi-part name). Checked at execution: on a versioned
-    * table it fails loudly — Spark's file writer would write into the
-    * published version directory in place — and any other target runs
-    * Spark's own plan. */
-  private def foreignInsert(i: InsertIntoStatement): LogicalPlan = {
-    val parts = i.table match {
+  /** A statement the executors do not take, on a target Spark's own
+    * plan would write or alter behind the engine's back: an INSERT with
+    * a PARTITION spec or IF NOT EXISTS, an ALTER TABLE form with no
+    * executor, either under a multi-part name. Checked at execution: on
+    * a versioned table it fails loudly, `why` naming the form — Spark's
+    * file writer would write into the published version directory in
+    * place, and its ALTER would change only the catalog, which the next
+    * commit re-declares — and any other target runs Spark's own plan. */
+  private def foreign(plan: LogicalPlan, target: LogicalPlan, stmt: String,
+      why: String): LogicalPlan = {
+    val parts = target.collectFirst {
       case u: UnresolvedRelation => u.multipartIdentifier
-      case _ => Nil
-    }
+      case u: UnresolvedTable => u.multipartIdentifier
+      case u: UnresolvedTableOrView => u.multipartIdentifier
+    }.getOrElse(Nil)
     val name = parts.mkString(".")
-    GraftMaintenanceCommand(s"INSERT $name (Spark)", { spark =>
+    GraftMaintenanceCommand(s"$stmt $name (Spark)", { spark =>
       require(!isVersioned(spark, parts),
-        s"INSERT INTO $name: $name is a versioned table, and this INSERT " +
-          "form (PARTITION spec, IF NOT EXISTS or a multi-part name) is " +
-          "not supported on it — use INSERT INTO <table> [(cols)] <query>")
-      Bridge.ofRows(spark, resolveTimeTravel(spark, i))
-      Seq("table" -> name, "operation" -> "INSERT",
+        s"$stmt $name: $name is a versioned table, and $why")
+      Bridge.ofRows(spark, resolveTimeTravel(spark, plan))
+      Seq("table" -> name, "operation" -> stmt,
         "mode" -> "delegated (plain catalog table)")
     })
   }
@@ -524,6 +501,180 @@ object GraftSqlParser {
     }))
   }
 
+  /** ALTER TABLE on a single-part name: the property, column, CHECK-
+    * constraint and clustering forms map onto the executors. Every other
+    * form, a mapped form under a multi-part name and a mapped form with a
+    * clause the executors cannot honour go to [[foreign]]. */
+  private def alterCommand(a: LogicalPlan, target: LogicalPlan)
+      : LogicalPlan = {
+    val sc = graft.storage.SnapshotCommit
+    // ADD CONSTRAINT's target is its history-validation plan over the
+    // table's relation; every other form names an UnresolvedTable.
+    val (parts, command) = target match {
+      case u: UnresolvedTable => (u.multipartIdentifier, u.commandName)
+      case t => (t.collectFirst { case u: UnresolvedRelation =>
+        u.multipartIdentifier }.getOrElse(Nil), "ALTER TABLE ... ADD CONSTRAINT")
+    }
+    def unsupported(what: String) = foreign(a, target, "ALTER TABLE",
+      s"$what is not supported on it")
+    if (parts.size != 1)
+      return unsupported(s"$command under a multi-part name")
+    val tbl = parts.head
+    a match {
+      case SetTableProperties(_, props) =>
+        GraftMaintenanceCommand(s"SET TBLPROPERTIES $tbl", { spark =>
+          sc.setProperties(spark, tbl, props)
+          syncCatalogProperties(spark, tbl)(_ ++ props)
+          Seq("table" -> tbl, "properties_set" -> props.size.toString)
+        })
+      case UnsetTableProperties(_, keys, ifExists) =>
+        GraftMaintenanceCommand(s"UNSET TBLPROPERTIES $tbl", { spark =>
+          val known = sc.properties(spark, tbl).keySet ++
+            catalogEntry(spark, tbl).toSeq.flatMap(_.properties.keys)
+          val missing = keys.filterNot(known)
+          require(ifExists || missing.isEmpty,
+            s"ALTER TABLE $tbl UNSET TBLPROPERTIES: no property " +
+              s"${missing.mkString(", ")} (use IF EXISTS)")
+          sc.removeProperties(spark, tbl, keys.toSet)
+          syncCatalogProperties(spark, tbl)(_ -- keys)
+          Seq("table" -> tbl, "properties_unset" ->
+            (keys.size - missing.size).toString)
+        })
+      case AddColumns(_, cols) =>
+        cols.collectFirst {
+          case c if c.path.nonEmpty =>
+            s"ADD COLUMN of the nested field ${c.name.mkString(".")}"
+          case c if c.position.nonEmpty =>
+            s"ADD COLUMN ${c.colName} with a FIRST/AFTER position"
+          case c if c.default.nonEmpty =>
+            s"ADD COLUMN ${c.colName} with a DEFAULT value"
+        } match {
+          case Some(clause) => unsupported(clause)
+          case None =>
+            val fields = cols.map { c =>
+              val f = StructField(c.colName, c.dataType, c.nullable)
+              c.comment.fold(f)(f.withComment)
+            }
+            distinctCols(fields.map(_.name), s"ALTER TABLE $tbl ADD COLUMNS")
+            GraftMaintenanceCommand(s"ADD COLUMNS $tbl", { spark =>
+              // A plain catalog table runs Spark's own add-columns path
+              // (native parquet schema evolution).
+              val result =
+                if (sc.currentVersion(spark, tbl).isDefined)
+                  "version" -> runAddColumns(spark, tbl, fields).toString
+                else {
+                  Bridge.ofRows(spark, a)
+                  "mode" -> "delegated (plain catalog table)"
+                }
+              Seq("table" -> tbl, "operation" -> "ADD COLUMNS", result)
+            })
+        }
+      case DropColumns(_, names, ifExists) =>
+        names.find(_.name.size != 1) match {
+          case Some(n) =>
+            unsupported(s"DROP COLUMN of the nested field ${n.name.mkString(".")}")
+          case None =>
+            val cols = names.map(_.name.head)
+            GraftMaintenanceCommand(s"DROP COLUMNS $tbl", { spark =>
+              val v = runDropColumns(spark, tbl, cols, ifExists)
+              Seq("table" -> tbl, "operation" -> "DROP COLUMNS",
+                "columns" -> cols.mkString(","),
+                "version" -> (if (v >= 0) v.toString else "unchanged"))
+            })
+        }
+      case AddCheckConstraint(_, check) if check.userProvidedName != null =>
+        val (name, cond) = (check.userProvidedName, check.condition)
+        GraftMaintenanceCommand(s"ADD CONSTRAINT $tbl", { spark =>
+          import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
+          val key = ConstraintPropPrefix + name.toLowerCase
+          require(!sc.properties(spark, tbl).contains(key),
+            s"ALTER TABLE $tbl ADD CONSTRAINT: constraint $name " +
+              "already exists (DROP CONSTRAINT first)")
+          // Delta validates HISTORY first: an existing live row that
+          // violates the check fails the ALTER — a constraint must never
+          // be born broken. NULL results pass (SQL's CHECK rule:
+          // violated only when the predicate is FALSE).
+          val live =
+            if (sc.currentVersion(spark, tbl).isDefined)
+              graft.storage.DeletionVectors.read(spark, tbl)
+            else {
+              require(spark.catalog.tableExists(tbl),
+                s"ALTER TABLE $tbl ADD CONSTRAINT: table not found")
+              spark.table(tbl)
+            }
+          val bad = live.filter(not(coalesce(expr(cond).cast("boolean"),
+            lit(true)))).limit(1).collect()
+          require(bad.isEmpty,
+            s"ALTER TABLE $tbl ADD CONSTRAINT $name: an existing row " +
+              s"violates CHECK ($cond): ${bad.mkString}")
+          sc.setProperties(spark, tbl, Map(key -> cond))
+          Seq("table" -> tbl, "constraint" -> name, "check" -> cond)
+        })
+      case DropConstraint(_, _, _, true) =>
+        unsupported("DROP CONSTRAINT ... CASCADE")
+      case DropConstraint(_, name, ifExists, _) =>
+        GraftMaintenanceCommand(s"DROP CONSTRAINT $tbl", { spark =>
+          val key = ConstraintPropPrefix + name.toLowerCase
+          val had = sc.properties(spark, tbl).contains(key)
+          require(had || ifExists,
+            s"ALTER TABLE $tbl DROP CONSTRAINT: no constraint named " +
+              s"$name (use IF EXISTS)")
+          sc.removeProperties(spark, tbl, _ == key)
+          Seq("table" -> tbl, "constraint" -> name, "dropped" -> had.toString)
+        })
+      case AlterTableClusterBy(_, None) =>
+        GraftMaintenanceCommand(s"CLUSTER BY NONE $tbl", { spark =>
+          sc.removeProperties(spark, tbl, _ == ClusteringColsProp)
+          syncCatalogProperties(spark, tbl)(_ - ClusteringColsProp)
+          Seq("table" -> tbl, "clustering" -> "none")
+        })
+      case AlterTableClusterBy(_, Some(ClusterBySpec(refs))) =>
+        refs.find(_.fieldNames.length != 1) match {
+          case Some(r) =>
+            unsupported(s"CLUSTER BY the nested field ${r.fieldNames.mkString(".")}")
+          case None =>
+            val cs = refs.map(_.fieldNames.head)
+            require(cs.size <= 4,
+              s"CLUSTER BY $tbl: 1-4 clustering columns (got ${cs.size}) — " +
+                "the Z-order interleave caps at 4 keys, Databricks' limit")
+            GraftMaintenanceCommand(s"CLUSTER BY $tbl", { spark =>
+              // Columns must exist NOW — a typo'd key silently disabling
+              // every future OPTIMIZE would be a trap.
+              val schema = sc.readData(spark, tbl).schema.fieldNames
+              cs.foreach(c => require(schema.exists(_.equalsIgnoreCase(c)),
+                s"CLUSTER BY $tbl: no column $c"))
+              val decl = Map(ClusteringColsProp -> cs.mkString(","))
+              sc.setProperties(spark, tbl, decl)
+              syncCatalogProperties(spark, tbl)(_ ++ decl)
+              Seq("table" -> tbl, "clustering_columns" -> cs.mkString(","))
+            })
+        }
+      case _ => unsupported(command)
+    }
+  }
+
+  /** The table's catalog entry; None for a temp view (a manifest-mode
+    * registration) or a table not declared yet. */
+  private def catalogEntry(spark: SparkSession, tbl: String)
+      : Option[org.apache.spark.sql.catalyst.catalog.CatalogTable] =
+    if (spark.sessionState.catalog.getTempView(tbl).isEmpty &&
+        spark.catalog.tableExists(tbl))
+      Some(spark.sessionState.catalog.getTableMetadata(TableIdentifier(tbl)))
+    else None
+
+  /** Keep the catalog entry, when there is one, in step with the
+    * `_properties` sidecar (what OPTIMIZE, clones and the constraint
+    * gate consult): SHOW TBLPROPERTIES reads the catalog. A table with
+    * no entry is fine — properties declared before first adoption are a
+    * documented path. A real catalog failure propagates: the sidecar
+    * write before it is durable, and re-running the statement is
+    * idempotent. Through the catalog API, never spark.sql — an ALTER
+    * statement would re-enter this parser on an injected session. */
+  private def syncCatalogProperties(spark: SparkSession, tbl: String)(
+      f: Map[String, String] => Map[String, String]): Unit =
+    catalogEntry(spark, tbl).foreach(meta => spark.sessionState.catalog
+      .alterTable(meta.copy(properties = f(meta.properties))))
+
   /** The maintenance grammar; None -> not ours, delegate. A trailing
     * statement terminator is stripped up front — every reference SQL
     * file ends with one, and each arm's regex anchors to the end. */
@@ -601,34 +752,6 @@ object GraftSqlParser {
         Seq("table" -> tbl, "restored_to_version" -> v.toString,
           "anchor" -> ts)
       }))
-    case SetPropsRe(tbl, pairs) =>
-      val props = splitTop(pairs, ',').map {
-        case PropPairRe(k, v) => k -> v
-        case other => sys.error(
-          s"TBLPROPERTIES entry not understood: '${other.trim}'")
-      }.toMap
-      require(props.nonEmpty, "SET TBLPROPERTIES needs at least one pair")
-      Some(GraftMaintenanceCommand(s"SET TBLPROPERTIES $tbl", { spark =>
-        graft.storage.SnapshotCommit.setProperties(spark, tbl, props)
-        // Keep the catalog entry (when one exists) in step — SHOW
-        // TBLPROPERTIES reads it; absent-table is fine (properties
-        // declared before first adoption are a documented path). A
-        // REAL catalog failure propagates — swallowing it would leave
-        // sidecar and catalog silently out of step (the sidecar write
-        // above is durable either way, and re-running the statement is
-        // idempotent).
-        if (spark.sessionState.catalog.getTempView(tbl).isEmpty &&
-            spark.catalog.tableExists(tbl)) {
-          // Through the catalog API, never spark.sql — an ALTER
-          // statement would re-enter this very parser on an injected
-          // session (infinite recursion).
-          val cat = spark.sessionState.catalog
-          val meta = cat.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-          cat.alterTable(meta.copy(properties = meta.properties ++ props))
-        }
-        Seq("table" -> tbl, "properties_set" -> props.size.toString)
-      }))
     case CopyIntoRe(tbl, path, fmt, fmtOpts, copyOpts) =>
       def pairs(txt: String): Map[String, String] =
         if (txt == null || txt.trim.isEmpty) Map.empty
@@ -645,65 +768,6 @@ object GraftSqlParser {
           "rows_loaded" -> rows.toString,
           "version" -> (if (v >= 0) v.toString else "unchanged"))
       }))
-    case AddColsRe(tbl, colsDdl) =>
-      Some(GraftMaintenanceCommand(s"ADD COLUMNS $tbl", { spark =>
-        val v = runAddColumns(spark, tbl, colsDdl)
-        Seq("table" -> tbl, "operation" -> "ADD COLUMNS",
-          (if (v >= 0) "version" -> v.toString
-           else "mode" -> "delegated (plain catalog table)"))
-      }))
-    case DropColsRe(tbl, colsTxt) =>
-      val cols = colsTxt.split(",")
-        .map(_.trim.stripPrefix("`").stripSuffix("`"))
-        .filter(_.nonEmpty).toSeq
-      Some(GraftMaintenanceCommand(s"DROP COLUMNS $tbl", { spark =>
-        val v = runDropColumns(spark, tbl, cols)
-        Seq("table" -> tbl, "operation" -> "DROP COLUMNS",
-          "columns" -> cols.mkString(","), "version" -> v.toString)
-      }))
-    case AddConstraintRe(tbl, name, cond) =>
-      Some(GraftMaintenanceCommand(s"ADD CONSTRAINT $tbl", { spark =>
-        import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-        val key = ConstraintPropPrefix + name.toLowerCase
-        require(!graft.storage.SnapshotCommit.properties(spark, tbl)
-          .contains(key),
-          s"ALTER TABLE $tbl ADD CONSTRAINT: constraint $name " +
-            "already exists (DROP CONSTRAINT first)")
-        // Delta validates HISTORY first: an existing live row that
-        // violates the check fails the ALTER — a constraint must never
-        // be born broken. NULL results pass (SQL's CHECK rule:
-        // violated only when the predicate is FALSE).
-        val live =
-          if (graft.storage.SnapshotCommit.currentVersion(spark, tbl)
-              .isDefined)
-            graft.storage.DeletionVectors.read(spark, tbl)
-          else {
-            require(spark.catalog.tableExists(tbl),
-              s"ALTER TABLE $tbl ADD CONSTRAINT: table not found")
-            spark.table(tbl)
-          }
-        val bad = live.filter(not(coalesce(expr(cond).cast("boolean"),
-          lit(true)))).limit(1).collect()
-        require(bad.isEmpty,
-          s"ALTER TABLE $tbl ADD CONSTRAINT $name: an existing row " +
-            s"violates CHECK ($cond): ${bad.mkString}")
-        graft.storage.SnapshotCommit.setProperties(spark, tbl,
-          Map(key -> cond))
-        Seq("table" -> tbl, "constraint" -> name, "check" -> cond)
-      }))
-    case DropConstraintRe(tbl, ifExists, name) =>
-      Some(GraftMaintenanceCommand(s"DROP CONSTRAINT $tbl", { spark =>
-        val key = ConstraintPropPrefix + name.toLowerCase
-        val had = graft.storage.SnapshotCommit.properties(spark, tbl)
-          .contains(key)
-        require(had || ifExists != null,
-          s"ALTER TABLE $tbl DROP CONSTRAINT: no constraint named " +
-            s"$name (use IF EXISTS)")
-        graft.storage.SnapshotCommit.removeProperties(spark, tbl,
-          _ == key)
-        Seq("table" -> tbl, "constraint" -> name,
-          "dropped" -> had.toString)
-      }))
     case VacuumDryRe(tbl, n, unit) =>
       Some(GraftMaintenanceCommand(s"VACUUM $tbl DRY RUN", { spark =>
         val dv = graft.storage.DeletionVectors
@@ -717,39 +781,6 @@ object GraftSqlParser {
           "would_vacuum_through_version" -> cutoff.toString,
           "files_to_rewrite" -> would.size.toString) ++
           would.map(f => "file" -> f)
-      }))
-    case AlterClusterNoneRe(tbl) =>
-      Some(GraftMaintenanceCommand(s"CLUSTER BY NONE $tbl", { spark =>
-        graft.storage.SnapshotCommit.removeProperties(spark, tbl,
-          _ == ClusteringColsProp)
-        Seq("table" -> tbl, "clustering" -> "none")
-      }))
-    case AlterClusterByRe(tbl, colsTxt) =>
-      val cs = colsTxt.split(",")
-        .map(_.trim.stripPrefix("`").stripSuffix("`"))
-        .filter(_.nonEmpty).toSeq
-      require(cs.nonEmpty && cs.size <= 4,
-        s"CLUSTER BY $tbl: 1-4 clustering columns (got ${cs.size}) — " +
-          "the Z-order interleave caps at 4 keys, Databricks' limit")
-      Some(GraftMaintenanceCommand(s"CLUSTER BY $tbl", { spark =>
-        // Columns must exist NOW — a typo'd key silently disabling
-        // every future OPTIMIZE would be a trap.
-        val schema = graft.storage.SnapshotCommit.readData(spark, tbl)
-          .schema.fieldNames
-        cs.foreach(c => require(schema.exists(_.equalsIgnoreCase(c)),
-          s"CLUSTER BY $tbl: no column $c"))
-        graft.storage.SnapshotCommit.setProperties(spark, tbl,
-          Map(ClusteringColsProp -> cs.mkString(",")))
-        // Keep SHOW TBLPROPERTIES in step (the SetPropsRe discipline).
-        if (spark.sessionState.catalog.getTempView(tbl).isEmpty &&
-            spark.catalog.tableExists(tbl)) {
-          val cat = spark.sessionState.catalog
-          val meta = cat.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-          cat.alterTable(meta.copy(properties = meta.properties +
-            (ClusteringColsProp -> cs.mkString(","))))
-        }
-        Seq("table" -> tbl, "clustering_columns" -> cs.mkString(","))
       }))
     case VacuumHoursRe(tbl, h) =>
       Some(GraftMaintenanceCommand(s"VACUUM $tbl (hours)", { spark =>
@@ -1452,132 +1483,93 @@ object GraftSqlParser {
       .getOrElse(sys.error(s"UPDATE of $tbl left no published version"))
   }
 
-  /** Execute `ALTER TABLE t ADD COLUMNS (...)` — schema evolution on
-    * the versioned surface (the most common ALTER after SET
-    * TBLPROPERTIES). The widened column set is METADATA: one commit
-    * carries every data file by name (no data IO — pre-widening files
-    * null-fill the new columns on read, standard parquet evolution),
-    * stamps the change axis (`_op:ALTER` — table_changes skips it, it
-    * moves no rows), and records the widened DDL in the schema ledger
-    * (`graft.schema.v<version>` in the root `_properties` sidecar; the
-    * first ALTER also records `v0` = the original schema, so `VERSION
-    * AS OF` below the alter serves the OLD column set — Delta's
-    * time-travel schema semantics). Narrowing/renaming is rejected:
-    * only additive evolution keeps every historical file readable.
-    * A plain (non-versioned) catalog table delegates to Spark's own
-    * AlterTableAddColumnsCommand; returns the published version, or -1
-    * for the delegated path.
+  /** Execute `ALTER TABLE t ADD COLUMN(S) ...` on a versioned table —
+    * schema evolution (the most common ALTER after SET TBLPROPERTIES).
+    * The widened column set is METADATA ([[commitSchema]]): pre-widening
+    * files null-fill the new columns on read, standard parquet
+    * evolution, and `VERSION AS OF` below the alter serves the OLD
+    * column set — Delta's time-travel schema semantics. Narrowing and
+    * renaming go elsewhere: only additive evolution keeps every
+    * historical file readable. Returns the published version.
     */
   private def runAddColumns(spark: SparkSession, tbl: String,
-      colsDdl: String): Long = {
-    import org.apache.spark.sql.types.StructType
+      newCols: Seq[StructField]): Long = {
     val sc = graft.storage.SnapshotCommit
-    val dv = graft.storage.DeletionVectors
-    val newCols = StructType.fromDDL(colsDdl)
-    require(newCols.nonEmpty, s"ADD COLUMNS $tbl: no columns parsed " +
-      s"from ($colsDdl)")
-    if (sc.currentVersion(spark, tbl).isEmpty) {
-      // Plain catalog table: Spark's own ALTER (native parquet schema
-      // evolution). Through the command, never spark.sql — an injected
-      // session would recurse into this parser.
-      org.apache.spark.sql.execution.command.AlterTableAddColumnsCommand(
-        org.apache.spark.sql.catalyst.TableIdentifier(tbl),
-        newCols.fields.toSeq).run(spark)
-      return -1L
-    }
     sc.register(spark, tbl)
     val old = sc.readData(spark, tbl).schema
-    newCols.fieldNames.foreach(c => require(
-      !old.fieldNames.exists(_.equalsIgnoreCase(c)),
-      s"ADD COLUMNS $tbl: column $c already exists"))
-    val widened = StructType((old.fields ++ newCols.fields).toSeq)
-    var stamped = -1L
-    sc.commit(spark, tbl, operation = "ADD COLUMNS") { dir =>
-      val stage = new org.apache.hadoop.fs.Path(dir)
-      val cur = sc.currentLocation(spark, tbl).getOrElse(
-        sys.error(s"ADD COLUMNS target $tbl has no published version"))
-      sc.carryData(spark, cur, stage)
-      graft.storage.StatsSkipping.refreshStats(spark, cur, stage)
-      sc.carryBatchId(spark, cur, stage)
-      stamped = dv.stampVersion(spark, tbl, stage, op = "ALTER",
-        added = Nil)
-    }
-    val ledger = sc.schemaVersions(spark, tbl)
-    sc.setProperties(spark, tbl,
-      Map(s"${sc.SchemaPropPrefix}$stamped" -> widened.toDDL) ++
-        (if (ledger.isEmpty)
-          Map(s"${sc.SchemaPropPrefix}0" -> old.toDDL)
-        else Map.empty))
-    dv.realign(spark, tbl)
-    // The commit's own registration re-declared the catalog BEFORE the
-    // ledger existed (footers still say the old columns) — re-declare
-    // explicitly now; other sessions pick the ledger up through
-    // pointAt's moved-location repair on their next register.
-    if (spark.sessionState.catalog.getTempView(tbl).isEmpty &&
-        spark.catalog.tableExists(tbl)) {
-      val id = org.apache.spark.sql.catalyst.TableIdentifier(tbl)
-      spark.sessionState.catalog.alterTableDataSchema(id, widened)
-      spark.sql(s"REFRESH TABLE $tbl")
-    } else if (spark.sessionState.catalog.getTempView(tbl).isDefined) {
-      // Manifest-mode registration: the view the commit re-created
-      // predates the ledger — rebuild it under the widened schema.
-      val paths = sc.dataFiles(spark, tbl).map(_._2.toString)
-      if (paths.nonEmpty)
-        spark.read.schema(widened).parquet(paths: _*)
-          .createOrReplaceTempView(tbl)
-    }
-    sc.register(spark, tbl)
-    stamped
+    newCols.foreach(f => require(
+      !old.fieldNames.exists(_.equalsIgnoreCase(f.name)),
+      s"ADD COLUMNS $tbl: column ${f.name} already exists"))
+    commitSchema(spark, tbl, "ADD COLUMNS", old,
+      StructType(old.fields.toSeq ++ newCols))
   }
 
-  /** Execute `ALTER TABLE t DROP COLUMN(S) ...` — LOGICAL removal
-    * through the schema ledger, Delta's drop-column shape: one
-    * metadata-only commit carries every data file by name (the files
-    * keep the column's bytes — no rewrite, which is the whole point at
-    * 100 TB), stamps the change axis (`_op:ALTER`, moves no rows), and
-    * records the narrowed DDL in the ledger. Live reads project the
-    * narrowed column set; `VERSION AS OF` below the alter still serves
-    * the dropped column FROM the carried files (readDataAs reads the
-    * effective historical schema by name). Guards: the column must
-    * exist, at least one column must remain, and a column referenced
-    * by a CHECK constraint cannot be dropped (Delta's rule — drop the
-    * constraint first). Versioned tables only: a plain catalog parquet
-    * table cannot serve a narrowed projection without the ledger, so
-    * the statement requires the snapshot surface (CONVERT first).
+  /** Execute `ALTER TABLE t DROP COLUMN(S) [IF EXISTS] ...` — LOGICAL
+    * removal through the schema ledger, Delta's drop-column shape: the
+    * files keep the column's bytes ([[commitSchema]] carries them by
+    * name — no rewrite, which is the whole point at 100 TB). Live reads
+    * project the narrowed column set; `VERSION AS OF` below the alter
+    * still serves the dropped column FROM the carried files (readDataAs
+    * reads the effective historical schema by name). Guards: the
+    * column must exist (IF EXISTS skips absent ones; nothing left to
+    * drop commits nothing and returns -1), at least one column must
+    * remain, and a column referenced by a CHECK constraint cannot be
+    * dropped (Delta's rule — drop the constraint first). Versioned
+    * tables only: a plain catalog parquet table cannot serve a narrowed
+    * projection without the ledger, so the statement requires the
+    * snapshot surface (CONVERT first).
     */
   private def runDropColumns(spark: SparkSession, tbl: String,
-      cols: Seq[String]): Long = {
-    import org.apache.spark.sql.types.StructType
+      cols: Seq[String], ifExists: Boolean): Long = {
     val sc = graft.storage.SnapshotCommit
-    val dv = graft.storage.DeletionVectors
-    require(cols.nonEmpty, s"DROP COLUMNS $tbl: no columns named")
     require(sc.currentVersion(spark, tbl).isDefined,
       s"ALTER TABLE $tbl DROP COLUMN: not a versioned table — " +
         "CONVERT TO DELTA first (a plain parquet table cannot serve " +
         "a logically-narrowed schema)")
     sc.register(spark, tbl)
     val old = sc.readData(spark, tbl).schema
-    cols.foreach(c => require(
-      old.fieldNames.exists(_.equalsIgnoreCase(c)),
-      s"DROP COLUMNS $tbl: no column $c"))
-    val dropped = cols.map(_.toLowerCase).toSet
+    def present(c: String) = old.fieldNames.exists(_.equalsIgnoreCase(c))
+    if (!ifExists) cols.foreach(c =>
+      require(present(c), s"DROP COLUMNS $tbl: no column $c"))
+    val dropped = cols.filter(present)
+    if (dropped.isEmpty) return -1L
+    val lower = dropped.map(_.toLowerCase).toSet
     val narrowed = StructType(old.fields.toSeq.filterNot(f =>
-      dropped(f.name.toLowerCase)))
+      lower(f.name.toLowerCase)))
     require(narrowed.nonEmpty,
       s"DROP COLUMNS $tbl: cannot drop every column")
     constraintsOf(spark, tbl).foreach { case (name, cond) =>
-      val lc = cond.toLowerCase
-      cols.foreach(c => require(
-        !lc.matches(s"(?s).*\\b${java.util.regex.Pattern
-          .quote(c.toLowerCase)}\\b.*"),
+      val refs = spark.sessionState.sqlParser.parseExpression(cond)
+        .references.toSeq.collect { case UnresolvedAttribute(ps) => ps }
+        .flatten
+      dropped.foreach(c => require(!refs.exists(_.equalsIgnoreCase(c)),
         s"DROP COLUMNS $tbl: column $c is referenced by CHECK " +
           s"constraint $name ($cond) — DROP CONSTRAINT first"))
     }
+    commitSchema(spark, tbl, "DROP COLUMNS", old, narrowed)
+  }
+
+  /** The metadata-only commit ADD and DROP COLUMN(S) share: one commit
+    * carries every data file by name and stamps the change axis
+    * (`_op:ALTER` — table_changes skips it, it moves no rows); the
+    * schema ledger (`graft.schema.v<version>` in the root `_properties`
+    * sidecar) records `schema` at the stamped version, and the first
+    * ALTER also records `v0` = `old`. The commit's own registration
+    * predates the ledger entry (footers still say the old columns), so
+    * the catalog entry — or the manifest-mode view — is re-declared
+    * under `schema`; other sessions pick the ledger up through
+    * pointAt's moved-location repair on their next register. Returns
+    * the stamped version.
+    */
+  private def commitSchema(spark: SparkSession, tbl: String, op: String,
+      old: StructType, schema: StructType): Long = {
+    val sc = graft.storage.SnapshotCommit
+    val dv = graft.storage.DeletionVectors
     var stamped = -1L
-    sc.commit(spark, tbl, operation = "DROP COLUMNS") { dir =>
+    sc.commit(spark, tbl, operation = op) { dir =>
       val stage = new org.apache.hadoop.fs.Path(dir)
       val cur = sc.currentLocation(spark, tbl).getOrElse(
-        sys.error(s"DROP COLUMNS target $tbl has no published version"))
+        sys.error(s"$op target $tbl has no published version"))
       sc.carryData(spark, cur, stage)
       graft.storage.StatsSkipping.refreshStats(spark, cur, stage)
       sc.carryBatchId(spark, cur, stage)
@@ -1586,43 +1578,44 @@ object GraftSqlParser {
     }
     val ledger = sc.schemaVersions(spark, tbl)
     sc.setProperties(spark, tbl,
-      Map(s"${sc.SchemaPropPrefix}$stamped" -> narrowed.toDDL) ++
+      Map(s"${sc.SchemaPropPrefix}$stamped" -> schema.toDDL) ++
         (if (ledger.isEmpty)
           Map(s"${sc.SchemaPropPrefix}0" -> old.toDDL)
         else Map.empty))
     dv.realign(spark, tbl)
-    // Re-declare under the narrowed schema (the commit's registration
-    // predates the ledger entry) — the ADD COLUMNS pattern, except
-    // alterTableDataSchema REFUSES dropped columns, so narrow via the
-    // drop+recreate re-declare pointAt's narrowing arm uses (same
-    // metadata and location — the table's identity continues).
-    if (spark.sessionState.catalog.getTempView(tbl).isEmpty &&
-        spark.catalog.tableExists(tbl)) {
-      val id = org.apache.spark.sql.catalyst.TableIdentifier(tbl)
-      val cat0 = spark.sessionState.catalog.getTableMetadata(id)
-      // The entry must be EXTERNAL before the drop: dropping a MANAGED
-      // table DELETES its location — which by now is the live version
-      // directory (a saveAsTable-then-CONVERT table stays MANAGED
-      // through pointAt's ALTER SET LOCATION). Every snapshot table's
-      // data lifecycle belongs to the commit protocol, not the
-      // catalog, so EXTERNAL is also simply the truthful type.
-      val cat = cat0.copy(schema = narrowed,
-        tableType =
-          org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL)
-      if (cat0.tableType !=
-          org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL)
-        spark.sessionState.catalog.alterTable(
-          cat0.copy(tableType = org.apache.spark.sql.catalyst.catalog
-            .CatalogTableType.EXTERNAL))
-      spark.sessionState.catalog.dropTable(id,
-        ignoreIfNotExists = true, purge = false)
-      spark.sessionState.catalog.createTable(cat, ignoreIfExists = true)
-      spark.sql(s"REFRESH TABLE $tbl")
-    } else if (spark.sessionState.catalog.getTempView(tbl).isDefined) {
-      val paths = sc.dataFiles(spark, tbl).map(_._2.toString)
-      if (paths.nonEmpty)
-        spark.read.schema(narrowed).parquet(paths: _*)
-          .createOrReplaceTempView(tbl)
+    val cat = spark.sessionState.catalog
+    catalogEntry(spark, tbl) match {
+      case Some(meta) =>
+        val narrows = old.fieldNames.exists(c =>
+          !schema.fieldNames.exists(_.equalsIgnoreCase(c)))
+        if (!narrows) cat.alterTableDataSchema(meta.identifier, schema)
+        else {
+          // alterTableDataSchema REFUSES dropped columns, so narrow via
+          // the drop+recreate re-declare pointAt's narrowing arm uses
+          // (same metadata and location — the table's identity
+          // continues). The entry must be EXTERNAL before the drop:
+          // dropping a MANAGED table DELETES its location — which by
+          // now is the live version directory (a saveAsTable-then-
+          // CONVERT table stays MANAGED through pointAt's ALTER SET
+          // LOCATION). Every snapshot table's data lifecycle belongs to
+          // the commit protocol, not the catalog, so EXTERNAL is also
+          // simply the truthful type.
+          val external = meta.copy(tableType =
+            org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL)
+          if (meta.tableType != external.tableType) cat.alterTable(external)
+          cat.dropTable(meta.identifier, ignoreIfNotExists = true,
+            purge = false)
+          cat.createTable(external.copy(schema = schema),
+            ignoreIfExists = true)
+        }
+        spark.sql(s"REFRESH TABLE $tbl")
+      case None if cat.getTempView(tbl).isDefined =>
+        // Manifest-mode registration: rebuild the view under `schema`.
+        val paths = sc.dataFiles(spark, tbl).map(_._2.toString)
+        if (paths.nonEmpty)
+          spark.read.schema(schema).parquet(paths: _*)
+            .createOrReplaceTempView(tbl)
+      case None => ()
     }
     sc.register(spark, tbl)
     stamped
@@ -1741,17 +1734,13 @@ object GraftSqlParser {
     * directory ([[graft.storage.DeletionVectors.ensureSnapshot]]'s
     * requirements, probed instead of thrown)? */
   private def canAdopt(spark: SparkSession, tbl: String): Boolean =
-    spark.sessionState.catalog.getTempView(tbl).isEmpty &&
-      spark.catalog.tableExists(tbl) && scala.util.Try {
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-        meta.partitionColumnNames.isEmpty && {
-          val files = spark.table(tbl).inputFiles
-          files.nonEmpty && files.map(f =>
-            new org.apache.hadoop.fs.Path(f).getParent.toUri.getPath)
-            .distinct.sizeIs == 1
-        }
-      }.getOrElse(false)
+    catalogEntry(spark, tbl).exists(meta =>
+      meta.partitionColumnNames.isEmpty && scala.util.Try {
+        val files = spark.table(tbl).inputFiles
+        files.nonEmpty && files.map(f =>
+          new org.apache.hadoop.fs.Path(f).getParent.toUri.getPath)
+          .distinct.sizeIs == 1
+      }.getOrElse(false))
 
   /** Execute `CONVERT TO DELTA t [NO STATISTICS]` — the in-place
     * migration statement, metadata-only: version 1 = the table's

@@ -240,10 +240,6 @@ class Pipeline {
   def run(spark: SparkSession): Map[String, DataFrame] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    // Per-dataset wall-time observability (DLT's pipeline event log
-    // analogue): opt-in via conf so the quiet default stays quiet.
-    val verbose = spark.conf.getOption("spark.graft.pipeline.verbose")
-      .contains("true")
     val order = topoOrder // validates deps + rejects cycles up front
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(8, math.max(1, datasets.size)))
@@ -255,11 +251,7 @@ class Pipeline {
         val d = datasets(name)
         val gate = Future.sequence(d.deps.map(futures(_)))
         futures(name) = gate.map { depFrames =>
-          val tStart = System.nanoTime()
-          val out = materializeOne(spark, d, d.deps.zip(depFrames).toMap)
-          if (verbose)
-            System.err.println(f"[pipeline] $name%-40s ${(System.nanoTime() - tStart) / 1e9}%7.2f s (${d.materialize})")
-          out
+          materializeOne(spark, d, d.deps.zip(depFrames).toMap)
         }
       }
       val frames =

@@ -602,8 +602,18 @@ class ExtensionsSpec extends SparkSpec {
     val cat = spark.sql(s"SHOW TBLPROPERTIES $tbl").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(cat.get("quality").contains("silver"))
+    // Spark's property grammar: unquoted keys and non-string values are
+    // pairs; a key without a value or a reserved key is a parse error.
+    GraftSqlParser.sql(spark,
+      s"ALTER TABLE $tbl SET TBLPROPERTIES ('k' = true, bad = 1)")
+    val side2 = SnapshotCommit.properties(spark, tbl)
+    assert(side2.get("k").contains("true") && side2.get("bad").contains("1"),
+      s"got $side2")
     intercept[Exception](GraftSqlParser.sql(spark,
-      s"ALTER TABLE $tbl SET TBLPROPERTIES (bad = 1)"))
+      s"ALTER TABLE $tbl SET TBLPROPERTIES (bad)"))
+    intercept[Exception](GraftSqlParser.sql(spark,
+      s"ALTER TABLE $tbl SET TBLPROPERTIES ('location' = '/elsewhere')"))
+    assert(!SnapshotCommit.properties(spark, tbl).contains("location"))
     spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
@@ -917,6 +927,14 @@ class ExtensionsSpec extends SparkSpec {
     val dup = intercept[Exception](GraftSqlParser.sql(spark,
       s"ALTER TABLE $tbl ADD COLUMNS (v INT)"))
     assert(dup.getMessage.contains("already exists"), dup.getMessage)
+    // Clauses the ledger commit cannot honour: loud, naming the clause.
+    for ((clause, named) <- Seq("FIRST" -> "FIRST/AFTER",
+        "AFTER v" -> "FIRST/AFTER", "DEFAULT 5" -> "DEFAULT")) {
+      val e = intercept[Exception](GraftSqlParser.sql(spark,
+        s"ALTER TABLE $tbl ADD COLUMN y INT $clause"))
+      assert(e.getMessage.contains(named), e.getMessage)
+    }
+    assert(!spark.table(tbl).columns.contains("y"))
     // Plain catalog tables delegate to Spark's own ALTER.
     val plain = "addcol_plain_tbl"
     spark.sql(s"DROP TABLE IF EXISTS $plain")
@@ -1314,6 +1332,9 @@ class ExtensionsSpec extends SparkSpec {
       s"ALTER TABLE $tbl CLUSTER BY (nope)"))
     assert(SnapshotCommit.properties(spark, tbl)
       .get("clusteringColumns").isEmpty)
+    val en = intercept[Exception](GraftSqlParser.sql(spark,
+      s"ALTER TABLE $tbl CLUSTER BY (a.b)"))
+    assert(en.getMessage.contains("nested field a.b"), en.getMessage)
     GraftSqlParser.sql(spark, s"ALTER TABLE $tbl CLUSTER BY (a, b)")
     // Plain OPTIMIZE now Z-orders on the declared keys: a range probe
     // on EACH key prunes to a strict file subset afterwards.
@@ -1419,6 +1440,10 @@ class ExtensionsSpec extends SparkSpec {
     // Guards: unknown column, dropping everything, plain tables.
     intercept[Exception](GraftSqlParser.sql(spark,
       s"ALTER TABLE $tbl DROP COLUMN nope"))
+    val vBefore = SnapshotCommit.currentVersion(spark, tbl)
+    GraftSqlParser.sql(spark, s"ALTER TABLE $tbl DROP COLUMN IF EXISTS nope")
+    assert(SnapshotCommit.currentVersion(spark, tbl) === vBefore,
+      "DROP COLUMN IF EXISTS of an absent column must commit nothing")
     intercept[Exception](GraftSqlParser.sql(spark,
       s"ALTER TABLE $tbl DROP COLUMNS (id, v)"))
     val plain = "dropcol_plain_tbl"
@@ -1449,6 +1474,24 @@ class ExtensionsSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS ${mtbl}__dv")
     SnapshotCommit.destroy(spark, mtbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, mtbl)
+    // A CHECK blocks the drop of the columns its expression references,
+    // not of a column whose name appears in a string literal.
+    val ctbl = "dropcol_check_tbl"
+    SnapshotCommit.destroy(spark, ctbl)
+    graft.core.CatalogUtil.dropOrphanLocation(spark, ctbl)
+    GraftSqlParser.sql(spark, s"CREATE TABLE $ctbl AS SELECT id, " +
+      "CAST(id AS STRING) AS s, id AS x, id AS y FROM range(0, 5)")
+    GraftSqlParser.sql(spark,
+      s"ALTER TABLE $ctbl ADD CONSTRAINT x_set CHECK (x IS NOT NULL)")
+    val ex = intercept[Exception](GraftSqlParser.sql(spark,
+      s"ALTER TABLE $ctbl DROP COLUMN x"))
+    assert(ex.getMessage.contains("x_set"), ex.getMessage)
+    GraftSqlParser.sql(spark, s"ALTER TABLE $ctbl DROP CONSTRAINT x_set")
+    GraftSqlParser.sql(spark,
+      s"ALTER TABLE $ctbl ADD CONSTRAINT s_not_x CHECK (s <> 'x')")
+    GraftSqlParser.sql(spark, s"ALTER TABLE $ctbl DROP COLUMN x")
+    assert(spark.table(ctbl).columns.toSeq === Seq("id", "s", "y"))
+    SnapshotCommit.destroy(spark, ctbl)
   }
 
   test("CONVERT TO DELTA (r17): metadata-only migration — files carry " +
@@ -1640,5 +1683,83 @@ class ExtensionsSpec extends SparkSpec {
     assert(after(0L) === -1L && after(2L) === -1L && after(3L) === 30L)
     spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
+  }
+
+  test("ALTER TABLE forms Spark parses never change only the catalog of a " +
+      "versioned table: each reaches the engine state or fails loudly") {
+    import org.apache.spark.sql.functions._
+    import graft.ext.GraftSqlParser
+    import graft.storage.{DeletionVectors, SnapshotCommit}
+    val tbl = "alter_shape_tbl"
+    // A one-version versioned table (id, v, s), rebuilt before every
+    // statement; `SET TBLPROPERTIES ('k' = '1')` gives UNSET a key.
+    def fresh(): Unit = {
+      SnapshotCommit.destroy(spark, tbl)
+      graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
+      SnapshotCommit.commit(spark, tbl) { dir =>
+        spark.range(0, 10).select(col("id"), (col("id") * 10).as("v"),
+          col("id").cast("string").as("s")).coalesce(1).write.parquet(dir)
+      }
+      SnapshotCommit.register(spark, tbl)
+      GraftSqlParser.sql(spark, s"ALTER TABLE $tbl SET TBLPROPERTIES ('k' = '1')")
+    }
+    def props() = SnapshotCommit.properties(spark, tbl)
+    // statement -> Some(the engine state it leaves, checked after a later
+    // INSERT) | None (it must fail loudly, naming the versioned table)
+    val cases: Seq[(String, Option[() => Unit])] = Seq(
+      s"ALTER TABLE $tbl ADD COLUMN x INT" -> Some { () =>
+        assert(SnapshotCommit.currentVersion(spark, tbl) === Some(3L),
+          "the ALTER and the INSERT must each publish a version")
+        assert(SnapshotCommit.schemaVersions(spark, tbl).nonEmpty)
+        assert(DeletionVectors.read(spark, tbl).columns.toSeq ===
+          Seq("id", "v", "s", "x"), "the INSERT commit dropped x")
+      },
+      s"ALTER TABLE default.$tbl ADD COLUMNS (x INT)" -> None,
+      s"ALTER TABLE default.$tbl SET TBLPROPERTIES " +
+        "('delta.enableChangeDataFeed'='true')" -> None,
+      s"ALTER TABLE default.$tbl CLUSTER BY (id)" -> None,
+      s"ALTER TABLE $tbl UNSET TBLPROPERTIES ('k')" -> Some { () =>
+        assert(!props().contains("k"), s"UNSET left the sidecar key: ${props()}")
+      },
+      s"ALTER TABLE $tbl ALTER COLUMN v COMMENT 'c'" -> None,
+      s"ALTER TABLE $tbl RENAME COLUMN s TO s2" -> None)
+    for ((stmt, effect) <- cases) {
+      fresh()
+      val outcome = scala.util.Try(GraftSqlParser.sql(spark, stmt).collect())
+      effect match {
+        case Some(_) =>
+          assert(outcome.isSuccess, s"`$stmt` failed: $outcome")
+        case None =>
+          assert(outcome.failed.toOption.exists(
+            _.getMessage.contains("versioned table")),
+            s"`$stmt` must fail loudly, naming the versioned target: $outcome")
+          assert(SnapshotCommit.currentVersion(spark, tbl) === Some(1L))
+      }
+      GraftSqlParser.sql(spark,
+        s"INSERT INTO $tbl (id, v, s) VALUES (100, 1000, '100')")
+      SnapshotCommit.register(spark, tbl)
+      effect match {
+        case Some(check) => check()
+        case None =>
+          assert(DeletionVectors.read(spark, tbl).columns.toSeq ===
+            Seq("id", "v", "s"))
+          assert(props().get("k").contains("1") &&
+            !props().contains("delta.enableChangeDataFeed") &&
+            !props().contains("clusteringColumns"), s"`$stmt`: ${props()}")
+      }
+      assert(DeletionVectors.read(spark, tbl).count() === 11)
+    }
+    SnapshotCommit.destroy(spark, tbl)
+    // A plain catalog table runs Spark's own plan for the same forms.
+    val plain = "alter_shape_plain"
+    spark.sql(s"DROP TABLE IF EXISTS $plain")
+    graft.core.CatalogUtil.dropOrphanLocation(spark, plain)
+    spark.sql(s"CREATE TABLE $plain (id INT, s STRING) USING parquet")
+    GraftSqlParser.sql(spark, s"ALTER TABLE default.$plain ADD COLUMNS (x INT)")
+    GraftSqlParser.sql(spark, s"ALTER TABLE $plain ALTER COLUMN s COMMENT 'c'")
+    assert(spark.table(plain).columns.toSeq === Seq("id", "s", "x"))
+    assert(spark.table(plain).schema("s").getComment().contains("c"))
+    assert(SnapshotCommit.currentVersion(spark, plain).isEmpty)
+    spark.sql(s"DROP TABLE IF EXISTS $plain")
   }
 }
