@@ -123,8 +123,7 @@ final case class GraftMaintenanceCommand(label: String,
   * of the `_commits` directory rather than probing 1..current — at a
   * million files x V versions the old shape was millions of
   * NameNode/blob round-trips per statement; this is V+1. Versions
-  * predating the sidecar (or manifest-mode versions, whose carried
-  * refs record no physical size) fall back to the legacy per-file
+  * predating the sidecar fall back to the legacy per-file
   * listing for the missing columns — counted in [[legacyStatusCalls]]
   * so a test can pin that a `_meta`-bearing table issues none.
   */
@@ -147,19 +146,13 @@ final case class GraftHistoryCommand(table: String)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     sc.publishedVersions(spark, table).flatMap { v =>
       sc.resolveDir(spark, table, v).map { d =>
-        def legacyBytes(): Long = {
-          val files = sc.listData(spark, d)
-          GraftHistoryCommand.legacyStatusCalls.addAndGet(files.size)
-          files.map(f => fs.getFileStatus(f._2).getLen).sum
-        }
         sc.versionMeta(spark, d) match {
           case Some(m) =>
-            val bytes = if (m.bytes >= 0) m.bytes else legacyBytes()
-            Row(v, m.tsMs, m.operation, m.nFiles, bytes, m.rows, v == cur)
+            Row(v, m.tsMs, m.operation, m.nFiles, m.bytes, m.rows, v == cur)
           case None => // pre-_meta version: degrade, don't fail
             val files = sc.listData(spark, d)
             GraftHistoryCommand.legacyStatusCalls.addAndGet(files.size)
-            val bytes = files.map(f => fs.getFileStatus(f._2).getLen).sum
+            val bytes = files.map(fs.getFileStatus(_).getLen).sum
             val ts = scala.util.Try(
               fs.getFileStatus(d).getModificationTime).getOrElse(-1L)
             Row(v, ts, "UNKNOWN", files.size.toLong, bytes, -1L, v == cur)
@@ -640,7 +633,7 @@ object GraftSqlParser {
             GraftMaintenanceCommand(s"CLUSTER BY $tbl", { spark =>
               // Columns must exist NOW — a typo'd key silently disabling
               // every future OPTIMIZE would be a trap.
-              val schema = sc.readData(spark, tbl).schema.fieldNames
+              val schema = spark.table(tbl).schema.fieldNames
               cs.foreach(c => require(schema.exists(_.equalsIgnoreCase(c)),
                 s"CLUSTER BY $tbl: no column $c"))
               val decl = Map(ClusteringColsProp -> cs.mkString(","))
@@ -653,8 +646,8 @@ object GraftSqlParser {
     }
   }
 
-  /** The table's catalog entry; None for a temp view (a manifest-mode
-    * registration) or a table not declared yet. */
+  /** The table's catalog entry; None when a same-name temp view
+    * shadows it or no table is declared yet. */
   private def catalogEntry(spark: SparkSession, tbl: String)
       : Option[org.apache.spark.sql.catalyst.catalog.CatalogTable] =
     if (spark.sessionState.catalog.getTempView(tbl).isEmpty &&
@@ -827,8 +820,8 @@ object GraftSqlParser {
       // Delta's `DESCRIBE DETAIL`: one row of table-level facts, served
       // from the CURRENT version's `_meta` audit sidecar plus the root
       // sidecars — constant-time like HISTORY (no per-data-file status;
-      // a pre-_meta or manifest version reports -1 bytes rather than
-      // paying a per-file walk).
+      // a pre-_meta version reports -1 rather than paying a per-file
+      // walk).
       Some(GraftMaintenanceCommand(s"DETAIL $tbl", { spark =>
         val sc = graft.storage.SnapshotCommit
         val v = sc.register(spark, tbl).getOrElse(sys.error(
@@ -1100,8 +1093,8 @@ object GraftSqlParser {
     * PROBE which data files hold a live matched key (a column-pruned
     * scan of the key columns plus file provenance, semi-joined against
     * the source's keys), REWRITE only those files' live rows through the
-    * clauses, and CARRY every untouched file by name (hard link /
-    * manifest ref — no data IO). Write IO is therefore proportional to
+    * clauses, and CARRY every untouched file by name (a hard link — no
+    * data IO on a local filesystem). Write IO is therefore proportional to
     * touched files + source, not table size. An insert-only MERGE
     * touches nothing. Only the full-sync form (NOT MATCHED BY SOURCE
     * DELETE) is a full rewrite, by definition: the source IS the
@@ -1192,8 +1185,8 @@ object GraftSqlParser {
         graft.storage.StatsSkipping.refreshStats(spark, cur, stage)
         sc.carryBatchId(spark, cur, stage)
       } else {
-        val allFiles = sc.listData(spark, cur) // (basename, physical)
-        val rawSchema = sc.readData(spark, tgt).schema
+        val allFiles = sc.listData(spark, cur)
+        val rawSchema = spark.table(tgt).schema
         keys.foreach(k => require(
           rawSchema.fieldNames.exists(_.equalsIgnoreCase(k)),
           s"MERGE target $tgt has no key column $k"))
@@ -1224,12 +1217,11 @@ object GraftSqlParser {
                   .collect().map(_.getString(0)).toSet
             }
           }
-        val touchedPhys = allFiles.collect {
-          case (n, p) if touched(n) => p.toString }
+        val touchedFiles = allFiles.filter(p => touched(p.getName))
         val touchedLive =
-          if (touchedPhys.isEmpty) sc.readData(spark, tgt).limit(0)
+          if (touchedFiles.isEmpty) spark.table(tgt).limit(0)
           else dv.mask(spark, tgt, spark.read.schema(rawSchema)
-            .parquet(touchedPhys: _*))
+            .parquet(touchedFiles.map(_.toString): _*))
         val kept = touchedLive.join(srcKeys, keys, "left_anti")
         def aligned = srcDf.select(rawSchema.fieldNames.toSeq.map(col): _*)
         def clauseIndex(conds: Seq[Option[Column]]): Column =
@@ -1331,9 +1323,9 @@ object GraftSqlParser {
         // attempt, and the overlapped tail may create the directory first.
         overlapped { mergeOut.write.mode("append").parquet(dir) } {
           def carryStamp(): Long = {
-            allFiles.foreach { case (n, p) =>
-              if (!touched(n))
-                sc.carry(spark, p, new org.apache.hadoop.fs.Path(stage, n))
+            allFiles.foreach { p =>
+              if (!touched(p.getName)) sc.carry(spark, p,
+                new org.apache.hadoop.fs.Path(stage, p.getName))
             }
             dv.stampVersion(spark, tgt, stage, op = "MERGE",
               added = Nil, dropped = touched)
@@ -1389,7 +1381,7 @@ object GraftSqlParser {
       val cur = sc.currentLocation(spark, tbl).getOrElse(
         sys.error(s"UPDATE target $tbl has no published version"))
       val allFiles = sc.listData(spark, cur)
-      val rawSchema = sc.readData(spark, tbl).schema
+      val rawSchema = spark.table(tbl).schema
       sets.foreach { case (c, _) =>
         require(rawSchema.fieldNames.exists(_.equalsIgnoreCase(c)),
           s"UPDATE target $tbl has no column $c") }
@@ -1407,12 +1399,11 @@ object GraftSqlParser {
       val touched: Set[String] = probe
         .select("_graft_file").distinct()
         .collect().map(_.getString(0)).toSet
-      val touchedPhys = allFiles.collect {
-        case (n, p) if touched(n) => p.toString }
+      val touchedFiles = allFiles.filter(p => touched(p.getName))
       val touchedLive =
-        if (touchedPhys.isEmpty) sc.readData(spark, tbl).limit(0)
+        if (touchedFiles.isEmpty) spark.table(tbl).limit(0)
         else dv.mask(spark, tbl, spark.read.schema(rawSchema)
-          .parquet(touchedPhys: _*))
+          .parquet(touchedFiles.map(_.toString): _*))
       val updated = touchedLive.select(rawSchema.fields.toSeq.map { f =>
         sets.find(_._1.equalsIgnoreCase(f.name)) match {
           case Some((_, e)) =>
@@ -1433,9 +1424,9 @@ object GraftSqlParser {
       // ErrorIfExists pre-check would misread as a conflict.
       overlapped { updated.write.mode("append").parquet(dir) } {
         def carryStamp(): Long = {
-          allFiles.foreach { case (n, p) =>
-            if (!touched(n))
-              sc.carry(spark, p, new org.apache.hadoop.fs.Path(stage, n))
+          allFiles.foreach { p =>
+            if (!touched(p.getName)) sc.carry(spark, p,
+              new org.apache.hadoop.fs.Path(stage, p.getName))
           }
           dv.stampVersion(spark, tbl, stage, op = "UPDATE",
             added = Nil, dropped = touched)
@@ -1496,7 +1487,7 @@ object GraftSqlParser {
       newCols: Seq[StructField]): Long = {
     val sc = graft.storage.SnapshotCommit
     sc.register(spark, tbl)
-    val old = sc.readData(spark, tbl).schema
+    val old = spark.table(tbl).schema
     newCols.foreach(f => require(
       !old.fieldNames.exists(_.equalsIgnoreCase(f.name)),
       s"ADD COLUMNS $tbl: column ${f.name} already exists"))
@@ -1509,7 +1500,7 @@ object GraftSqlParser {
     * files keep the column's bytes ([[commitSchema]] carries them by
     * name — no rewrite, which is the whole point at 100 TB). Live reads
     * project the narrowed column set; `VERSION AS OF` below the alter
-    * still serves the dropped column FROM the carried files (readDataAs
+    * still serves the dropped column FROM the carried files (readCurrentAs
     * reads the effective historical schema by name). Guards: the
     * column must exist (IF EXISTS skips absent ones; nothing left to
     * drop commits nothing and returns -1), at least one column must
@@ -1527,7 +1518,7 @@ object GraftSqlParser {
         "CONVERT TO DELTA first (a plain parquet table cannot serve " +
         "a logically-narrowed schema)")
     sc.register(spark, tbl)
-    val old = sc.readData(spark, tbl).schema
+    val old = spark.table(tbl).schema
     def present(c: String) = old.fieldNames.exists(_.equalsIgnoreCase(c))
     if (!ifExists) cols.foreach(c =>
       require(present(c), s"DROP COLUMNS $tbl: no column $c"))
@@ -1556,8 +1547,7 @@ object GraftSqlParser {
     * sidecar) records `schema` at the stamped version, and the first
     * ALTER also records `v0` = `old`. The commit's own registration
     * predates the ledger entry (footers still say the old columns), so
-    * the catalog entry — or the manifest-mode view — is re-declared
-    * under `schema`; other sessions pick the ledger up through
+    * the catalog entry is re-declared under `schema`; other sessions pick the ledger up through
     * pointAt's moved-location repair on their next register. Returns
     * the stamped version.
     */
@@ -1609,12 +1599,6 @@ object GraftSqlParser {
             ignoreIfExists = true)
         }
         spark.sql(s"REFRESH TABLE $tbl")
-      case None if cat.getTempView(tbl).isDefined =>
-        // Manifest-mode registration: rebuild the view under `schema`.
-        val paths = sc.dataFiles(spark, tbl).map(_._2.toString)
-        if (paths.nonEmpty)
-          spark.read.schema(schema).parquet(paths: _*)
-            .createOrReplaceTempView(tbl)
       case None => ()
     }
     sc.register(spark, tbl)
@@ -1744,8 +1728,8 @@ object GraftSqlParser {
 
   /** Execute `CONVERT TO DELTA t [NO STATISTICS]` — the in-place
     * migration statement, metadata-only: version 1 = the table's
-    * current files carried by name (hard link / manifest ref, zero
-    * data IO), the catalog repointed at the published version, and —
+    * current files carried by name (hard links, zero data IO on a
+    * local filesystem), the catalog repointed at the published version, and —
     * unless NO STATISTICS — a per-file min/max `_stats` sidecar built
     * from the parquet FOOTERS on every column (one footer read per
     * file, the cost Delta's own CONVERT pays; never a data scan), so
@@ -1814,7 +1798,7 @@ object GraftSqlParser {
 
   /** Execute `INSERT INTO t <query>` as an APPEND commit: the query's
     * rows write as new files, every previous file carries by name (hard
-    * link / manifest ref — no data IO), and the `_dv`/`_stats`/
+    * links — no data IO on a local filesystem), and the `_dv`/`_stats`/
     * `_batchid` sidecars ride along exactly as they do through MERGE —
     * deleted rows stay deleted, skipping keeps pruning, exactly-once
     * sink replay survives. A plain catalog table is ADOPTED into the
@@ -1891,7 +1875,7 @@ object GraftSqlParser {
       val stage = new org.apache.hadoop.fs.Path(dir)
       // Aligned INSIDE the closure: a rebase re-reads the then-current
       // target schema (a concurrent widening commit could change it).
-      val aligned = alignTo(sc.readData(spark, tbl).schema)
+      val aligned = alignTo(spark.table(tbl).schema)
       enforceConstraints(spark, tbl, aligned, stmt)
       aligned.write.mode("overwrite").parquet(dir)
       if (overwrite) {
@@ -1911,7 +1895,7 @@ object GraftSqlParser {
         // The fresh files are exactly what is in the stage BEFORE the
         // carry; the version stamp's _add: sentinels name them so
         // table_changes can serve this insert.
-        val appended = sc.listData(spark, stage).map(_._1)
+        val appended = sc.listData(spark, stage).map(_.getName)
         sc.currentLocation(spark, tbl).foreach { prev =>
           sc.carryData(spark, prev, stage)
           graft.storage.StatsSkipping.refreshStats(spark, prev, stage)
@@ -1970,7 +1954,7 @@ object GraftSqlParser {
       else dv.copiedSources(spark, tbl)
     val fresh = all.filterNot(loaded)
     if (fresh.isEmpty) return (-1L, 0L, 0L)
-    val target = sc.readData(spark, tbl).schema
+    val target = spark.table(tbl).schema
     val reader = spark.read.options(fmtOpts)
     val src = fmt match {
       case "CSV" => reader.schema(target).csv(fresh: _*)
@@ -1992,17 +1976,15 @@ object GraftSqlParser {
       val stage = new org.apache.hadoop.fs.Path(dir)
       enforceConstraints(spark, tbl, src, "COPY INTO")
       src.write.mode("overwrite").parquet(dir)
-      val appended = sc.listData(spark, stage).map(_._1)
-      rows = spark.read.parquet(
-        appended.map(n => new org.apache.hadoop.fs.Path(stage, n)
-          .toString): _*).count()
+      val appended = sc.listData(spark, stage)
+      rows = spark.read.parquet(appended.map(_.toString): _*).count()
       sc.currentLocation(spark, tbl).foreach { prev =>
         sc.carryData(spark, prev, stage)
         graft.storage.StatsSkipping.refreshStats(spark, prev, stage)
         sc.carryBatchId(spark, prev, stage)
       }
       dv.stampVersion(spark, tbl, stage, op = "COPY",
-        added = appended, copied = fresh)
+        added = appended.map(_.getName), copied = fresh)
     }
     dv.realign(spark, tbl)
     sc.register(spark, tbl)

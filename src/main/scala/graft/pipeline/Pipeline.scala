@@ -504,7 +504,7 @@ class Pipeline {
                   org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
                 else df
               try {
-                val target = sc.readData(spark, name)
+                val target = spark.table(name)
                 val liveFiles = target.inputFiles.map(local).toSet
                 val batchKeys = batch.select(keys.map(batch.col): _*).distinct()
                 val touched = target
@@ -590,21 +590,21 @@ class Pipeline {
           spark.table(name)
       }
     if (d.tableProperties.nonEmpty && d.materialize != Materialize.View) {
-      // Durable copy: the snapshot-root `_properties` sidecar survives
-      // catalog mode changes (a manifest-mode temp view cannot carry
-      // TBLPROPERTIES). Precedence in consumers (Optimize) is catalog
-      // first — a user's direct ALTER TABLE SET TBLPROPERTIES wins,
-      // matching Delta — with the sidecar as the manifest-mode
-      // fallback.
+      // Durable copy: the snapshot-root `_properties` sidecar outlives
+      // the in-memory session catalog (a new process re-registers the
+      // table from its location with no user TBLPROPERTIES).
+      // Precedence in consumers (Optimize) is catalog first — a user's
+      // direct ALTER TABLE SET TBLPROPERTIES wins, matching Delta —
+      // with the sidecar as the fallback.
       graft.storage.SnapshotCommit.setProperties(spark, name,
         d.tableProperties)
       val props = d.tableProperties
         .map { case (k, v) =>
           s"'${k.replace("'", "''")}' = '${v.replace("'", "''")}'" }
         .mkString(", ")
-      // Catalog copy where the catalog can hold one (SHOW TBLPROPERTIES
-      // discoverability); temp views reject the ALTER — the sidecar
-      // already has it, so note and continue.
+      // Catalog copy (SHOW TBLPROPERTIES discoverability); if the ALTER
+      // fails (e.g. a same-name temp view shadows the table) the
+      // sidecar already has it, so note and continue.
       try spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES ($props)")
       catch { case e: org.apache.spark.sql.AnalysisException =>
         System.err.println(

@@ -869,7 +869,7 @@ object ChangeDataQueries {
       s"total + 100 WHERE o_orderkey % 9 = 0 AND o_orderstatus <> 'I'")
     drain()
     graft.storage.SnapshotCommit.register(s, out)
-    graft.storage.SnapshotCommit.readData(s, out)
+    s.table(out)
   }
 
   /** u21 — `CONVERT TO DELTA` (r17): Databricks' in-place migration

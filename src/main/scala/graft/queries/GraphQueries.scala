@@ -237,10 +237,6 @@ object GraphQueries {
     * Pregel unrolling would run on a cluster the inputs cannot fill. */
   private def graphIsSmall(s: org.apache.spark.sql.SparkSession,
       d: String): Boolean = {
-    // Test seam: lets the equality pin force the distributed rounds on
-    // a small fixture (the gate scales all take the local branch).
-    if (s.conf.getOption("spark.graft.graph.disableLocal")
-        .exists(_.equalsIgnoreCase("true"))) return false
     val bytes = graft.storage.OptimizedWrite.leafBytes(
       Tables.orders(s, d)) +
       graft.storage.OptimizedWrite.leafBytes(Tables.lineitem(s, d))
@@ -256,7 +252,8 @@ object GraphQueries {
     // low hundreds of MB in primitive form — the same role
     // Dedup.duplicateClusters' 2M-edge localThreshold plays, expressed
     // in the bytes this gate can read without executing anything.
-    // Override for tests/deployments: spark.graft.graph.localMaxBytes.
+    // Override for tests/deployments: spark.graft.graph.localMaxBytes
+    // (0 forces the distributed rounds).
     val absCap = s.conf.getOption("spark.graft.graph.localMaxBytes")
       .map(_.toLong).getOrElse(256L << 20)
     bytes / maxPart < p && bytes <= absCap

@@ -155,9 +155,8 @@ object DeletionVectors {
     }
 
   /** Carry every data file of the current version into a staged
-    * snapshot directory, names preserved — hard links in link mode,
-    * metadata refs in manifest mode (SnapshotCommit.carry decides).
-    * `except` filters by logical basename (vacuum skips the files it
+    * snapshot directory, names preserved (SnapshotCommit.carry).
+    * `except` filters by basename (vacuum skips the files it
     * rewrote). */
   private def linkDataFiles(spark: SparkSession, from: Path, to: Path,
       except: Set[String] = Set.empty): Unit =
@@ -337,7 +336,7 @@ object DeletionVectors {
         // write-commit job per DELETE (the stampVersion r17 reasoning;
         // the probe job computing the coordinates stays distributed).
         val coordRows: Seq[(String, Long, Long)] =
-          withCoords(SnapshotCommit.readData(spark, table)).filter(pred)
+          withCoords(spark.table(table)).filter(pred)
             .select(col("_dv_file"), col("_dv_pos"))
             .collect().map(r => (r.getString(0), r.getLong(1), v)).toSeq
         val stamp = Seq(("_hwm", -1L, v),
@@ -347,7 +346,7 @@ object DeletionVectors {
           old ++ coordRows ++ stamp)
       } else {
         // LARGE sidecar: the original distributed union write.
-        val coords = withCoords(SnapshotCommit.readData(spark, table))
+        val coords = withCoords(spark.table(table))
           .filter(pred)
           .select(col("_dv_file").as("f"), col("_dv_pos").as("p"),
             lit(v).as("v"))
@@ -392,12 +391,12 @@ object DeletionVectors {
   def readAt(spark: SparkSession, table: String, v: Long): DataFrame = {
     val ledger = SnapshotCommit.schemaVersions(spark, table)
     if (ledger.isEmpty)
-      maskAt(spark, table, SnapshotCommit.readData(spark, table), v)
+      maskAt(spark, table, spark.table(table), v)
     else {
       val effective = ledger.filter(_._1 <= v).lastOption
         .getOrElse(ledger.head)._2
       maskAt(spark, table,
-        SnapshotCommit.readDataAs(spark, table, effective), v)
+        SnapshotCommit.readCurrentAs(spark, table, effective), v)
     }
   }
 
@@ -422,7 +421,7 @@ object DeletionVectors {
   private[graft] def readWithProvenance(spark: SparkSession, table: String,
       fileCol: String): DataFrame =
     maskAt(spark, table,
-      withCoords(SnapshotCommit.readData(spark, table))
+      withCoords(spark.table(table))
         .withColumnRenamed("_dv_file", fileCol)
         .drop("_dv_pos"),
       Long.MaxValue)
@@ -739,19 +738,16 @@ object DeletionVectors {
 
     val hconf = spark.sparkContext.hadoopConfiguration
     val cur = SnapshotCommit.currentLocation(spark, table).get
-    val schema = SnapshotCommit.readData(spark, table).schema
+    val schema = spark.table(table).schema
     val dataCols = schema.fieldNames.toSeq
 
     // Rebase map from a coordinates-only scan: survivor (f, p) ->
     // new position = rank among the file's survivors by old position.
-    // Sidecar coordinates key on logical basenames; the current
-    // version's listing resolves each to its physical path (identical
-    // in link mode, a ref target in manifest mode).
-    val physOf = SnapshotCommit.listData(spark, cur).toMap
+    // Sidecar coordinates key on basenames in the current version.
     val gfIdx = affected.zipWithIndex.toSeq
     val gfMap = spark.createDataFrame(gfIdx).toDF("_mf", "_gf")
     val affectedRows = spark.read.schema(schema)
-      .parquet(affected.map(n => physOf(n).toUri.getPath): _*)
+      .parquet(affected.map(n => new Path(cur, n).toUri.getPath): _*)
       .withColumn("_f", substring_index(col("_metadata.file_path"), "/", -1))
       .withColumn("_p", col("_metadata.row_index"))
     val survivors = affectedRows
@@ -1050,9 +1046,9 @@ object DeletionVectors {
       s"table_changes($table, $fromV, $toV): version $toV is beyond " +
         s"the table's latest change version $hwm — Delta errors on " +
         "out-of-range versions rather than serving a partial feed")
-    // ONE readData plan per request: its schema feeds every arm, and
+    // ONE table plan per request: its schema feeds every arm, and
     // the same frame is the full-scan join input on the fallback path.
-    val raw = SnapshotCommit.readData(spark, table)
+    val raw = spark.table(table)
     val schema = raw.schema
     val cols = schema.fieldNames.toSeq
     def shaped(df: DataFrame): DataFrame =
@@ -1163,14 +1159,15 @@ object DeletionVectors {
             s"version(s) ${lostVs.map("v" + _).mkString(", ")} were " +
             "rewritten away by a later UPDATE/MERGE or rolled back by " +
             "RESTORE — that span of the feed is gone; narrow the range")
-        lazy val phys = SnapshotCommit.dataFiles(spark, table).toMap
+        // The current version's data files by basename.
+        lazy val live = SnapshotCommit.dataFiles(spark, table).toMap
         // The pruned scan reads the named files under the table schema
         // (old files null-fill post-ALTER columns, like the insert arm);
         // names physically gone serve nothing — exactly what the
         // full-scan join did for them. No in-range deletes: no arm.
         val delBase: Option[DataFrame] = delNames match {
           case Some(ns) =>
-            val paths = ns.flatMap(phys.get).map(_.toString)
+            val paths = ns.flatMap(live.get).map(_.toString)
             if (paths.isEmpty) None
             else Some(withCoords(
               spark.read.schema(schema).parquet(paths: _*)))
@@ -1191,7 +1188,7 @@ object DeletionVectors {
         }.toSeq
         val insArms: Seq[DataFrame] = if (addRows.isEmpty) Nil else {
           val gone = addRows.collect {
-            case (n, v) if !phys.contains(n) => s"$n (v$v)" }
+            case (n, v) if !live.contains(n) => s"$n (v$v)" }
           require(gone.isEmpty,
             s"table_changes($table, $fromV, $toV): inserted file(s) " +
               s"${gone.take(3).mkString(", ")} were rewritten or " +
@@ -1199,7 +1196,7 @@ object DeletionVectors {
               "physically gone; narrow the range")
           addRows.groupBy(_._2).toSeq.map { case (v, rs) =>
             shaped(spark.read.schema(schema)
-              .parquet(rs.map(r => phys(r._1).toString): _*)
+              .parquet(rs.map(r => live(r._1).toString): _*)
               .withColumn("change_type", lit("insert"))
               .withColumn("commit_version", lit(v)))
           }

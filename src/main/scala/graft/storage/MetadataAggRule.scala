@@ -297,10 +297,9 @@ object MetadataAggRule extends Rule[LogicalPlan] {
       val spark = rel.sparkSession
       val files = rel.location.inputFiles
       if (files.isEmpty) return None // a scan of nothing is already free
-      // Stats row per file, from its parent directory's sidecar (a
-      // manifest version's files span directories; each carries the
-      // stats for its own basenames). Foreign dirs (outside the
-      // warehouse) are never probed — see StatsSkipping.probeAllowed.
+      // Stats row per file, from its parent directory's sidecar.
+      // Foreign dirs (outside the warehouse and the indexed roots) are
+      // never probed — see StatsSkipping.probeAllowed.
       val parents = files.map(f => new Path(f).getParent.toString).distinct
       val statsByDir: Map[String, Map[String, Map[String, ColRange]]] =
         parents.flatMap { p =>

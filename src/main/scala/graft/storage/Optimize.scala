@@ -24,7 +24,7 @@ object Optimize {
   val TargetFileSizeProp = "delta.targetFileSize"
 
   private def tableFiles(spark: SparkSession, table: String) = {
-    val files = SnapshotCommit.readData(spark, table).inputFiles
+    val files = spark.table(table).inputFiles
     require(files.nonEmpty, s"$table has no files to compact")
     val hconf = spark.sparkContext.hadoopConfiguration
     files.toSeq.map { f =>
@@ -55,7 +55,8 @@ object Optimize {
       // Catalog TBLPROPERTIES are AUTHORITATIVE when the catalog can
       // hold them (Delta semantics: a user's direct ALTER TABLE SET
       // TBLPROPERTIES must win over whatever the pipeline's sidecar
-      // last recorded). Try: temp views reject SHOW TBLPROPERTIES.
+      // last recorded). Try: a same-name temp view rejects SHOW
+      // TBLPROPERTIES.
       // Residual of keeping two copies: if the pipeline's own catalog
       // ALTER fails (it logs and continues — e.g. a transient view
       // shadow, since removed by pointAt) while a LATER SHOW succeeds,
@@ -68,9 +69,11 @@ object Optimize {
         .find(_.getString(0) == TargetFileSizeProp)
         .flatMap(r => scala.util.Try(r.getString(1).toLong).toOption)
     }.orElse {
-      // The snapshot-root `_properties` sidecar — the fallback that
-      // survives manifest mode, where the table resolves through a temp
-      // view that cannot carry TBLPROPERTIES.
+      // The snapshot-root `_properties` sidecar — the durable copy.
+      // The session catalog is in-memory: a new process re-registers
+      // the table from its location with no user TBLPROPERTIES, so the
+      // sidecar is what carries a pipeline's declaration across
+      // processes.
       SnapshotCommit.properties(spark, table).get(TargetFileSizeProp)
         .flatMap(v => scala.util.Try(v.toLong).toOption)
     }.getOrElse(128L * 1024 * 1024)
@@ -81,7 +84,7 @@ object Optimize {
     // The live view: identical to spark.table when no vectors exist.
     val hadVectors = DeletionVectors.version(spark, table) > 0
     val live = if (hadVectors) DeletionVectors.read(spark, table)
-               else SnapshotCommit.readData(spark, table)
+               else spark.table(table)
     val rows = live.count()
     val bytesPerRow = math.max(1.0, totalBytes.toDouble / math.max(1L, rows))
     val recordsPerFile = math.max(1L, (target / bytesPerRow).toLong)
@@ -103,7 +106,7 @@ object Optimize {
       // above are heuristics and may stay one version stale).
       val liveNow = if (DeletionVectors.version(spark, table) > 0)
         DeletionVectors.read(spark, table)
-        else SnapshotCommit.readData(spark, table)
+        else spark.table(table)
       liveNow.coalesce(partitions).write
         .option("maxRecordsPerFile", recordsPerFile)
         .parquet(dir)
@@ -119,7 +122,7 @@ object Optimize {
       }
     }
     if (hadVectors) spark.sql(s"DROP TABLE IF EXISTS ${table}__dv")
-    (sizes.length, SnapshotCommit.readData(spark, table).inputFiles.length)
+    (sizes.length, spark.table(table).inputFiles.length)
   }
 
   /** `OPTIMIZE ... ZORDER BY` — the MAINTENANCE half of the clustering
@@ -152,7 +155,7 @@ object Optimize {
       // state.
       val liveNow = if (DeletionVectors.version(spark, table) > 0)
         DeletionVectors.read(spark, table)
-        else SnapshotCommit.readData(spark, table)
+        else spark.table(table)
       ZOrder.layout(liveNow, cols.take(4), partitions)
         .write.parquet(dir)
       SnapshotCommit.currentLocation(spark, table).foreach(cur =>

@@ -11,7 +11,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 final class ConcurrentCommitException(msg: String)
   extends RuntimeException(msg)
 
-/** Manifest-pointer table commits — the minimal slice of a Delta/Iceberg
+/** Pointer-file table commits — the minimal slice of a Delta/Iceberg
   * transaction log that closes the non-atomic snapshot-swap window.
   *
   * The reference's tables inherit atomic commits from Delta
@@ -65,29 +65,14 @@ final class ConcurrentCommitException(msg: String)
   * rewritten files) pass `maxAttempts = 1` and surface conflicts
   * instead of retrying.
   *
-  * CARRY MODES — how unchanged files travel between versions:
-  *
-  *  - link (default): hard link on a POSIX filesystem (a directory
-  *    entry, no IO), copy elsewhere. Version cost proportional to
-  *    rewritten bytes locally, but O(table) by copy on an object store.
-  *  - manifest (`spark.graft.snapshot.manifest = true`): [[carry]]
-  *    writes a tiny `<name>.graftref` file recording the PHYSICAL path
-  *    of the unchanged file, which stays in place in its original
-  *    version directory — carry cost is a few bytes of metadata
-  *    REGARDLESS of filesystem, the Delta/Iceberg economics (log
-  *    entries referencing files in place) and the right mode for
-  *    S3/ADLS, where the reference actually runs. Resolution
-  *    ([[listData]]/[[readData]]) follows refs to physical paths;
-  *    [[register]] maps the table name to a temp view over the
-  *    resolved file set (a path-scoped catalog table cannot span
-  *    version directories); pruning becomes reference-counting GC —
-  *    a superseded version's files are deleted only when no retained
-  *    manifest references them. Refs always point at DATA files, never
-  *    at other refs (carry resolves one hop at write time), so chains
-  *    stay O(1) deep no matter how many versions carry a file forward.
-  *    The mode is a table-lifetime choice; physical basenames never
-  *    change under it, which is also what keeps DeletionVectors'
-  *    (file, row) coordinates stable across carries.
+  * CARRY — how unchanged files travel between versions: [[carry]]
+  * hard-links a file into the staged directory on a `file:` filesystem
+  * (a directory entry, no data IO) and copies it on any other Hadoop
+  * filesystem, so a version costs its rewritten bytes locally but
+  * O(table) on an object store. Either way every version directory
+  * holds all of its data files under their original basenames: a
+  * version is one directory, the catalog table points at it, and
+  * DeletionVectors' (file, row) coordinates stay valid across carries.
   *
   * Version retention: pruning keeps the current AND previous versions
   * (the previous version's files may still be under a concurrent
@@ -117,88 +102,12 @@ object SnapshotCommit {
   private[graft] val slowRegisters =
     new java.util.concurrent.atomic.AtomicLong()
 
-  /** root -> (version, version-dir mtime, resolved physical paths) for
-    * the LATEST version this JVM resolved — a pure cache: a published
-    * version's file set is immutable, so the entry can never go stale
-    * for its (version, directory) pair, and keeping only the latest per
-    * root bounds the map (pruned versions' entries are overwritten, a
-    * destroyed root's entry is dropped by [[destroy]]). Saves the
-    * manifest fast path a directory listing plus one open+read per
-    * carried `.graftref` on EVERY register — O(carried files) of store
-    * IO that would otherwise re-introduce exactly the per-register tax
-    * the fast path exists to remove. THE INCARNATION CHECK IS THE
-    * ROOT'S `_incarnation` NONCE plus the version directory's mtime: a
-    * table destroyed and rebuilt BY ANOTHER PROCESS can land on the
-    * same version NUMBER under the same path, which this JVM's
-    * [[destroy]] hook never sees. The rebuilt version directory usually
-    * has a new mtime, but object-store mtimes are coarse (whole
-    * seconds on some stores), so a fast rebuild can ALIAS the dead
-    * entry's (version, mtime) pair — the root-level `_incarnation`
-    * marker ([[commit]] writes it once per root creation; [[destroy]]
-    * deletes it with the root) is resolution-free: the rebuilt root
-    * carries a fresh UUID, the cached one mismatches, and the fresh
-    * listing (whose file set then differs from the stale temp view's)
-    * forces the slow path. One getFileStatus plus one ~36-byte marker
-    * read per fast-path call, no listing. */
-  private val resolvedSets =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, String, Set[String])]()
-
-  /** Name of the per-root incarnation nonce file (see [[resolvedSets]]). */
+  /** Name of the per-root incarnation marker: [[commit]] writes a fresh
+    * UUID once per root creation and [[destroy]] deletes it with the
+    * root, so its modification time is the table's creation instant —
+    * [[DeletionVectors.versionAtTimestamp]] refuses timestamps before
+    * it. */
   private[graft] val IncarnationMarker = "_incarnation"
-
-  /** Sentinel for "marker exists but could not be read": never equals a
-    * cached nonce (real nonces are UUIDs; "" means absent) and is never
-    * cached itself, so a persistently unreadable marker (permissions,
-    * store flake) forces the slow path on every call instead of
-    * silently degrading the guard to mtime-only — mirroring the
-    * mtime==-1 cache-bypass rule. */
-  private val UnreadableIncarnation = "\u0000unreadable"
-
-  /** The root's incarnation nonce; "" when ABSENT (pre-marker roots, or
-    * a root destroyed under us — both answer "no incarnation", which
-    * can never EQUAL a cached real nonce plus a live mtime from a
-    * different incarnation only if the pre-marker root is also
-    * mtime-aliased; pre-marker roots keep the old mtime-only guard);
-    * [[UnreadableIncarnation]] when the marker is present but a read
-    * FAILS — absence and failure must not conflate, or the failure case
-    * would cache "" and match it forever after. */
-  private def incarnationOf(spark: SparkSession, root: Path): String = {
-    val marker = new Path(root, IncarnationMarker)
-    try {
-      val fs = fsOf(spark, root)
-      val in = fs.open(marker)
-      try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-    } catch {
-      case _: java.io.FileNotFoundException => ""
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"[snapshot] incarnation marker $marker unreadable " +
-            s"(treating as never-matching, cache bypassed): $e")
-        UnreadableIncarnation
-    }
-  }
-
-  private def resolvedFileSet(spark: SparkSession, table: String, v: Long,
-      d: Path): Set[String] = {
-    val rootP = rootDir(spark, table)
-    val root = rootP.toString
-    // -1 (stat failed: directory pruned/destroyed under us) bypasses the
-    // cache entirely — stored entries always carry a real mtime.
-    val mtime = scala.util.Try(
-      fsOf(spark, d).getFileStatus(d).getModificationTime).getOrElse(-1L)
-    val inc = incarnationOf(spark, rootP)
-    resolvedSets.get(root) match {
-      // The sentinel is never stored, so an unreadable marker can never
-      // match a cached entry here — it always falls through to a fresh
-      // listing.
-      case (`v`, `mtime`, `inc`, s) if mtime >= 0 => s
-      case _ =>
-        val s = listData(spark, d).map(_._2.toUri.getPath).toSet
-        if (mtime >= 0 && inc != UnreadableIncarnation)
-          resolvedSets.put(root, (v, mtime, inc, s))
-        s
-    }
-  }
 
   /** Staging directories owned by live commits in this JVM — protected
     * from garbage collection regardless of age. */
@@ -208,15 +117,6 @@ object SnapshotCommit {
   /** Age (ms) below which an unreferenced staging directory is presumed
     * to belong to a live writer in ANOTHER process and is left alone. */
   private val StageGraceMs = 60L * 60 * 1000
-
-  /** Suffix of a manifest-mode carry reference: the file's content is
-    * the physical path of the data file it stands for. */
-  val RefSuffix = ".graftref"
-
-  /** Manifest carry mode — see the object scaladoc. Read per operation;
-    * must stay constant over a table's lifetime. */
-  private[graft] def manifestMode(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.snapshot.manifest").contains("true")
 
   def rootDir(spark: SparkSession, table: String): Path =
     new Path(spark.conf.get("spark.sql.warehouse.dir"),
@@ -266,52 +166,29 @@ object SnapshotCommit {
   def currentLocation(spark: SparkSession, table: String): Option[Path] =
     currentVersion(spark, table).flatMap(resolveDir(spark, table, _))
 
-  /** The (logical name, physical path) data files of a snapshot
-    * directory: plain data files map to themselves; `<name>.graftref`
-    * entries resolve to the physical path they record. Underscore- and
+  /** The data files of a snapshot directory. Underscore- and
     * dot-prefixed entries (sidecars, staging temps) are not data.
     */
-  def listData(spark: SparkSession, dir: Path): Seq[(String, Path)] = {
+  def listData(spark: SparkSession, dir: Path): Seq[Path] = {
     val fs = fsOf(spark, dir)
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.filter(_.isFile).flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("_") || n.startsWith(".")) None
-      else if (n.endsWith(RefSuffix)) {
-        val in = fs.open(st.getPath)
-        val target =
-          try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-        Some(n.dropRight(RefSuffix.length) -> new Path(target))
-      } else Some(n -> st.getPath)
-    }
+    else fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
   }
 
-  /** The current version's data files, refs resolved. */
+  /** The current version's data files as (basename, path) pairs — the
+    * shape perfbench's storage listing reads. */
   def dataFiles(spark: SparkSession, table: String): Seq[(String, Path)] =
-    currentLocation(spark, table)
-      .map(listData(spark, _)).getOrElse(Seq.empty)
+    currentFiles(spark, table).map(p => p.getName -> p)
 
-  /** The committed table as a DataFrame, mode-aware: the catalog table
-    * in link mode (its location IS the version directory), the
-    * manifest-resolved physical file set in manifest mode (where the
-    * version's files span directories and a path-scoped catalog table
-    * cannot see them). Writers that need `_metadata`/`input_file_name`
-    * provenance read through this instead of `spark.table`.
-    */
+  private def currentFiles(spark: SparkSession, table: String): Seq[Path] =
+    currentLocation(spark, table).map(listData(spark, _)).getOrElse(Nil)
+
+  /** The committed table: `spark.table(table)`, whose catalog location
+    * is the current version directory. Kept for perfbench's harness;
+    * the engine calls `spark.table` directly. */
   def readData(spark: SparkSession,
-      table: String): org.apache.spark.sql.DataFrame =
-    if (manifestMode(spark) && currentLocation(spark, table).isDefined) {
-      val paths = dataFiles(spark, table).map(_._2.toString)
-      require(paths.nonEmpty, s"$table resolves to no data files")
-      // An evolved table reads under its ledger schema — files written
-      // before a widening lack the new columns and null-fill (the link
-      // mode equivalent is the catalog re-declare in pointAt).
-      schemaVersions(spark, table).lastOption match {
-        case Some((_, widened)) =>
-          spark.read.schema(widened).parquet(paths: _*)
-        case None => spark.read.parquet(paths: _*)
-      }
-    } else spark.table(table) // incl. not-yet-adopted tables in manifest mode
+      table: String): org.apache.spark.sql.DataFrame = spark.table(table)
 
   /** The current version's data files read under an EXPLICIT schema —
     * the historical-schema read path (time travel on an evolved
@@ -319,12 +196,11 @@ object SnapshotCommit {
     * ledger entry serves — columns added since null-fill in old files,
     * columns dropped since still read from the files that carry their
     * bytes (drop is logical-only; the physical data stays until a
-    * rewrite). Works in both carry modes (the file list resolves
-    * manifest refs). */
-  private[graft] def readDataAs(spark: SparkSession, table: String,
+    * rewrite). */
+  private[graft] def readCurrentAs(spark: SparkSession, table: String,
       schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.DataFrame = {
-    val paths = dataFiles(spark, table).map(_._2.toString)
+    val paths = currentFiles(spark, table).map(_.toString)
     if (paths.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -391,21 +267,21 @@ object SnapshotCommit {
     val root = rootDir(spark, table)
     val fs = fsOf(spark, root)
     fs.mkdirs(root)
-    // Stamp the root's incarnation nonce once per root lifetime (see
-    // [[resolvedSets]]): no-clobber create, so concurrent first commits
-    // race benignly — the loser reads the winner's nonce ever after.
-    // Prune never touches root-level non-version entries; destroy
-    // removes the whole root, so a rebuild mints a fresh nonce.
+    // Stamp the root's incarnation marker once per root lifetime (see
+    // [[IncarnationMarker]]): no-clobber create, so concurrent first
+    // commits race benignly — the winner's marker stands. Prune never
+    // touches root-level non-version entries; destroy removes the whole
+    // root, so a rebuild mints a fresh marker.
     val marker = new Path(root, IncarnationMarker)
     if (!fs.exists(marker)) scala.util.Try {
       val out = fs.create(marker, false)
       try out.write(java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
       finally out.close()
     }.failed.foreach { e =>
-      // A lost no-clobber race is benign (the winner's nonce stands); a
+      // A lost no-clobber race is benign (the winner's marker stands); a
       // PERSISTENT create failure (quota, permissions) means this root
-      // never gets a nonce and the fast-path guard quietly weakens to
-      // mtime-only — log it so that state is diagnosable.
+      // never gets a marker and TIMESTAMP AS OF refuses it — log it so
+      // that state is diagnosable.
       System.err.println(
         s"[snapshot] incarnation marker create for $table skipped: $e")
     }
@@ -523,17 +399,12 @@ object SnapshotCommit {
 
   /** Record the staged version's audit sidecar: ONE `listStatus` of the
     * stage directory (never a per-file `getFileStatus`) yields the data
-    * file count and, in link mode, their exact total bytes — carried
-    * files are physical there. A manifest-mode stage holds `.graftref`
-    * pointers whose physical sizes live elsewhere; rather than pay a
-    * status RPC per carried file on EVERY commit, bytes records -1 and
-    * DESCRIBE HISTORY falls back to per-file resolution for exactly
-    * those versions (an object-store deployment would extend the ref
-    * content with the size, Delta's add-file economics). Rows come free
-    * from the `_stats` skipping sidecar when the closure wrote one and
-    * it covers every data file; -1 otherwise. Best-effort: a failure
-    * here must never fail the commit — history just degrades to the
-    * legacy listing for this version.
+    * file count and their exact total bytes — carried files are
+    * physical in the version directory. Rows come free from the
+    * `_stats` skipping sidecar when the closure wrote one and it covers
+    * every data file; -1 otherwise. Best-effort: a failure here must
+    * never fail the commit — history just degrades to the legacy
+    * listing for this version.
     */
   private def writeVersionMeta(spark: SparkSession, stage: Path,
       operation: String): Unit = scala.util.Try {
@@ -542,16 +413,11 @@ object SnapshotCommit {
       val n = s.getPath.getName
       n.startsWith("_") || n.startsWith(".")
     }
-    val anyRef = entries.exists(_.getPath.getName.endsWith(RefSuffix))
-    val bytes = if (anyRef) -1L else entries.map(_.getLen).sum
+    val bytes = entries.map(_.getLen).sum
     val rows: Long = StatsSkipping.loadStats(spark, stage) match {
       case Some(stats) =>
-        val names = entries.map { s =>
-          val n = s.getPath.getName
-          if (n.endsWith(RefSuffix)) n.dropRight(RefSuffix.length) else n
-        }
-        val perFile = names.map(n =>
-          stats.get(n).flatMap(_.get(StatsSkipping.RowsCol)))
+        val perFile = entries.map(s =>
+          stats.get(s.getPath.getName).flatMap(_.get(StatsSkipping.RowsCol)))
         if (perFile.exists(r => r.isEmpty || r.get.tpe != "rows")) -1L
         else scala.util.Try(perFile.map(_.get.min.toLong).sum).getOrElse(-1L)
       case None => -1L
@@ -648,7 +514,7 @@ object SnapshotCommit {
   def register(spark: SparkSession, table: String): Option[Long] =
     currentVersion(spark, table).map { v =>
       // Fast path: this session is demonstrably aligned with v — the
-      // catalog (or temp view) points at v's directory AND nothing the
+      // catalog points at v's directory AND nothing the
       // session has cached contradicts it. The check inspects the
       // ACTUAL staleness hazard the slow path's REFRESH exists to
       // clear, so it is safe for any session — including a
@@ -662,35 +528,20 @@ object SnapshotCommit {
         System.err.println(s"[register-debug] $table v=$v fast=$fast")
       if (fast) return Some(v)
       slowRegisters.incrementAndGet()
-      val d = finalizeDir(spark, table, v)
-      if (manifestMode(spark)) {
-        // A manifest version's files span directories, which a
-        // path-scoped catalog table cannot express — the table name
-        // maps to a (re-created, hence always-fresh) temp view over the
-        // resolved physical file set instead; spark.table(name) works
-        // unchanged downstream.
-        val paths = listData(spark, d).map(_._2.toString)
-        (if (paths.nonEmpty) schemaVersions(spark, table).lastOption match {
-          // An evolved table's view reads under the ledger schema —
-          // footers of pre-widening files would hide the new columns.
-          case Some((_, widened)) =>
-            spark.read.schema(widened).parquet(paths: _*)
-          case None => spark.read.parquet(paths: _*)
-        } else spark.emptyDataFrame).createOrReplaceTempView(table)
-      } else pointAt(spark, table, d)
+      pointAt(spark, table, finalizeDir(spark, table, v))
       v
     }
 
   /** Is THIS session fully aligned with version `v` of `table` — i.e.
     * would the slow path's ALTER + `REFRESH TABLE` be a no-op for it?
-    * Three checks, all in-memory/metadata-only:
+    * Two checks, both in-memory/metadata-only:
     *
-    *  1. link mode: the catalog entry exists and its location is v's
-    *     directory (metadata lookup wrapped in Try — a same-name temp
-    *     view shadowing the table makes `tableExists` pass but the
-    *     metadata lookup throw; that is a broken registration, answer
-    *     false and let the slow path repair it);
-    *  2. link mode: the session's RELATION CACHE either holds no entry
+    *  1. the catalog entry exists and its location is v's directory
+    *     (metadata lookup wrapped in Try — a same-name temp view
+    *     shadowing the table makes `tableExists` pass but the metadata
+    *     lookup throw; that is a broken registration, answer false and
+    *     let the slow path repair it);
+    *  2. the session's RELATION CACHE either holds no entry
     *     for the table (nothing stale — the next resolution builds
     *     fresh from the catalog entry just verified) or holds one
     *     rooted at exactly v's directory. This is the direct form of
@@ -701,29 +552,16 @@ object SnapshotCommit {
     *     it down the slow path. (Like the refresh it replaces, the
     *     probe does not re-validate `df.persist`ed query results over
     *     the table — CacheManager entries are the caller's to manage.)
-    *  3. manifest mode: the session's temp view exists and its plan's
-    *     root paths are exactly v's resolved file set (version file
-    *     sets are immutable, so set equality IS version equality; the
-    *     r8 memo checked mere view existence, which let one session
-    *     serve its stale view after another session published v+1).
     */
   private[graft] def registrationFresh(spark: SparkSession, table: String,
       v: Long): Boolean =
-    if (manifestMode(spark))
-      spark.sessionState.catalog.getTempView(table).exists { view =>
-        resolveDir(spark, table, v).exists { d =>
-          rootPaths(view).toSet == resolvedFileSet(spark, table, v, d)
-        }
-      }
-    else
-      // A same-name temp view (left by a manifest-mode registration
-      // before the conf flipped back) SHADOWS the catalog table for
-      // every spark.table read — never fresh; the slow path's pointAt
-      // drops it. resolveDir accepts either name the version lives
-      // under (finalized v<N> or its pre-finalization staging name).
-      spark.sessionState.catalog.getTempView(table).isEmpty &&
-        resolveDir(spark, table, v)
-          .exists(d => catalogAligned(spark, table, d))
+    // A same-name temp view SHADOWS the catalog table for every
+    // spark.table read — never fresh; the slow path's pointAt drops it.
+    // resolveDir accepts either name the version lives under (finalized
+    // v<N> or its pre-finalization staging name).
+    spark.sessionState.catalog.getTempView(table).isEmpty &&
+      resolveDir(spark, table, v)
+        .exists(d => catalogAligned(spark, table, d))
 
   /** The file-source root paths a cached relation plan resolves to —
     * the thing a missed REFRESH would leave stale. */
@@ -861,10 +699,9 @@ object SnapshotCommit {
     var attempts = 3
     while (attempts > 0) {
       attempts -= 1
-      // A stale same-name TEMP VIEW (left by a manifest-mode registration
-      // before the conf was flipped back) would shadow the catalog table
-      // for every spark.table read and make the metadata lookup below
-      // throw — remove it; in link mode this name belongs to the catalog.
+      // A same-name TEMP VIEW would shadow the catalog table for every
+      // spark.table read and make the metadata lookup below throw —
+      // remove it; this name belongs to the snapshot table.
       if (spark.sessionState.catalog.getTempView(table).isDefined)
         spark.catalog.dropTempView(table)
       if (!spark.catalog.tableExists(table))
@@ -1036,24 +873,6 @@ object SnapshotCommit {
     // finalization can leave a retained version under its staging name).
     val referenced: Set[String] = retainedVersions
       .flatMap(v => resolveDir(spark, table, v).map(_.getName)).toSet
-    // Manifest mode prunes by REFERENCE COUNT: a stale version's
-    // directory may physically hold files that retained manifests still
-    // point at — only unreferenced files are deleted, and the directory
-    // survives (shrunken) while anything in it is still live.
-    val referencedPhys: Set[String] =
-      if (!manifestMode(spark)) Set.empty
-      else retainedVersions
-        .flatMap(v => resolveDir(spark, table, v).toSeq
-          .flatMap(d => listData(spark, d).map(_._2.toUri.getPath)))
-        .toSet
-    def gcDir(dir: Path): Unit = {
-      fs.listStatus(dir).foreach { s =>
-        if (s.isDirectory) gcDir(s.getPath)
-        else if (!referencedPhys.contains(s.getPath.toUri.getPath))
-          fs.delete(s.getPath, false)
-      }
-      if (fs.listStatus(dir).isEmpty) fs.delete(dir, false)
-    }
     val now = System.currentTimeMillis()
     fs.listStatus(root).foreach { st =>
       val n = st.getPath.getName
@@ -1067,10 +886,7 @@ object SnapshotCommit {
           // A setProperties temp abandoned by a crash pre-rename.
           now - st.getModificationTime > StageGraceMs
         else false
-      if (stale) {
-        if (manifestMode(spark) && st.isDirectory) gcDir(st.getPath)
-        else fs.delete(st.getPath, true)
-      }
+      if (stale) fs.delete(st.getPath, true)
     }
     if (fs.exists(c)) fs.listStatus(c).foreach { st =>
       val n = st.getPath.getName
@@ -1081,17 +897,18 @@ object SnapshotCommit {
     }
   }
 
-  /** Table properties survive the catalog: a manifest-mode table
-    * registers as a temp view, which cannot carry TBLPROPERTIES, so
-    * `delta.targetFileSize` declared by the pipeline was silently lost
-    * and OPTIMIZE fell back to its 128 MiB default. Properties
+  /** Table properties survive the catalog: the session catalog is
+    * in-memory, so a new process re-registers the table from its
+    * location ([[pointAt]]'s CREATE carries no user TBLPROPERTIES) and
+    * a `delta.targetFileSize` declared by the pipeline would be lost —
+    * OPTIMIZE would fall back to its 128 MiB default. Properties
     * therefore ALSO live in a `_properties` sidecar at the snapshot
     * ROOT (not inside a version directory — they describe the table's
     * lifetime, not one snapshot; prune never touches root-level
-    * non-version entries, destroy removes the whole root). Stored via
-    * `java.util.Properties` for key/value escaping. Merge semantics
-    * match ALTER TABLE SET TBLPROPERTIES: new keys overwrite, absent
-    * keys persist.
+    * non-version entries, destroy removes the whole root, clone copies
+    * it). Stored via `java.util.Properties` for key/value escaping.
+    * Merge semantics match ALTER TABLE SET TBLPROPERTIES: new keys
+    * overwrite, absent keys persist.
     */
   private def propsPath(spark: SparkSession, table: String) =
     new Path(rootDir(spark, table), "_properties")
@@ -1211,7 +1028,8 @@ object SnapshotCommit {
   /** Drop the table and delete every version — the clean-slate used when
     * a pipeline (re)builds from scratch. */
   def destroy(spark: SparkSession, table: String): Unit = {
-    spark.catalog.dropTempView(table) // manifest-mode registration
+    // A same-name temp view goes too: it would shadow the rebuilt table.
+    spark.catalog.dropTempView(table)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     // The DV sidecar registration dies with the root (r17): a rebuild
     // recreates the SAME version-dir paths, and a surviving `__dv`
@@ -1221,28 +1039,22 @@ object SnapshotCommit {
     // streaming sink started stamping sidecars on every table).
     spark.sql(s"DROP TABLE IF EXISTS ${table}__dv")
     val root = rootDir(spark, table)
-    resolvedSets.remove(root.toString) // rebuilt tables restart at v1
     StatsSkipping.invalidate(root) // rebuilt v<N> paths re-probe sidecars
     val fs = fsOf(spark, root)
     if (fs.exists(root)) fs.delete(root, true)
   }
 
-  /** Zero-copy SHALLOW CLONE (Delta's `CREATE TABLE ... CLONE src`):
-    * publish the source's CURRENT data files as the next version of
-    * `dst` without copying a byte — every file carries ([[carry]]: hard
-    * link in link mode, a `.graftref` manifest pointer in manifest
-    * mode). The deletion-vector sidecar rides INSIDE the version
-    * directory (`_dv/` — see DeletionVectors), so its files carry too:
-    * DV coordinates key on data-file NAME, which the carry preserves,
-    * and the clone's visible rows therefore equal the source's at clone
-    * time; afterwards the two tables diverge freely (deletes or commits
-    * on either side never touch the other — snapshot isolation at the
-    * table level). Independence caveat, same as
-    * Delta's: in link mode the clone holds its own directory entries
-    * (inodes survive a source VACUUM); in manifest mode the clone's
-    * refs point at source-owned physical files, so it is durable only
-    * until the source vacuums them — deep-copy (a plain CTAS) is the
-    * escape hatch there.
+  /** SHALLOW CLONE (Delta's `CREATE TABLE ... CLONE src`): publish the
+    * source's CURRENT data files as the next version of `dst` — every
+    * file carries ([[carry]]: a hard link on a local filesystem, zero
+    * bytes copied; a copy elsewhere). The deletion-vector sidecar rides
+    * INSIDE the version directory (`_dv/` — see DeletionVectors), so
+    * its files carry too: DV coordinates key on data-file NAME, which
+    * the carry preserves, and the clone's visible rows therefore equal
+    * the source's at clone time; afterwards the two tables diverge
+    * freely (deletes or commits on either side never touch the other —
+    * snapshot isolation at the table level). The clone holds its own
+    * directory entries, so its files survive a source VACUUM.
     */
   def clone(spark: SparkSession, src: String, dst: String): Path = {
     // Bounded rebase-retry: the carry below reads version v's files
@@ -1254,14 +1066,7 @@ object SnapshotCommit {
     // not escape); a failed carry aborts the commit (its staged dir is
     // discarded) and the retry re-resolves the NOW-current version, so
     // the published clone is always a version intact throughout its
-    // carry. In MANIFEST mode the carry is a physical COPY, not a ref:
-    // prune reference-counts only the owning table's manifests, so a
-    // cross-table ref would die on the source's next two ROUTINE
-    // commits — far weaker than Delta's explicit-VACUUM caveat. The
-    // copy keeps manifest-mode clones correct (and makes a vanished
-    // source fail loudly into the rebase) at the cost of bytes; a
-    // production object-store deployment would add cross-table
-    // reference counting to get zero-copy back.
+    // carry.
     // Table-lifetime properties live in the ROOT _properties sidecar
     // (maintenance like Optimize.compact consults it) — a clone without
     // them would silently diverge in behavior. For a FRESH dst, copy
@@ -1331,12 +1136,6 @@ object SnapshotCommit {
           else fs.listStatus(dv).toSeq.filter(_.isFile).map(_.getPath)
             .filterNot(_.getName.startsWith("."))
         failpoint("clone") // resolved, not yet carried — the race window
-        def place(p: Path, to: Path): Unit =
-          if (manifestMode(spark))
-            org.apache.hadoop.fs.FileUtil.copy(
-              fsOf(spark, p), p, fsOf(spark, to), to, false,
-              spark.sparkContext.hadoopConfiguration)
-          else carry(spark, p, to)
         // commit()'s won-claim tail already registers dst — no extra
         // register here (inside the retry a transient post-publish
         // failure would re-carry and publish a duplicate version).
@@ -1346,21 +1145,17 @@ object SnapshotCommit {
           // publishes an empty version; without this, zero carries
           // would claim a pointer to a never-created directory.
           fsOf(spark, stageP).mkdirs(stageP)
-          files.foreach { case (name, p) =>
-            place(p, new Path(stageP, name))
-          }
+          files.foreach(p => carry(spark, p, new Path(stageP, p.getName)))
           dvFiles.foreach { p =>
-            place(p, new Path(new Path(stageP, "_dv"), p.getName))
+            carry(spark, p, new Path(new Path(stageP, "_dv"), p.getName))
           }
           // The skipping sidecar travels with its files (same
           // basenames, unchanged bytes): a clone of a stats-bearing
           // table keeps pruning without a rebuild.
           StatsSkipping.refreshStats(spark, srcDir, stageP)
           // The carried listing must still be the live one: a prune
-          // landing mid-carry in manifest mode copies SOME files then
-          // vanishes the rest — fail the attempt rather than publish a
-          // partial clone. (Link mode fails naturally at the dead
-          // hard-link source.)
+          // landing mid-carry leaves SOME files carried and the rest
+          // gone — fail the attempt rather than publish a partial clone.
           if (!fs.exists(srcDir))
             sys.error(s"clone source $src v$v pruned mid-carry")
         }
@@ -1382,17 +1177,16 @@ object SnapshotCommit {
   }
 
   /** Carry every data file of version directory `from` into staged
-    * directory `to`, names preserved (hard links in link mode, metadata
-    * refs in manifest mode — [[carry]] decides); `except` filters by
-    * logical basename. ONE copy of the listData-then-carry loop —
+    * directory `to`, names preserved ([[carry]]); `except` filters by
+    * basename. ONE copy of the listData-then-carry loop —
     * DeletionVectors' lifecycle commits and SnapshotSink's per-batch
     * appends both route here, so carry-semantics fixes cannot silently
     * miss a caller.
     */
   private[graft] def carryData(spark: SparkSession, from: Path, to: Path,
       except: Set[String] = Set.empty): Unit =
-    listData(spark, from).foreach { case (n, phys) =>
-      if (!except.contains(n)) carry(spark, phys, new Path(to, n))
+    listData(spark, from).foreach { p =>
+      if (!except.contains(p.getName)) carry(spark, p, new Path(to, p.getName))
     }
 
   /** Carry the stream-progress marker ([[graft.streaming.SnapshotSink]]'s
@@ -1416,31 +1210,13 @@ object SnapshotCommit {
   }
 
   /** Carry an unchanged file into a staged snapshot WITHOUT disturbing
-    * the live version. Link mode: hard link on a local filesystem (a
-    * directory entry, no IO), copy elsewhere; never a rename — the
-    * source must stay readable until the new version is published.
-    * Manifest mode: write a `<dst-name>.graftref` whose content is the
-    * PHYSICAL source path — pure metadata on any store; the source file
-    * never moves, and if `src` is itself a ref its target is recorded
-    * instead, so chains stay one hop deep.
+    * the live version: hard link on a `file:` filesystem (a directory
+    * entry, no IO), copy on any other; never a rename — the source must
+    * stay readable until the new version is published.
     */
   def carry(spark: SparkSession, src: Path, dst: Path): Unit = {
     val fs = fsOf(spark, dst)
     if (dst.getParent != null) fs.mkdirs(dst.getParent)
-    if (manifestMode(spark)) {
-      val phys =
-        if (!src.getName.endsWith(RefSuffix)) src
-        else {
-          val in = fsOf(spark, src).open(src)
-          val t =
-            try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-          new Path(t)
-        }
-      val ref = new Path(dst.getParent, dst.getName + RefSuffix)
-      val out = fs.create(ref, true)
-      try out.write(phys.toString.getBytes("UTF-8")) finally out.close()
-      return
-    }
     val linked = fs.getScheme == "file" &&
       (try {
         java.nio.file.Files.createLink(

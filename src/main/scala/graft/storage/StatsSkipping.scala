@@ -39,9 +39,8 @@ import org.apache.spark.sql.functions._
   * pruning covers the reference's clustering keys (ids, DATE, money
   * DECIMAL), not just a single Long column.
   *
-  * Pruning is CONSERVATIVE: a file missing from the sidecar (e.g. a
-  * carried ref in manifest mode, whose stats the carry did not
-  * recompute), a column without a recorded range, or a predicate shape
+  * Pruning is CONSERVATIVE: a file missing from the sidecar, a column
+  * without a recorded range, or a predicate shape
   * the extractor does not understand all mean "read the file". Nulls:
   * stats record non-null min/max (Spark's min/max ignore nulls), so a
   * file of only nulls records no row and is conservatively read.
@@ -217,8 +216,8 @@ object StatsSkipping {
     * whole maintenance lifetime instead of degrading to none after the
     * first delete. Per staged entry:
     *
-    *  - same BASENAME as a file with recorded stats (a carried link,
-    *    manifest ref, or byte-identical copy — carries never rename):
+    *  - same BASENAME as a file with recorded stats (a carried link or
+    *    byte-identical copy — carries never rename):
     *    its rows are reused verbatim. For DV-style carries the data
     *    bytes are unchanged, so the ranges stay exact; row-level
     *    deletes only ever make them conservative-wide, never wrong
@@ -226,7 +225,7 @@ object StatsSkipping {
     *  - a NEW parquet file (compaction/vacuum rewrite output): stats
     *    recomputed from its footer for the old sidecar's column set —
     *    metadata-only, proportional to the REWRITTEN files;
-    *  - a ref to a file with no recorded stats: no line (conservative).
+    *  - a carried file with no recorded stats: no line (conservative).
     *
     * No-op (one existence probe) when `from` carries no sidecar.
     */
@@ -236,27 +235,15 @@ object StatsSkipping {
     if (old.isEmpty) return
     val cols = old.values.flatMap(_.keys).toSeq.distinct.sorted
     val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = stage.getFileSystem(hconf)
-    def linesOf(base: String): Seq[String] =
-      old.getOrElse(base, Map.empty).toSeq.map { case (c, r) =>
+    val (kept, rewritten) = SnapshotCommit.listData(spark, stage)
+      .partition(p => old.contains(p.getName))
+    val carried = kept.flatMap { p =>
+      val base = p.getName
+      old(base).toSeq.map { case (c, r) =>
         s"$base\t$c\t${r.tpe}\t${r.min}\t${r.max}"
       }
-    val sts = fs.listStatus(stage).toSeq.filter(_.isFile)
-    val carried = sts.flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("_") || n.startsWith(".")) Nil
-      else if (n.endsWith(SnapshotCommit.RefSuffix))
-        linesOf(n.dropRight(SnapshotCommit.RefSuffix.length))
-      else if (old.contains(n)) linesOf(n)
-      else Nil
     }
-    val fresh = sts.collect {
-      case st if !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".") &&
-        !st.getPath.getName.endsWith(SnapshotCommit.RefSuffix) &&
-        !old.contains(st.getPath.getName) &&
-        st.getPath.getName.endsWith(".parquet") => st.getPath
-    }
+    val fresh = rewritten.filter(_.getName.endsWith(".parquet"))
     val lines = carried ++ footerLinesAll(hconf, fresh, cols)
     writeSidecar(hconf, stage, lines)
   }
@@ -435,8 +422,7 @@ object StatsSkipping {
     * are overwritten, caches invalidated). Returns the number of leaf
     * directories indexed. Calling this also REGISTERS `dir` as a
     * probe-allowed root for the optimizer rules, so indexed tables
-    * outside the session warehouse prune without setting
-    * `spark.graft.stats.probeForeign` (see [[probeAllowed]]).
+    * outside the session warehouse prune too (see [[probeAllowed]]).
     */
   def indexLeafDirs(spark: SparkSession, dir: Path,
       statsCols: Seq[String]): Int = {
@@ -444,8 +430,8 @@ object StatsSkipping {
     // rules probe under it even when it lives OUTSIDE the session
     // warehouse — the common case for an explicitly-indexed partitioned
     // table (ADVICE r15: without this, sidecars built here were silently
-    // ignored by StatsSkippingRule/MetadataAggRule unless the global
-    // probeForeign conf was set). Bounded: one entry per explicit call.
+    // ignored by StatsSkippingRule/MetadataAggRule). Bounded: one entry
+    // per explicit call.
     // FULLY-QUALIFIED (scheme + authority + path): a bare path would
     // let an s3a://bucketA root authorize probes under the same path on
     // every other filesystem/bucket (review r16).
@@ -501,30 +487,28 @@ object StatsSkipping {
     * for everything else: planning an ungrouped aggregate or a filter
     * over a foreign parquet table (a raw source dir, someone else's
     * lake) must not cost store round-trips, even negative-cached ones
-    * (ADVICE r14). `spark.graft.stats.probeForeign = true` restores
-    * universal probing for hand-placed sidecars. Direct API paths
+    * (ADVICE r14); a hand-placed sidecar elsewhere is found by indexing
+    * its root through [[indexLeafDirs]]. Direct API paths
     * (survivingFiles/readRange) are unaffected — they only ever target
     * snapshot directories. A RELATIVE warehouse conf value is resolved
     * against the process working directory (the session does the same)
     * before comparing — a raw relative string never prefix-matches the
     * absolute data paths and would silently disable skipping everywhere. */
-  private[storage] def probeAllowed(spark: SparkSession, dir: Path): Boolean =
-    spark.conf.getOption("spark.graft.stats.probeForeign")
-      .contains("true") || {
-      val whRaw = new Path(spark.conf.get("spark.sql.warehouse.dir"))
-        .toUri.getPath
-      val wh =
-        if (whRaw == null || whRaw.startsWith("/")) whRaw
-        else new java.io.File(whRaw).getAbsolutePath
-      val d = dir.toUri.getPath
-      (d != null && wh != null && underRoot(d, wh)) || {
-        import scala.jdk.CollectionConverters._
-        indexedRoots.size() > 0 && {
-          val dq = qualified(spark, dir)
-          indexedRoots.asScala.exists(r => underRoot(dq, r))
-        }
+  private[storage] def probeAllowed(spark: SparkSession, dir: Path): Boolean = {
+    val whRaw = new Path(spark.conf.get("spark.sql.warehouse.dir"))
+      .toUri.getPath
+    val wh =
+      if (whRaw == null || whRaw.startsWith("/")) whRaw
+      else new java.io.File(whRaw).getAbsolutePath
+    val d = dir.toUri.getPath
+    (d != null && wh != null && underRoot(d, wh)) || {
+      import scala.jdk.CollectionConverters._
+      indexedRoots.size() > 0 && {
+        val dq = qualified(spark, dir)
+        indexedRoots.asScala.exists(r => underRoot(dq, r))
       }
     }
+  }
 
   private[graft] def loadStats(spark: SparkSession,
       dir: Path): Option[Map[String, Map[String, ColRange]]] = {
@@ -575,14 +559,13 @@ object StatsSkipping {
       .resolveDir(spark, table, v)
       .getOrElse(sys.error(s"$table v$v has no directory"))
     val stats = loadStats(spark, dir).getOrElse(Map.empty)
-    SnapshotCommit.listData(spark, dir).collect {
+    SnapshotCommit.listData(spark, dir).filter { path =>
       // Conservative on BOTH gaps: no stats row for the file/column, or
       // a non-long stat type under this Long-typed API -> read it.
       // v1 sidecars (no column names) answer through the V1Col upgrade.
-      case (name, path) if stats.get(name)
+      stats.get(path.getName)
         .flatMap(m => m.get(statsCol).orElse(m.get(V1Col)))
-        .forall(r => r.tpe != "long" ||
-          intersects(r, Some(lo), Some(hi))) => path
+        .forall(r => r.tpe != "long" || intersects(r, Some(lo), Some(hi)))
     }
   }
 
@@ -597,7 +580,7 @@ object StatsSkipping {
     // An empty survivor set is a legal answer (no file intersects);
     // Spark still needs a schema, so serve the table's empty limit.
     val base =
-      if (files.isEmpty) SnapshotCommit.readData(spark, table).limit(0)
+      if (files.isEmpty) spark.table(table).limit(0)
       else DeletionVectors.mask(spark, table,
         spark.read.parquet(files.map(_.toString): _*))
     base.filter(col(statsCol) >= lo && col(statsCol) <= hi)

@@ -188,7 +188,7 @@ class GraftTableSource(sqlContext: SQLContext, metadataPath: String,
   override val schema: StructType = {
     SnapshotCommit.register(spark, table).getOrElse(sys.error(
       s"graft-table stream over $table: table has no published version"))
-    val base = SnapshotCommit.readData(spark, table).schema
+    val base = spark.table(table).schema
     if (!changeFeed) base
     else StructType(base.fields.toSeq :+
       org.apache.spark.sql.types.StructField("change_type",
@@ -313,7 +313,7 @@ class GraftTableSource(sqlContext: SQLContext, metadataPath: String,
             "stream to pick up the new schema (Delta's semantics)")
     }
     f.mkdirs(manifestDir)
-    val names = SnapshotCommit.listData(spark, dir).map(_._1).toSet
+    val names = SnapshotCommit.listData(spark, dir).map(_.getName).toSet
     val fp = dvFingerprint(dir)
     val parent = manifestVersions().filter(_ < v).maxOption
       .filter(q => chainDepth(q) < GraftTableSource.MaxChain)
@@ -598,11 +598,11 @@ class GraftTableSource(sqlContext: SQLContext, metadataPath: String,
       return org.apache.spark.sql.graftbridge.Bridge
         .emptyStreaming(spark, schema)
     // Resolve basenames against the CURRENT listing — carried names are
-    // stable and their bytes immutable, so the mapping is version-free;
-    // a name absent from the live version was rewritten/vacuumed after
+    // stable and their bytes immutable, so any version serves them; a
+    // name absent from the live version was rewritten/vacuumed after
     // the offset, which is a change commit by definition.
-    val phys = SnapshotCommit.dataFiles(spark, table).toMap
-    val missing = newNames.filterNot(phys.contains)
+    val live = SnapshotCommit.dataFiles(spark, table).toMap
+    val missing = newNames.filterNot(live.contains)
     require(skipChangeCommits || missing.isEmpty,
       s"graft-table stream over $table: file(s) ${missing.take(3)} of " +
         s"v${e.target} were rewritten before the stream read them — " +
@@ -616,9 +616,10 @@ class GraftTableSource(sqlContext: SQLContext, metadataPath: String,
     lazy val historical: Map[String, Path] =
       chain.flatMap(v => SnapshotCommit.resolveDir(spark, table, v))
         .distinct
-        .flatMap(d => SnapshotCommit.listData(spark, d)).toMap
+        .flatMap(d => SnapshotCommit.listData(spark, d))
+        .map(p => p.getName -> p).toMap
     val paths = newNames.flatMap(n =>
-      phys.get(n).orElse(if (missing.isEmpty) None else historical.get(n)))
+      live.get(n).orElse(if (missing.isEmpty) None else historical.get(n)))
       .map(_.toString)
     if (paths.isEmpty)
       return org.apache.spark.sql.graftbridge.Bridge
@@ -710,7 +711,7 @@ class GraftTableSourceProvider extends StreamSourceProvider
     val spark = sqlContext.sparkSession
     SnapshotCommit.register(spark, table).getOrElse(sys.error(
       s"graft-table stream over $table: table has no published version"))
-    val base = SnapshotCommit.readData(spark, table).schema
+    val base = spark.table(table).schema
     val inferred =
       if (!changeFeedOf(parameters)) base
       else StructType(base.fields.toSeq :+

@@ -7,7 +7,7 @@ import graft.storage.SnapshotCommit
 
 /** TRANSACTIONAL streaming sink: each micro-batch commits as ONE atomic
   * [[SnapshotCommit]] version — new files written, the previous
-  * version's files carried (hard link / manifest ref, zero data IO),
+  * version's files carried (hard links locally, zero data IO),
   * and the batch id recorded in a `_batchid` sidecar INSIDE the version
   * directory, so the data and its progress marker publish together
   * under the single pointer rename.
@@ -24,8 +24,8 @@ import graft.storage.SnapshotCommit
   * contract (idempotent writes keyed on (checkpoint, batchId)).
   *
   * Scale: per-batch cost = the batch's own files + O(existing files)
-  * directory entries (links) or metadata refs (manifest mode — the
-  * object-store shape); the data bytes of prior batches never move.
+  * directory entries (links; copies on a non-local filesystem); the
+  * data bytes of prior batches never move on a local filesystem.
   * Long streams should interleave [[graft.storage.Optimize.compact]]
   * (which preserves DV masks and stats sidecars) to keep the file count
   * bounded — the same OPTIMIZE cadence Delta streaming tables need.
@@ -107,7 +107,7 @@ object SnapshotSink {
           batch.write.mode("append").parquet(stage)
         } {
           prev.foreach { p =>
-            carried = SnapshotCommit.listData(spark, p).map(_._1).toSet
+            carried = SnapshotCommit.listData(spark, p).map(_.getName).toSet
             SnapshotCommit.carryData(spark, p, stageP)
           }
         }
@@ -115,13 +115,14 @@ object SnapshotSink {
         // change-axis stamp below names them so table_changes (and the
         // streaming change feed) serve this micro-batch as inserts,
         // exactly what Delta's CDF does for streaming writes.
-        val appended = SnapshotCommit.listData(spark, stageP).map(_._1)
+        val appended = SnapshotCommit.listData(spark, stageP).map(_.getName)
           .filterNot(carried)
         prev.foreach(p =>
           graft.storage.StatsSkipping.refreshStats(spark, p, stageP))
         // An EMPTY FIRST batch can leave a version with zero data
-        // files, which is unreadable in manifest mode (readData
-        // requires paths) — guarantee one schema-bearing file. AFTER
+        // files, which cannot register: the catalog table's schema is
+        // inferred from the version's parquet files, and an empty
+        // directory has none — guarantee one schema-bearing file. AFTER
         // the carry, so a later empty batch whose carried files
         // already make the version readable adds nothing (an
         // every-empty-batch filler would compound through carryData

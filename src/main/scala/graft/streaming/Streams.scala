@@ -716,7 +716,7 @@ object Streams {
       }
       .start()
     q.awaitTermination()
-    graft.storage.SnapshotCommit.readData(ss, tbl)
+    ss.table(tbl)
   }
 
   /** The same watermark-clocked session close-out as [[sessionTimeout]],

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * test.
   *
   * Protocol: args = warehouse dir, table, writer id, commit count,
-  * barrier dir, lock class. The process builds its own local session
+  * barrier dir, lock class, mode. The process builds its own local session
   * against the SHARED warehouse, drops `ready-<id>` into the barrier
   * dir, spins until `go` appears (so both writers enter their commit
   * loops together instead of serializing behind JVM startup), then
@@ -31,7 +31,7 @@ object CrossProcessCommitter {
     // the DV closure's own derive logic (version stamps, sidecar
     // union, data-file links) under real cross-process interleaving.
     val Array(warehouse, table, writerId, nStr, barrierDir, lockClass,
-      manifest, mode) = args
+      mode) = args
     val n = nStr.toInt
     val spark = SparkSession.builder()
       .master("local[2]")
@@ -39,7 +39,6 @@ object CrossProcessCommitter {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
       .config("spark.graft.commit.lock", lockClass)
-      .config("spark.graft.snapshot.manifest", manifest)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import java.nio.file.{Files, Paths}
@@ -104,8 +103,8 @@ object CrossProcessCommitter {
             .select(lit(writerId).as("writer"), lit(i).as("seq"))
             .coalesce(1).write.parquet(dir)
           val d = new org.apache.hadoop.fs.Path(dir)
-          existing.zipWithIndex.foreach { case ((nm, phys), k) =>
-            sc.carry(spark, phys, new org.apache.hadoop.fs.Path(d, s"c$k-$nm"))
+          existing.zipWithIndex.foreach { case ((nm, p), k) =>
+            sc.carry(spark, p, new org.apache.hadoop.fs.Path(d, s"c$k-$nm"))
           }
         }
       }
@@ -203,10 +202,9 @@ object CrossProcessCommitter {
       // High retry budget: with two writers hammering the same table,
       // losing several consecutive claims is expected, not exceptional.
       // FILE-LEVEL append, the merge arm's shape: the new row lands as
-      // its own file and every existing file CARRIES (hard link in link
-      // mode, .graftref metadata in manifest mode) — so the race also
-      // exercises carry resolution and, in manifest mode, the
-      // reference-counting prune under real cross-process interleaving.
+      // its own file and every existing file CARRIES (a hard link) — so
+      // the race also exercises carry and prune under real
+      // cross-process interleaving.
       // dataFiles re-lists the pointer, so it can transiently see one
       // version AHEAD of the registered base; that attempt then fails
       // the claim's base check and rebases — wasted work, never a wrong
@@ -217,8 +215,8 @@ object CrossProcessCommitter {
           .select(lit(writerId).as("writer"), lit(i).as("seq"))
           .coalesce(1).write.parquet(dir)
         val d = new org.apache.hadoop.fs.Path(dir)
-        existing.zipWithIndex.foreach { case ((nm, phys), k) =>
-          sc.carry(spark, phys, new org.apache.hadoop.fs.Path(d, s"c$k-$nm"))
+        existing.zipWithIndex.foreach { case ((nm, p), k) =>
+          sc.carry(spark, p, new org.apache.hadoop.fs.Path(d, s"c$k-$nm"))
         }
       }
     }

@@ -37,7 +37,7 @@ class CrossProcessSpec extends SparkSpec {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
-  private def raceTwoProcesses(tbl: String, manifest: Boolean,
+  private def raceTwoProcesses(tbl: String,
       mode: String = "append"): Unit = {
     if (mode == "append") SnapshotCommit.destroy(spark, tbl)
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
@@ -53,8 +53,7 @@ class CrossProcessSpec extends SparkSpec {
           "-Xmx2g", "-Dspark.ui.enabled=false",
           "-Dspark.sql.session.timeZone=UTC",
           "-cp", cp, "graft.CrossProcessCommitter",
-          warehouse, tbl, id, n.toString, barrier, lock,
-          manifest.toString, mode)): _*)
+          warehouse, tbl, id, n.toString, barrier, lock, mode)): _*)
       pb.environment().put("GRAFT_COMMIT_DEBUG", "1")
       pb.redirectErrorStream(true)
       pb.redirectOutput(Paths.get(barrier, s"out-$id").toFile)
@@ -101,68 +100,48 @@ class CrossProcessSpec extends SparkSpec {
     // Ground truth read from THIS (third) JVM: register replays any
     // tail work, then the committed state must hold every (writer, seq)
     // from both processes exactly once.
-    if (manifest)
-      spark.conf.set("spark.graft.snapshot.manifest", "true")
-    try {
-      SnapshotCommit.register(spark, tbl)
-      if (mode == "dv") {
-        // 2n interleaved deletes over a seeded v1: every writer's
-        // residue class gone, everything else alive, delete versions
-        // and snapshot versions both exactly serialized.
-        import org.apache.spark.sql.functions.col
-        val live = graft.storage.DeletionVectors.read(spark, tbl)
-        assert(live.count() === 1000L - 2 * n * 50)
-        val deadResidues = (0 until n) ++ (10 until 10 + n)
-        deadResidues.foreach(r =>
-          assert(live.filter(col("id") % 20 === r).count() === 0,
-            s"residue $r survived a committed delete — lost DV update"))
-        assert(graft.storage.DeletionVectors.version(spark, tbl) === 2L * n)
-        assert(SnapshotCommit.currentVersion(spark, tbl) === Some(2L * n + 1))
-      } else if (mode == "merge") {
-        // Both writers' disjoint upsert ranges AND the seed must all
-        // land exactly once: a missing range is the whole-table lost
-        // update a pre-derived merge replay would cause.
-        val rows = spark.table(tbl).collect()
-          .map(r => (r.getLong(0), r.getString(1))).toSet
-        val expected =
-          (0L until 10L).map(id => (id, "seed")).toSet ++
-            (for (w <- Seq("A", "B"); i <- 1 to n; k <- 0 until 5)
-              yield ((if (w == "A") 1000L else 2000L) + (i - 1) * 5 + k,
-                w)).toSet
-        assert(rows === expected,
-          s"lost/duplicated merge: ${expected.diff(rows)} missing, " +
-            s"${rows.diff(expected)} unexpected")
-        // seed v1 + one version per successful MERGE, exactly.
-        assert(SnapshotCommit.currentVersion(spark, tbl) === Some(2L * n + 1))
-      } else {
-        val rows = spark.table(tbl).collect()
-          .map(r => (r.getString(0), r.getInt(1))).toSet
-        val expected =
-          (for (w <- Seq("A", "B"); i <- 1 to n) yield (w, i)).toSet
-        assert(rows === expected,
-          s"lost/duplicated update: ${expected.diff(rows)} missing, " +
-            s"${rows.diff(expected)} unexpected")
-        // 2n commits serialized with no gaps: version chain length is the
-        // writers' combined commit count.
-        assert(SnapshotCommit.currentVersion(spark, tbl) === Some(2L * n))
-      }
-      if (manifest) {
-        // The carries really were metadata: the final version holds refs
-        // whose physical files live in EARLIER version directories and
-        // survived every interleaved reference-counting prune.
-        val cur = SnapshotCommit.currentLocation(spark, tbl).get
-        val resolved = SnapshotCommit.listData(spark, cur)
-        val carried = resolved.filter(
-          _._2.getParent.toUri.getPath != cur.toUri.getPath)
-        assert(carried.nonEmpty, "no cross-version refs in the final state")
-        val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        carried.foreach { case (nm, phys) =>
-          assert(fs.exists(phys),
-            s"ref $nm points at pruned file $phys — refcount GC broke " +
-              "under cross-process contention") }
-      }
-    } finally if (manifest)
-      spark.conf.unset("spark.graft.snapshot.manifest")
+    SnapshotCommit.register(spark, tbl)
+    if (mode == "dv") {
+      // 2n interleaved deletes over a seeded v1: every writer's
+      // residue class gone, everything else alive, delete versions
+      // and snapshot versions both exactly serialized.
+      import org.apache.spark.sql.functions.col
+      val live = graft.storage.DeletionVectors.read(spark, tbl)
+      assert(live.count() === 1000L - 2 * n * 50)
+      val deadResidues = (0 until n) ++ (10 until 10 + n)
+      deadResidues.foreach(r =>
+        assert(live.filter(col("id") % 20 === r).count() === 0,
+          s"residue $r survived a committed delete — lost DV update"))
+      assert(graft.storage.DeletionVectors.version(spark, tbl) === 2L * n)
+      assert(SnapshotCommit.currentVersion(spark, tbl) === Some(2L * n + 1))
+    } else if (mode == "merge") {
+      // Both writers' disjoint upsert ranges AND the seed must all
+      // land exactly once: a missing range is the whole-table lost
+      // update a pre-derived merge replay would cause.
+      val rows = spark.table(tbl).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+      val expected =
+        (0L until 10L).map(id => (id, "seed")).toSet ++
+          (for (w <- Seq("A", "B"); i <- 1 to n; k <- 0 until 5)
+            yield ((if (w == "A") 1000L else 2000L) + (i - 1) * 5 + k,
+              w)).toSet
+      assert(rows === expected,
+        s"lost/duplicated merge: ${expected.diff(rows)} missing, " +
+          s"${rows.diff(expected)} unexpected")
+      // seed v1 + one version per successful MERGE, exactly.
+      assert(SnapshotCommit.currentVersion(spark, tbl) === Some(2L * n + 1))
+    } else {
+      val rows = spark.table(tbl).collect()
+        .map(r => (r.getString(0), r.getInt(1))).toSet
+      val expected =
+        (for (w <- Seq("A", "B"); i <- 1 to n) yield (w, i)).toSet
+      assert(rows === expected,
+        s"lost/duplicated update: ${expected.diff(rows)} missing, " +
+          s"${rows.diff(expected)} unexpected")
+      // 2n commits serialized with no gaps: version chain length is the
+      // writers' combined commit count.
+      assert(SnapshotCommit.currentVersion(spark, tbl) === Some(2L * n))
+    }
     // The conflict actually happened: the first-commit stage rendezvous
     // forces both writers to stage against the same base, so the loser
     // restaged at least once — total staged events must exceed the 2n
@@ -176,7 +155,7 @@ class CrossProcessSpec extends SparkSpec {
 
   test("two JVM processes race commits on one table: no lost update, " +
       "version chain exactly serialized") {
-    raceTwoProcesses("xproc_commit_tbl", manifest = false)
+    raceTwoProcesses("xproc_commit_tbl")
   }
 
   test("two JVM processes race deletion-vector deletes: every residue " +
@@ -190,7 +169,7 @@ class CrossProcessSpec extends SparkSpec {
     SnapshotCommit.commit(spark, tbl) { dir =>
       spark.range(0, 1000).toDF("id").repartition(2).write.parquet(dir)
     }
-    raceTwoProcesses(tbl, manifest = false, mode = "dv")
+    raceTwoProcesses(tbl, mode = "dv")
   }
 
   test("two JVM processes race SQL MERGEs: both writers' upserts land — " +
@@ -203,7 +182,7 @@ class CrossProcessSpec extends SparkSpec {
       spark.range(0, 10).selectExpr("id", "'seed' as writer")
         .coalesce(1).write.parquet(dir)
     }
-    raceTwoProcesses(tbl, manifest = false, mode = "merge")
+    raceTwoProcesses(tbl, mode = "merge")
   }
 
   test("kill -9 of a writer with fully staged work: table stays readable, " +
@@ -229,7 +208,7 @@ class CrossProcessSpec extends SparkSpec {
         "-Dspark.sql.session.timeZone=UTC",
         "-cp", cp, "graft.CrossProcessCommitter",
         warehouse, tbl, "A", "1", barrier,
-        "graft.storage.FileLockCommitLock", "false", "append")): _*)
+        "graft.storage.FileLockCommitLock", "append")): _*)
     pb.redirectErrorStream(true)
     pb.redirectOutput(Paths.get(barrier, "out-A").toFile)
     val victim = pb.start()
@@ -274,18 +253,13 @@ class CrossProcessSpec extends SparkSpec {
         .coalesce(1).write.parquet(dir)
       val d = new org.apache.hadoop.fs.Path(dir)
       SnapshotCommit.dataFiles(spark, tbl).zipWithIndex.foreach {
-        case ((nm, phys), k) =>
-          SnapshotCommit.carry(spark, phys,
+        case ((nm, p), k) =>
+          SnapshotCommit.carry(spark, p,
             new org.apache.hadoop.fs.Path(d, s"c$k-$nm"))
       }
     } finally spark.conf.unset("spark.graft.commit.lock")
     assert(SnapshotCommit.currentVersion(spark, tbl) === Some(2L))
     assert(spark.table(tbl).count() === 4)
-  }
-
-  test("the same cross-process race on manifest carries: refs resolve, " +
-      "refcount GC collects nothing live") {
-    raceTwoProcesses("xproc_commit_manifest_tbl", manifest = true)
   }
 
   /** VERDICT r12 task 4 — the deployment-real clone-vs-prune race.
@@ -328,7 +302,7 @@ class CrossProcessSpec extends SparkSpec {
             "-Dspark.sql.session.timeZone=UTC",
             "-cp", cp, "graft.CrossProcessCommitter",
             warehouse, src, id, n.toString, barrier,
-            "graft.storage.FileLockCommitLock", "false", mode)): _*)
+            "graft.storage.FileLockCommitLock", mode)): _*)
         pb.environment().put("GRAFT_COMMIT_DEBUG", "1")
         pb.redirectErrorStream(true)
         pb.redirectOutput(Paths.get(barrier, s"out-$id").toFile)
@@ -393,9 +367,9 @@ class CrossProcessSpec extends SparkSpec {
         s"round $round: clone content diverges from source final state")
       val cur = SnapshotCommit.currentLocation(spark, dst).get
       val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      SnapshotCommit.listData(spark, cur).foreach { case (nm, phys) =>
-        assert(fs.exists(phys),
-          s"round $round: clone file $nm -> $phys does not exist — " +
+      SnapshotCommit.listData(spark, cur).foreach { p =>
+        assert(fs.exists(p),
+          s"round $round: clone file $p does not exist — " +
             "clone landed on a dead version")
       }
     }

@@ -267,7 +267,7 @@ class ExtensionsSpec extends SparkSpec {
     val d = SnapshotCommit.currentLocation(spark, tbl).get
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val physical = SnapshotCommit.listData(spark, d)
-      .map(f => fs.getFileStatus(f._2).getLen).sum
+      .map(fs.getFileStatus(_).getLen).sum
     assert(h.last._5 === physical, "recorded bytes must be exact")
     // A table with no published version fails loudly, not empty.
     intercept[Exception](
@@ -303,12 +303,12 @@ class ExtensionsSpec extends SparkSpec {
     }
     val before = SnapshotCommit
       .listData(spark, SnapshotCommit.currentLocation(spark, tbl).get)
-      .map(_._1).toSet
+      .map(_.getName).toSet
     // DELETE: a DV mark — live view shrinks, DATA FILES carry by name.
     GraftSqlParser.sql(spark, s"DELETE FROM $tbl WHERE id % 10 = 0")
     val afterDel = SnapshotCommit
       .listData(spark, SnapshotCommit.currentLocation(spark, tbl).get)
-      .map(_._1).toSet
+      .map(_.getName).toSet
     assert(afterDel === before, "DELETE must not rewrite any data file")
     assert(DeletionVectors.read(spark, tbl).count() === 90)
     // VERSION AS OF through plain SQL (live-session path): version 0 is
@@ -333,7 +333,7 @@ class ExtensionsSpec extends SparkSpec {
       s"UPDATE $tbl SET v = v + 1 WHERE id <= 20")
     val afterUpd = SnapshotCommit
       .listData(spark, SnapshotCommit.currentLocation(spark, tbl).get)
-      .map(_._1).toSet
+      .map(_.getName).toSet
     assert((afterUpd intersect before).nonEmpty,
       "UPDATE must carry untouched files by name")
     assert((before diff afterUpd).size < before.size,

@@ -184,7 +184,7 @@ class GraftTableSourceSpec extends SparkSpec {
     SnapshotSink.append(spark, src, 0L,
       spark.range(0, 20).select(col("id"), (col("id") * 2).as("v")))
     pump()
-    assert(SnapshotCommit.readData(spark, dst).count() === 20)
+    assert(spark.table(dst).count() === 20)
     SnapshotSink.append(spark, src, 1L,
       spark.range(20, 30).select(col("id"), (col("id") * 2).as("v")))
     pump()
@@ -192,16 +192,16 @@ class GraftTableSourceSpec extends SparkSpec {
     // this session aligns its catalog/relation cache via register —
     // the cross-session read contract every entry follows.
     SnapshotCommit.register(spark, dst)
-    val out = SnapshotCommit.readData(spark, dst)
+    val out = spark.table(dst)
     assert(out.count() === 30)
     assert(out.select("id").collect().map(_.getLong(0)).toSet ===
       (0L until 30L).toSet)
     // An idle pump commits nothing: exactly-once, no duplicate version.
     val vBefore = SnapshotCommit.currentVersion(spark, dst)
     pump()
-    assert(SnapshotCommit.readData(spark, dst).count() === 30)
+    assert(spark.table(dst).count() === 30)
     assert(SnapshotCommit.currentVersion(spark, dst) === vBefore ||
-      SnapshotCommit.readData(spark, dst).count() === 30)
+      spark.table(dst).count() === 30)
     // Misuse fails loudly.
     intercept[Exception] {
       spark.readStream.format("graft-table").option("table", src).load()

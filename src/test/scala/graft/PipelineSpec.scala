@@ -610,6 +610,33 @@ class PipelineSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(props("constraint.pk_props_gold") === "PRIMARY KEY (key) NOT ENFORCED")
     assert(props("layer") === "analytics")
+    // A snapshot-committed table's declared delta.targetFileSize
+    // outlives its catalog entry: the session catalog is in-memory, so
+    // a new process re-registers the table from its location with no
+    // user TBLPROPERTIES, and OPTIMIZE must then read the root
+    // `_properties` sidecar.
+    import graft.storage.{Optimize, SnapshotCommit}
+    val inc = "props_inc_tbl"
+    SnapshotCommit.destroy(spark, inc)
+    // Incompressible 64-hex values (~300 KB raw): the declared 16 KiB
+    // target splits them into many files, the 128 MiB default into one.
+    new Pipeline().register(Dataset(inc, Nil,
+      (_, _) => spark.range(0, 5000).select(col("id").as("k"),
+        sha2(col("id").cast("string"), 256).as("v")),
+      materialize = Materialize.Incremental(Seq("k")),
+      tableProperties = Map(
+        Optimize.TargetFileSizeProp -> (16 * 1024).toString))).run(spark)
+    spark.sql(s"DROP TABLE $inc") // what a new process starts without
+    assert(SnapshotCommit.register(spark, inc).isDefined)
+    assert(!spark.sql(s"SHOW TBLPROPERTIES $inc").collect()
+      .exists(_.getString(0) == Optimize.TargetFileSizeProp))
+    assert(SnapshotCommit.properties(spark, inc) ===
+      Map(Optimize.TargetFileSizeProp -> "16384"))
+    val (_, na) = Optimize.compact(spark, inc)
+    assert(na >= 4,
+      s"compacted to $na file(s) — the sidecar's 16 KiB target was ignored")
+    assert(spark.table(inc).count() === 5000)
+    SnapshotCommit.destroy(spark, inc)
   }
 
   test("streamDedupGate admits min doc_id per fingerprint and rejects " +

@@ -724,13 +724,20 @@ class PlanSpec extends SparkSpec {
     // The gate scales all take the single-task fixed-point branch, so
     // this pin is what keeps the two branches answer-identical: every
     // step is BIGINT arithmetic, so the full row sets must be EQUAL,
-    // not merely close.
-    val key = "spark.graft.graph.disableLocal"
+    // not merely close. A zero byte cap forces the distributed rounds
+    // (a non-empty graph has bytes > 0), the same idiom StorageSpec uses
+    // with localSidecarMaxBytes=0.
+    val key = "spark.graft.graph.localMaxBytes"
+    val graphBytes = Seq(graft.core.Tables.orders(spark, Sf0001),
+      graft.core.Tables.lineitem(spark, Sf0001))
+      .map(graft.storage.OptimizedWrite.leafBytes).sum
+    assert(graphBytes > 0, "a zero cap forces the rounds only on a " +
+      "graph whose source scans report bytes")
     def rows(name: String) = Catalog.queries(name)(spark, Sf0001)
       .collect().map(_.toSeq).toSet
     for (name <- Seq("pr1_pagerank", "pr2_personalized_pagerank")) {
       val fast = rows(name)
-      spark.conf.set(key, "true")
+      spark.conf.set(key, "0")
       val loop = try rows(name) finally spark.conf.unset(key)
       assert(fast === loop, s"$name: fast path diverged from the rounds")
       assert(fast.nonEmpty)

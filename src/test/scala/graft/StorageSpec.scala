@@ -338,10 +338,9 @@ class StorageSpec extends SparkSpec {
     SnapshotCommit.commit(spark, tbl) { dir =>
       spark.range(0, 5).toDF("id").write.parquet(dir)
     }
-    // The ADVICE scenario: a manifest-mode registration left a temp view
-    // under this name, then the conf flipped back to link mode. The view
-    // shadows the catalog table (tableExists says true, metadata lookup
-    // throws) — register must recover, not surface NoSuchTableException.
+    // A user's same-name temp view shadows the catalog table
+    // (tableExists says true, metadata lookup throws) — register must
+    // recover, not surface NoSuchTableException.
     spark.range(0, 99).toDF("wrong").createOrReplaceTempView(tbl)
     assert(SnapshotCommit.register(spark, tbl) === Some(1L))
     assert(spark.table(tbl).columns.toSeq === Seq("id"),
@@ -1744,7 +1743,7 @@ class StorageSpec extends SparkSpec {
     // (correct-for-this-join) value, never rewrite to `total - dv`.
     val dir = SnapshotCommit.currentLocation(spark, tbl).get
     val raw = spark.read.parquet(
-      SnapshotCommit.listData(spark, dir).map(_._2.toString): _*)
+      SnapshotCommit.listData(spark, dir).map(_.toString): _*)
     val dv = spark.read.parquet(new org.apache.hadoop.fs.Path(dir, "_dv")
         .toString)
       .filter(col("p") >= 0)
@@ -1792,7 +1791,7 @@ class StorageSpec extends SparkSpec {
     }
     val before = SnapshotCommit
       .listData(spark, SnapshotCommit.currentLocation(spark, tbl).get)
-      .map(_._1).toSet
+      .map(_.getName).toSet
     assert(before.size === 4, s"fixture wants 4 files, got $before")
     // DV-hide a row in a file the merge will NOT touch: the carried
     // sidecar (not a fold-in rewrite) must keep masking it after.
@@ -1807,7 +1806,7 @@ class StorageSpec extends SparkSpec {
     SnapshotCommit.register(spark, tbl)
     val after = SnapshotCommit
       .listData(spark, SnapshotCommit.currentLocation(spark, tbl).get)
-      .map(_._1).toSet
+      .map(_.getName).toSet
     // THE 100 TB PROPERTY: write IO proportional to touched files, not
     // table size — N-1 files carried BY NAME, exactly one rewritten.
     assert((after intersect before).size === 3,
