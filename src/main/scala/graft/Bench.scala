@@ -1,37 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify/the test harness: Tables.normalizeTs casts the
-      // events NTZ timestamps through the SESSION zone — an unset zone
-      // on a non-UTC host would silently shift every event-time bucket
-      // the streaming entries measure.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Match Verify/SparkSpec: sorted-bucket layouts (b1, b8) feed
-      // merge joins directly instead of re-sorting on every read.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // AQE partition-coalescing floor (r18, guide §2.5's unsplittable-
-      // input corollary): shuffle.partitions is pinned at the core
-      // count above, so every coalesce below it SERIALIZES a stage —
-      // and the default 1 MiB floor does exactly that to small-byte /
-      // CPU-heavy post-shuffle stages (j19/w15's windows ran ONE task,
-      // profiled 0.8-0.9 s each). 64k keeps genuinely-empty partitions
-      // merged while letting parallelismFirst target the cores it was
-      // designed to target. NOT a local-only knob: whenever
-      // shuffle.partitions tracks cluster parallelism, a floor that
-      // undercuts it costs CPU-bound stages the same way at any scale;
-      // the floor only binds when a stage's whole shuffle is under
-      // cores x 64k, where either choice is cheap. Env-overridable for
-      // deployments that prefer Spark's default.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-      .getOrCreate()
+    val spark = graft.core.Session.local()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: one scan+noop initializes parquet reader, codegen
     // compiler and shuffle infra so the (otherwise arbitrary) first

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic dataset scale-up: replicate a testdata scale dir K×
@@ -64,13 +64,7 @@ object ScaleUp {
     val Array(srcDir, destDir, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val customer = core.Tables.customer(spark, srcDir)

@@ -1,27 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The engine's bucketed layouts are SORTED at write (b1, b8) —
-      // have scans report that order (one file per bucket) so merge
-      // joins consume bucket files directly instead of re-sorting.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // Match Bench (see its comment): with shuffle.partitions pinned
-      // at the core count, the default 1 MiB coalescing floor
-      // serializes CPU-heavy small-byte stages.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-      .getOrCreate()
+    val spark = graft.core.Session.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (comma-separated name prefixes), mirroring

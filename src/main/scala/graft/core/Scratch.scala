@@ -7,7 +7,13 @@ import org.apache.spark.sql.SparkSession
 /** Write-once scratch directories for derived fixtures (CSV/JSON/ORC/text
   * copies of the test tables, split streaming sources).
   *
-  * Keying: `<base>/<name>/<key>` where the key folds together (a) a
+  * Root: `<spark.sql.warehouse.dir>/_graft_scratch` ([[root]]) — like
+  * checkpoints, staging and snapshots, fixtures live under the session's
+  * warehouse, so processes on different warehouses never share them.
+  * A name is `<fixture>/<source>` (e.g. `csv/<pathKey>`): the fixture
+  * part keeps one derivation's names apart from another's.
+  *
+  * Keying: `<root>/<name>/<key>` where the key folds together (a) a
   * fingerprint of the SOURCE directory — regenerated data changes it —
   * and (b) a hash of the derivation's SCHEMA (or DDL) — a code change to
   * what gets written changes it. Either change busts the cache, so a
@@ -20,9 +26,9 @@ import org.apache.spark.sql.SparkSession
   * generation's marker exists ([[ensure]]) — pruning at resolve time
   * destroyed the last working generation before the rebuild had
   * succeeded, so a transient write failure left no usable fixture.
-  * (Single-writer assumption: the harness runs one JVM at a time against
-  * a scratch root; concurrent processes racing the prune would need a
-  * lock this deliberately doesn't take.)
+  * (Single-writer assumption, per warehouse: one JVM at a time writes a
+  * warehouse's scratch root; concurrent processes on ONE warehouse
+  * racing the prune would need a lock this deliberately doesn't take.)
   */
 object Scratch {
 
@@ -45,17 +51,19 @@ object Scratch {
     graft.olist.OlistMaterialized.fingerprint(spark, srcDir).take(12) +
       "-" + sha8(derivation)
 
-  /** Resolve `<base>/<name>/<key>`. Pure path arithmetic — no pruning
-    * (see [[ensure]]/[[prune]] for the post-success cleanup).
-    */
-  def dir(base: String, name: String, key: String): Path =
-    Paths.get(base, name, key)
+  /** The session's scratch root, a local path under its warehouse (a
+    * relative warehouse resolves against the working directory, as the
+    * session resolves it). */
+  def root(spark: SparkSession): Path = {
+    val wh = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
+    Paths.get(wh).toAbsolutePath.resolve("_graft_scratch")
+  }
 
   /** Delete every stale sibling generation of `name` (any key but
     * `keep`). Call only once the new generation is proven good.
     */
-  def prune(base: String, name: String, keep: String): Unit = {
-    val parent = Paths.get(base, name)
+  private def prune(parent: Path, keep: String): Unit = {
     if (Files.isDirectory(parent)) {
       val it = Files.list(parent)
       try it.iterator().forEachRemaining { p =>
@@ -70,11 +78,11 @@ object Scratch {
     * once the marker exists — so a failed rebuild leaves the previous
     * generation intact for the next attempt.
     */
-  def ensure(base: String, name: String, key: String, marker: String)
+  def ensure(spark: SparkSession, name: String, key: String, marker: String)
       (write: Path => Unit): Path = {
-    val gen = dir(base, name, key)
+    val gen = root(spark).resolve(name).resolve(key)
     if (!Files.exists(gen.resolve(marker))) write(gen)
-    if (Files.exists(gen.resolve(marker))) prune(base, name, key)
+    if (Files.exists(gen.resolve(marker))) prune(gen.getParent, key)
     gen
   }
 

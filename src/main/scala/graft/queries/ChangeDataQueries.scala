@@ -675,8 +675,7 @@ object ChangeDataQueries {
         col("o_orderstatus").as("status"),
         col("o_totalprice").cast("double").as("total"))
       .createOrReplaceTempView(src)
-    val csvDir = s.conf.get("spark.sql.warehouse.dir") +
-      s"/_graft_scratch/${tbl}_csv"
+    val csvDir = graft.core.Scratch.root(s).resolve(s"${tbl}_csv").toString
     s.table(src).filter(col("k") % 2 =!= 0)
       .coalesce(4).write.mode("overwrite")
       .option("header", "true").csv(csvDir)

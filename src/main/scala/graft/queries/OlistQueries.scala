@@ -130,8 +130,8 @@ object OlistQueries {
     // derivation both bust the cache; stale generations are pruned only
     // after the new write's _SUCCESS lands.
     val src = OlistData.orders(s, d)
-    val dir = graft.core.Scratch.ensure("/tmp/graft_st6_csv",
-      d.replaceAll("[^A-Za-z0-9._-]+", "_"),
+    val dir = graft.core.Scratch.ensure(s,
+      "st6_csv/" + d.replaceAll("[^A-Za-z0-9._-]+", "_"),
       graft.core.Scratch.key(s, d, src.schema.json), "_SUCCESS") { gen =>
       src.write.mode("overwrite").option("header", "true").csv(gen.toString)
     }.toString

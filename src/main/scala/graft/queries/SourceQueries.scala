@@ -36,7 +36,7 @@ object SourceQueries {
     // _SUCCESS marker (not bare existence) gates the rebuild — an
     // interrupted write leaves a partial dir that must be overwritten,
     // not trusted — and stale generations are pruned only after it.
-    val dir = graft.core.Scratch.ensure("/tmp/graft_csv", sfName,
+    val dir = graft.core.Scratch.ensure(s, s"csv/$sfName",
       graft.core.Scratch.key(s, d, DocSchema.json), "documents/_SUCCESS") {
       gen =>
         Tables.documents(s, d)
@@ -82,7 +82,7 @@ object SourceQueries {
     "s4_json_roundtrip",
     "SELECT doc_id, text, lang, source, n_chars FROM documents") { (s, d) =>
     val sfName = graft.core.Scratch.pathKey(d)
-    val dir = graft.core.Scratch.ensure("/tmp/graft_json", sfName,
+    val dir = graft.core.Scratch.ensure(s, s"json/$sfName",
       graft.core.Scratch.key(s, d, DocSchema.json), "documents/_SUCCESS") {
       gen =>
         Tables.documents(s, d)
@@ -99,7 +99,7 @@ object SourceQueries {
     "s5_orc_roundtrip",
     "SELECT doc_id, text, lang, source, n_chars FROM documents") { (s, d) =>
     val sfName = graft.core.Scratch.pathKey(d)
-    val dir = graft.core.Scratch.ensure("/tmp/graft_orc", sfName,
+    val dir = graft.core.Scratch.ensure(s, s"orc/$sfName",
       graft.core.Scratch.key(s, d, DocSchema.json), "documents/_SUCCESS") {
       gen =>
         Tables.documents(s, d)
@@ -158,7 +158,7 @@ object SourceQueries {
       |FROM documents""".stripMargin) { (s, d) =>
     import graft.text.TextFunctions.rollingHash
     val sfName = graft.core.Scratch.pathKey(d)
-    val dir = graft.core.Scratch.ensure("/tmp/graft_text", sfName,
+    val dir = graft.core.Scratch.ensure(s, s"text/$sfName",
       graft.core.Scratch.key(s, d, "text-lines-v1"), "documents/_SUCCESS") {
       gen =>
         Tables.documents(s, d).select(col("text"))
@@ -231,7 +231,7 @@ object SourceQueries {
       |            THEN '{"source":"' || source || '"}' END AS _rescued_data
       |FROM documents""".stripMargin) { (s, d) =>
     val sfName = graft.core.Scratch.pathKey(d)
-    val gen = graft.core.Scratch.ensure("/tmp/graft_csv_evo", sfName,
+    val gen = graft.core.Scratch.ensure(s, s"csv_evo/$sfName",
       graft.core.Scratch.key(s, d, "csv-evolution-v1"), "_SEEDED") { g =>
       val docs = Tables.documents(s, d)
       val data = g.resolve("data").toString
@@ -279,7 +279,7 @@ object SourceQueries {
     // The derivation tag keys the generation on the actual split +
     // per-batch column sets (s8's convention) — editing them must bust
     // the cache, not serve stale batches under an unchanged DocSchema.
-    val dir = graft.core.Scratch.ensure("/tmp/graft_pqevo", sfName,
+    val dir = graft.core.Scratch.ensure(s, s"pqevo/$sfName",
       graft.core.Scratch.key(s, d,
         DocSchema.json + "|pq-evolution-v1|doc_id%2|b1=id,text,lang" +
           "|b2=id,text,lang,source,n_chars"), "batch2/_SUCCESS") {

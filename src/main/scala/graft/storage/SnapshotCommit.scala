@@ -289,9 +289,6 @@ object SnapshotCommit {
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
-      val debug = sys.env.contains("GRAFT_COMMIT_DEBUG")
-      def t() = System.nanoTime()
-      val t0 = t()
       // Every (re)invocation sees the current committed state: replay
       // the registration tail of any interrupted commit, then stage.
       // THE BASE IS WHAT REGISTER ALIGNED TO — never a fresh pointer
@@ -305,10 +302,8 @@ object SnapshotCommit {
       activeStages.add(stage.toString)
       var won = false
       try {
-        val t1 = t()
         write(stage.toString)
         writeVersionMeta(spark, stage, operation)
-        val t2 = t()
         failpoint("staged")
         val v = base + 1
         won = lock.synchronized {
@@ -320,21 +315,11 @@ object SnapshotCommit {
           currentVersion(spark, table).getOrElse(0L) == base &&
             claimPointer(spark, fs, root, v, stageName)
         }
-        if (debug)
-          System.err.println(s"[commit-debug] $table attempt=$attempt " +
-            s"base=$base v=$v won=$won thread=${Thread.currentThread().getName}")
         if (won) {
           failpoint("committed")
           val published = finalizeDir(spark, table, v)
-          val t3 = t()
           register(spark, table)
-          val t4 = t()
           prune(spark, table, keep = v)
-          if (debug)
-            System.err.println(f"[commit-debug] $table phases(ms) " +
-              f"register=${(t1 - t0) / 1e6}%.1f write=${(t2 - t1) / 1e6}%.1f " +
-              f"claim+fin=${(t3 - t2) / 1e6}%.1f reregister=${(t4 - t3) / 1e6}%.1f " +
-              f"prune=${(t() - t4) / 1e6}%.1f")
           return published
         }
       } finally {
@@ -523,10 +508,7 @@ object SnapshotCommit {
       // memoized (sessionState-identity, version) instead, which (a)
       // could collide across sessions, (b) leaked entries for dead
       // sessions, and (c) sent every clone down the slow path.
-      val fast = registrationFresh(spark, table, v)
-      if (sys.env.contains("GRAFT_COMMIT_DEBUG"))
-        System.err.println(s"[register-debug] $table v=$v fast=$fast")
-      if (fast) return Some(v)
+      if (registrationFresh(spark, table, v)) return Some(v)
       slowRegisters.incrementAndGet()
       pointAt(spark, table, finalizeDir(spark, table, v))
       v

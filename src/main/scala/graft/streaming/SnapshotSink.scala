@@ -101,7 +101,9 @@ object SnapshotSink {
         //    delete coordinate kept — an append must never resurrect
         //    rows a DV delete masked); the skipping sidecar refreshes
         //    AFTER the join (it lists the staged files, so it needs the
-        //    batch's output in place).
+        //    batch's output in place). An EMPTY batch still writes one
+        //    schema-bearing file (SPARK-23271), so an empty first
+        //    version registers like any other (PipelineSpec pins it).
         var carried = Set.empty[String]
         graft.core.Overlap.overlapped {
           batch.write.mode("append").parquet(stage)
@@ -119,19 +121,6 @@ object SnapshotSink {
           .filterNot(carried)
         prev.foreach(p =>
           graft.storage.StatsSkipping.refreshStats(spark, p, stageP))
-        // An EMPTY FIRST batch can leave a version with zero data
-        // files, which cannot register: the catalog table's schema is
-        // inferred from the version's parquet files, and an empty
-        // directory has none — guarantee one schema-bearing file. AFTER
-        // the carry, so a later empty batch whose carried files
-        // already make the version readable adds nothing (an
-        // every-empty-batch filler would compound through carryData
-        // into unbounded file growth).
-        if (SnapshotCommit.listData(spark, stageP).isEmpty)
-          spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              batch.schema)
-            .repartition(1).write.mode("append").parquet(stage)
         // Stamp the CHANGE AXIS (r17): one version per micro-batch,
         // `_add:` sentinels naming the batch's files — the same stamp
         // INSERT INTO writes, so the CDC surface answers for streaming

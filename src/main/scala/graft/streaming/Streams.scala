@@ -43,26 +43,15 @@ object Streams {
     * planned concurrently on it (and two concurrent helpers could clobber
     * each other's restore) — so each run gets its own `newSession`:
     * shared SparkContext and catalog-backed tables, isolated conf and
-    * temp-view namespace.
+    * temp-view namespace. The state-store provider is Spark's own
+    * `spark.sql.streaming.stateStore.providerClass`: set as a Spark
+    * property (`-D`/`--conf`), the SparkConf carries it into every
+    * `newSession`.
     */
   private def eventsSession(spark: SparkSession, statePartitions: Int = 8): SparkSession = {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    // Bench sweep knob: SPARK_GRAFT_STATE_PROVIDER=rocksdb runs every
-    // stateful entry under RocksDBStateStoreProvider (the 100 TB
-    // provider — see MIGRATION.md) so its cost vs the HDFS-backed
-    // default is a measured number, not a claim. Safe to flip per run:
-    // each entry builds a FRESH checkpoint (memory-sink temp dirs), so
-    // the per-checkpoint provider choice never mixes state formats.
-    // Any other value is taken as a provider class name verbatim.
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach { p =>
-      val cls =
-        if (p == "rocksdb")
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else p
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass", cls)
-    }
     ss
   }
 
@@ -126,8 +115,8 @@ object Streams {
         // advance MONOTONICALLY across micro-batches and nothing drops
         // as late — required by any watermarked stateful op that must
         // stay batch-deterministic under a multi-batch split.
-        graft.core.Scratch.ensure("/tmp/graft_streams",
-          s"${sane}_split$splitFiles${if (orderedSplit) "ord" else ""}",
+        graft.core.Scratch.ensure(spark,
+          s"streams/${sane}_split$splitFiles${if (orderedSplit) "ord" else ""}",
           graft.core.Scratch.key(spark, sfDir,
             schema.json + (if (orderedSplit) "|mtime-total-order" else "")),
           // An ordered generation is complete only once the mtimes are
@@ -149,7 +138,8 @@ object Streams {
           if (orderedSplit) stampOrdered(out)
         }.resolve("events")
       } else {
-        val link_dir = java.nio.file.Paths.get("/tmp/graft_streams", sane, "events")
+        val link_dir =
+          graft.core.Scratch.root(spark).resolve(s"streams/$sane/events")
         ensureSourceLink(link_dir,
           java.nio.file.Paths.get(s"$sfDir/events.parquet"))
         link_dir
@@ -960,8 +950,8 @@ object Streams {
       splitFiles: Int, maxFilesPerTrigger: Int): DataFrame = {
     val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
     val sane = saneKey(sfDir)
-    val dir = graft.core.Scratch.ensure("/tmp/graft_streams",
-      s"${sane}_docsplit$splitFiles",
+    val dir = graft.core.Scratch.ensure(spark,
+      s"streams/${sane}_docsplit$splitFiles",
       graft.core.Scratch.key(spark, sfDir, schema.json + "|docid-total-order"),
       // Ordered generations are complete only once mtimes are STAMPED
       // (see eventsStream — parquet's _SUCCESS lands before the loop).

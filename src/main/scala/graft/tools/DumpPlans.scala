@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch tool (not part of the driver contract): writes the
   * `explain("formatted")` text of named catalog entries to files —
   * the plan evidence committed under `plans/r17/`.
@@ -19,16 +17,7 @@ object DumpPlans {
     val suffix = args(1)
     val entries = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
+    val spark = graft.core.Session.local()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     entries.foreach { e =>

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -19,16 +18,7 @@ object ProfileEntry {
     val entry = args.headOption.getOrElse("g15_reference_sql")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    b.config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-    val spark = b.getOrCreate()
+    val spark = graft.core.Session.local()
     spark.sparkContext.setLogLevel("WARN")
     try spark.read.parquet(s"$sfDir/nation.parquet")
       .write.mode("overwrite").format("noop").save()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-process half of the CROSS-PROCESS commit race
   * (PipelineSpec "two separate JVM processes..."): a standalone main so
   * the test can spawn real second/third JVMs — separate
@@ -33,13 +31,8 @@ object CrossProcessCommitter {
     val Array(warehouse, table, writerId, nStr, barrierDir, lockClass,
       mode) = args
     val n = nStr.toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.commit.lock", lockClass)
-      .getOrCreate()
+    val spark = graft.core.Session.local(warehouse = Some(warehouse),
+      confs = Seq("spark.graft.commit.lock" -> lockClass))
     spark.sparkContext.setLogLevel("ERROR")
     import java.nio.file.{Files, Paths}
     Files.createDirectories(Paths.get(barrierDir))

@@ -37,6 +37,21 @@ class CrossProcessSpec extends SparkSpec {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
+  /** Start `main` in a child JVM on this classpath and 2 cores (its
+    * session comes from the same factory as this suite's), stdout and
+    * stderr captured in `log`. */
+  private def spawn(log: java.nio.file.Path, main: String,
+      args: String*): Process = {
+    val pb = new ProcessBuilder((Seq(
+      System.getProperty("java.home") + "/bin/java") ++ addOpens ++ Seq(
+      "-Xmx2g", "-cp", System.getProperty("java.class.path"), main) ++
+      args): _*)
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    pb.redirectErrorStream(true)
+    pb.redirectOutput(log.toFile)
+    pb.start()
+  }
+
   private def raceTwoProcesses(tbl: String,
       mode: String = "append"): Unit = {
     if (mode == "append") SnapshotCommit.destroy(spark, tbl)
@@ -45,20 +60,9 @@ class CrossProcessSpec extends SparkSpec {
       Files.createTempDirectory("graft_xproc_barrier").toString
     val n = 4
     val lock = "graft.storage.FileLockCommitLock"
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    def launch(id: String): Process = {
-      val pb = new ProcessBuilder(
-        (Seq(javaBin) ++ addOpens ++ Seq(
-          "-Xmx2g", "-Dspark.ui.enabled=false",
-          "-Dspark.sql.session.timeZone=UTC",
-          "-cp", cp, "graft.CrossProcessCommitter",
-          warehouse, tbl, id, n.toString, barrier, lock, mode)): _*)
-      pb.environment().put("GRAFT_COMMIT_DEBUG", "1")
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(Paths.get(barrier, s"out-$id").toFile)
-      pb.start()
-    }
+    def launch(id: String): Process =
+      spawn(Paths.get(barrier, s"out-$id"), "graft.CrossProcessCommitter",
+        warehouse, tbl, id, n.toString, barrier, lock, mode)
     val a = launch("A")
     val b = launch("B")
     // On any launch/race failure, surface the children's captured output —
@@ -197,21 +201,12 @@ class CrossProcessSpec extends SparkSpec {
     }
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
     val barrier = Files.createTempDirectory("graft_xproc_kill").toString
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
     // One child, n=1: it stages, drops its staged-A marker, then blocks
     // waiting for a peer that never comes — a process frozen at the
     // most dangerous instant (work fully staged, claim not yet made).
-    val pb = new ProcessBuilder(
-      (Seq(javaBin) ++ addOpens ++ Seq(
-        "-Xmx2g", "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC",
-        "-cp", cp, "graft.CrossProcessCommitter",
-        warehouse, tbl, "A", "1", barrier,
-        "graft.storage.FileLockCommitLock", "append")): _*)
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(Paths.get(barrier, "out-A").toFile)
-    val victim = pb.start()
+    val victim = spawn(Paths.get(barrier, "out-A"),
+      "graft.CrossProcessCommitter", warehouse, tbl, "A", "1", barrier,
+      "graft.storage.FileLockCommitLock", "append")
     try {
       Files.writeString(Paths.get(barrier, "ready-B"), "") // fake peer ready
       val deadline = System.currentTimeMillis() + 300000
@@ -293,21 +288,10 @@ class CrossProcessSpec extends SparkSpec {
       val warehouse = spark.conf.get("spark.sql.warehouse.dir")
       val barrier =
         Files.createTempDirectory(s"graft_xproc_clone$round").toString
-      val javaBin = System.getProperty("java.home") + "/bin/java"
-      val cp = System.getProperty("java.class.path")
-      def launch(id: String, mode: String, n: Int): Process = {
-        val pb = new ProcessBuilder(
-          (Seq(javaBin) ++ addOpens ++ Seq(
-            "-Xmx2g", "-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC",
-            "-cp", cp, "graft.CrossProcessCommitter",
-            warehouse, src, id, n.toString, barrier,
-            "graft.storage.FileLockCommitLock", mode)): _*)
-        pb.environment().put("GRAFT_COMMIT_DEBUG", "1")
-        pb.redirectErrorStream(true)
-        pb.redirectOutput(Paths.get(barrier, s"out-$id").toFile)
-        pb.start()
-      }
+      def launch(id: String, mode: String, n: Int): Process =
+        spawn(Paths.get(barrier, s"out-$id"), "graft.CrossProcessCommitter",
+          warehouse, src, id, n.toString, barrier,
+          "graft.storage.FileLockCommitLock", mode)
       val cloner = launch("A", "clone", 1)
       val churner = launch("B", "churn", 3)
       def childLogs(): String = Seq("A", "B").map { id =>
@@ -440,19 +424,9 @@ class CrossProcessSpec extends SparkSpec {
       }
       data.toString
     }
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    def launch(id: String): Process = {
-      val pb = new ProcessBuilder(
-        (Seq(javaBin) ++ addOpens ++ Seq(
-          "-Xmx2g", "-Dspark.ui.enabled=false",
-          "-Dspark.sql.session.timeZone=UTC",
-          "-cp", cp, "graft.CrossProcessStreamer",
-          dataArg, ckpt, out, barrier, id, mode)): _*)
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(Paths.get(barrier, s"out-$id").toFile)
-      pb.start()
-    }
+    def launch(id: String): Process =
+      spawn(Paths.get(barrier, s"out-$id"), "graft.CrossProcessStreamer",
+        dataArg, ckpt, out, barrier, id, mode)
     def log(id: String): String = {
       val p = Paths.get(barrier, s"out-$id")
       if (Files.exists(p)) Files.readString(p).takeRight(2000)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
 
@@ -47,18 +46,16 @@ import org.apache.spark.sql.types._
 object CrossProcessStreamer {
   def main(args: Array[String]): Unit = {
     val Array(dataDir, ckptDir, outDir, barrierDir, id, mode) = args
-    val builder = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
     // graft-table mode shares the PARENT's warehouse (the snapshot
     // chain lives there); dataDir is "warehouse::table".
-    if (mode == "graft-table")
-      builder.config("spark.sql.warehouse.dir", dataDir.split("::")(0))
-    if (mode == "dedup-rocksdb")
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
+    val spark = graft.core.Session.local(
+      warehouse =
+        if (mode == "graft-table") Some(dataDir.split("::")(0)) else None,
+      confs =
+        if (mode == "dedup-rocksdb")
+          Seq("spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        else Nil)
     spark.sparkContext.setLogLevel("ERROR")
     import java.nio.file.{Files, Paths}
     Files.createDirectories(Paths.get(barrierDir))

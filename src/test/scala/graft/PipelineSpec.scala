@@ -817,6 +817,26 @@ class PipelineSpec extends SparkSpec {
     assert(spark.table(tbl).count() === 150L)
     spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
+    // An EMPTY first micro-batch into a fresh table (zero partitions,
+    // and several empty ones), then a non-empty one: both versions
+    // register and read, the first with no rows and the batch's schema.
+    val fresh = "snap_sink_empty_first"
+    Seq(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], b0.schema),
+      spark.range(0, 0, 1, 3).select(col("id"))).foreach { empty =>
+      SnapshotCommit.destroy(spark, fresh)
+      assert(SnapshotSink.append(spark, fresh, 0L, empty))
+      assert(spark.table(fresh).count() === 0L)
+      assert(SnapshotSink.append(spark, fresh, 1L, b1))
+      val Seq(first, second) = SnapshotCommit.publishedVersions(spark, fresh)
+      def at(v: Long) = spark.read.parquet(
+        SnapshotCommit.resolveDir(spark, fresh, v).get.toString)
+      assert(at(first).count() === 0L)
+      assert(at(first).schema.fieldNames.toSeq === Seq("id"))
+      assert(at(second).count() === 50L)
+      assert(spark.table(fresh).count() === 50L)
+    }
+    SnapshotCommit.destroy(spark, fresh)
   }
 
   test("streaming quarantine: per-batch routing rides the idempotence " +

@@ -103,36 +103,44 @@ class PropertySpec extends SparkSpec {
 
   test("Scratch.ensure prunes only after success and scopes per name") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_scratch_test").toString
+    import graft.core.Scratch
     def written(gen: java.nio.file.Path): Unit = {
       Files.createDirectories(gen)
       Files.writeString(gen.resolve("_SUCCESS"), "")
     }
-    val g1 = graft.core.Scratch.ensure(base, "docs", "key1", "_SUCCESS")(written)
+    // Generations resolve under the session's warehouse.
+    val wh = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    val g1 = Scratch.ensure(spark, "csv/probe", "key1", "_SUCCESS")(written)
+    assert(g1 === wh.resolve("_graft_scratch/csv/probe/key1"))
     assert(Files.exists(g1.resolve("_SUCCESS")))
+    // Sibling names — one fixture's source, another fixture's, and a
+    // `_`-suffixed name (docs vs docs_v2, the flat-layout prefix bug).
+    val siblings = Seq("csv_evo/probe", "json/probe", "pqevo/probe",
+      "csv/probe_v2", "docs", "docs_v2")
+      .map(n => Scratch.ensure(spark, n, "keyX", "_SUCCESS")(written))
     // a FAILED rebuild for a new key leaves the working generation intact
     intercept[RuntimeException] {
-      graft.core.Scratch.ensure(base, "docs", "key2", "_SUCCESS") { _ =>
+      Scratch.ensure(spark, "csv/probe", "key2", "_SUCCESS") { _ =>
         throw new RuntimeException("transient write failure")
       }
     }
     assert(Files.exists(g1.resolve("_SUCCESS")),
       "failed rebuild destroyed the previous working generation")
     // a write that completes WITHOUT the marker must not prune either
-    graft.core.Scratch.ensure(base, "docs", "key2", "_SUCCESS") { gen =>
+    Scratch.ensure(spark, "csv/probe", "key2", "_SUCCESS") { gen =>
       Files.createDirectories(gen)
     }
     assert(Files.exists(g1.resolve("_SUCCESS")),
       "markerless write pruned the previous working generation")
-    // a successful rebuild prunes the stale sibling generation
-    val g2 = graft.core.Scratch.ensure(base, "docs", "key2", "_SUCCESS")(written)
+    // a successful rebuild prunes the stale generation, and only it
+    val g2 = Scratch.ensure(spark, "csv/probe", "key2", "_SUCCESS")(written)
     assert(!Files.exists(g1), "stale generation survived a successful rebuild")
     assert(Files.exists(g2.resolve("_SUCCESS")))
-    // a `_`-prefixed sibling NAME is out of scope (docs vs docs_v2 — the
-    // flat-layout prefix-collision bug)
-    val v2 = graft.core.Scratch.ensure(base, "docs_v2", "keyX", "_SUCCESS")(written)
-    val g2Again = graft.core.Scratch.ensure(base, "docs", "key2", "_SUCCESS")(written)
-    assert(Files.exists(v2.resolve("_SUCCESS")), "sibling name was pruned")
+    siblings.foreach(g =>
+      assert(Files.exists(g.resolve("_SUCCESS")), s"sibling $g was pruned"))
+    assert(siblings.map(_.getParent).distinct.size === siblings.size)
+    val g2Again = Scratch.ensure(spark, "csv/probe", "key2", "_SUCCESS")(written)
     assert(g2Again == g2)
     // derivation change changes the key (source unchanged)
     val k1 = graft.core.Scratch.key(spark, Sf0001, "schema-v1")

@@ -4,21 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for test suites (one per suite; forked JVM).
-  * Mirrors the driver's session shape: UTC, small shuffle parallelism.
+/** Shared local SparkSession for test suites (one per suite; forked JVM),
+  * built by the engine's own session factory on a fresh warehouse.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // Match Verify/Bench: sorted-bucket layouts (b1, b8) feed merge
-    // joins directly instead of re-sorting on every read.
-    .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_test_wh").toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(warehouse = Some(
+    java.nio.file.Files.createTempDirectory("graft_test_wh").toString))
 
   override def beforeAll(): Unit = {
     super.beforeAll()
