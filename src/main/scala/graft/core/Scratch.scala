@@ -86,6 +86,14 @@ object Scratch {
     gen
   }
 
+  /** An empty per-run directory `<root>/<name>` (a checkpoint, a
+    * staging root): a rerun deletes the previous run's first. */
+  def fresh(spark: SparkSession, name: String): Path = {
+    val dir = root(spark).resolve(name)
+    deleteRecursively(dir)
+    Files.createDirectories(dir)
+  }
+
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
       val it = Files.list(p)

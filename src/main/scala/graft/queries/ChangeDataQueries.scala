@@ -717,8 +717,7 @@ object ChangeDataQueries {
       graft.storage.SnapshotCommit.destroy(s, t)
       graft.core.CatalogUtil.dropOrphanLocation(s, t)
     }
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_st24_ckpt").toString
+    val ckpt = graft.core.Scratch.fresh(s, s"ckpt/$bronze").toString
     Tables.orders(s, d)
       .select(col("o_orderkey").as("k"),
         col("o_orderstatus").as("status"),
@@ -827,8 +826,7 @@ object ChangeDataQueries {
       graft.storage.SnapshotCommit.destroy(s, t)
       graft.core.CatalogUtil.dropOrphanLocation(s, t)
     }
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_st25_ckpt").toString
+    val ckpt = graft.core.Scratch.fresh(s, s"ckpt/$tbl").toString
     Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_orderstatus"),
         col("o_totalprice").cast("double").as("total"))

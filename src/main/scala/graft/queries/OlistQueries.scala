@@ -330,8 +330,7 @@ object OlistQueries {
       val sc = graft.storage.SnapshotCommit
       sc.destroy(s, bronze)
       sc.destroy(s, silver)
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_st23_ckpt").toString
+      val ckpt = graft.core.Scratch.fresh(s, s"ckpt/st23_$sfx").toString
       val silverSrc = OlistSilver.orders(OlistData.orders(s, d))
       val key = col("order_id").cast("bigint")
       def drain(): Unit = {

@@ -210,22 +210,28 @@ object DeletionVectors {
     * drops the catalog table. */
   private def sidecarRowsLocal(spark: SparkSession,
       table: String): Option[Seq[(String, Long, Long)]] =
-    dvDir(spark, table).filter(d => fs(spark, d).exists(d)).map { d =>
-      val f = fs(spark, d)
-      f.listStatus(d).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .flatMap { st =>
-          val rdr = org.apache.parquet.hadoop.ParquetReader.builder(
-            new org.apache.parquet.hadoop.example.GroupReadSupport(),
-            st.getPath)
-            .withConf(spark.sparkContext.hadoopConfiguration).build()
-          try Iterator.continually(rdr.read()).takeWhile(_ != null)
-            .map(g => (g.getString("f", 0),
-              g.getLong("p", 0), g.getLong("v", 0)))
-            .toList
-          finally rdr.close()
-        }
-    }
+    dvDir(spark, table).flatMap(sidecarRowsAt(spark, _))
+
+  /** The (f, p, v) rows of the sidecar directory `d` (any version's
+    * `_dv`), read on the driver; None when `d` does not exist. */
+  private[graft] def sidecarRowsAt(spark: SparkSession,
+      d: Path): Option[Seq[(String, Long, Long)]] = {
+    val f = fs(spark, d)
+    if (!f.exists(d)) None
+    else Some(f.listStatus(d).toSeq
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .flatMap { st =>
+        val rdr = org.apache.parquet.hadoop.ParquetReader.builder(
+          new org.apache.parquet.hadoop.example.GroupReadSupport(),
+          st.getPath)
+          .withConf(spark.sparkContext.hadoopConfiguration).build()
+        try Iterator.continually(rdr.read()).takeWhile(_ != null)
+          .map(g => (g.getString("f", 0),
+            g.getLong("p", 0), g.getLong("v", 0)))
+          .toList
+        finally rdr.close()
+      })
+  }
 
   /** Total bytes of the current sidecar's parquet files — ONE
     * listStatus, no data IO. The r18 driver-side fast paths
@@ -668,6 +674,25 @@ object DeletionVectors {
       registerDv(spark, table)
     }
 
+  /** `VACUUM ... DRY RUN`: the files a vacuum at `cutoff` WOULD
+    * rewrite (the ones holding delete coordinates stamped at or below
+    * it) — the same [[foldedCoords]] over the same driver-read sidecar
+    * rows the real vacuum uses, so no data IO, no Spark job, nothing
+    * touched. Delta's DRY RUN lists up to 1000 paths; same bound here. */
+  def vacuumDryRun(spark: SparkSession, table: String,
+      cutoff: Long): Seq[String] =
+    foldedCoords(sidecarRowsLocal(spark, table).getOrElse(Nil), cutoff)
+      .keys.toSeq.sorted.take(1000)
+
+  /** The coordinates a vacuum at `cutoff` folds: per data-file basename,
+    * the distinct positions deleted at or below it, ascending. The keys
+    * are the files the vacuum rewrites. */
+  private def foldedCoords(rows: Seq[(String, Long, Long)],
+      cutoff: Long): Map[String, Array[Long]] =
+    rows.collect { case (f, p, v) if p >= 0 && v <= cutoff => (f, p) }
+      .groupMap(_._1)(_._2)
+      .map { case (f, ps) => f -> ps.distinct.sorted.toArray }
+
   /** VACUUM with a retention floor: fold every delete stamped `<= cutoff`
     * INTO the data files and drop those sidecar entries — Delta's
     * `VACUUM` trade, where versions older than the retention window stop
@@ -678,22 +703,31 @@ object DeletionVectors {
     * history), vacuum must keep versions `> cutoff` readable, which is
     * the hard part: rewriting a file renumbers `row_index`, so every
     * surviving sidecar entry that points into a rewritten file needs its
-    * physical coordinates REBASED. The rebase map is pure arithmetic,
-    * no data movement: a surviving row's new position is its rank (by
-    * old position) among the file's survivors, computed from a
-    * coordinates-only column-pruned scan. The rewrite itself is
-    * proportional to the AFFECTED files (those holding a folded row) —
-    * untouched files are carried by link, so vacuum cost tracks delete
-    * locality, not table size.
+    * physical coordinates REBASED. The sidecar is read ONCE, on the
+    * driver (as [[stampVersion]] reads it for every DML commit); the
+    * folded coordinates, the affected files (those holding a folded
+    * row), the kept sentinels and the rebased sidecar all derive from
+    * those rows, and [[writeSidecarRows]] writes the result.
     *
     * Write layout: survivors are hash-partitioned by source file and
     * written `partitionBy` a per-file group id, each group sorted by old
     * position — one task owns a group, so each group directory holds
-    * exactly one part file whose row order (hence `row_index`) is the
-    * ascending old-position order the rebase map predicts. The group
-    * files, the carried links AND the rebased sidecar then publish as
-    * ONE snapshot commit — data and vectors can never be observed out
-    * of step.
+    * exactly one part file holding the file's survivors in ascending
+    * old-position order. A file whose every row folds leaves no group
+    * and is not carried. The group files, the carried links AND the
+    * rebased sidecar then publish as ONE snapshot commit — data and
+    * vectors can never be observed out of step.
+    *
+    * Rebase map: survivors keep their old-position order and
+    * `row_index` is dense, so a kept coordinate `(f, p)` of an affected
+    * file becomes `(newName(f), p - |{q in folded(f) : q < p}|)` —
+    * arithmetic on the sidecar rows, no scan. A kept coordinate that is
+    * itself folded (a row deleted again after the cutoff) names a row
+    * the rewrite removed, and is dropped.
+    *
+    * Cost: one scan of the affected files (the staged rewrite); untouched
+    * files are carried by link, so vacuum cost tracks delete locality,
+    * not table size.
     *
     * TWO sentinel rows are appended to the sidecar (synthetic
     * coordinates, p = -1, match no data row — harmless to reads):
@@ -701,63 +735,39 @@ object DeletionVectors {
     * folded — [[restore]]'s reconstructibility check reads exactly this
     * — and `(_hwm, -1, max(cutoff, version))` carries the table's
     * version high-water mark, keeping [[version]] monotonic even when
-    * vacuum folds every real entry (the newSidecar drops all PRIOR
-    * sentinels, so the mark must be restated). They are distinct values
-    * with distinct jobs: a typical vacuum has cutoff < HWM, and folding
-    * the two into one `_floor` stamped at the HWM (the pre-round-10
-    * form) made restore reject every version in (cutoff, HWM] even
-    * though the kept/rebased entries deliberately keep those states
-    * readable.
+    * vacuum folds every real entry (the rebased sidecar drops all PRIOR
+    * `_hwm`/`_floor` rows, so the mark must be restated). They are
+    * distinct values with distinct jobs: a typical vacuum has cutoff <
+    * HWM, and folding the two into one `_floor` stamped at the HWM (the
+    * pre-round-10 form) made restore reject every version in
+    * (cutoff, HWM] even though the kept/rebased entries deliberately
+    * keep those states readable.
     */
-  /** `VACUUM ... DRY RUN`: the files a vacuum at `cutoff` WOULD
-    * rewrite (the ones holding delete coordinates stamped at or below
-    * it), computed from the same sidecar filter the real vacuum uses —
-    * no data IO, nothing touched. Delta's DRY RUN lists up to 1000
-    * paths; same bound here. */
-  def vacuumDryRun(spark: SparkSession, table: String,
-      cutoff: Long): Seq[String] =
-    sidecarDf(spark, table) match {
-      case None => Seq.empty
-      case Some(sidecar) => sidecar
-        .filter(col("v") <= cutoff && col("p") >= 0)
-        .select(col("f")).distinct().limit(1000)
-        .collect().map(_.getString(0)).sorted.toSeq
-    }
-
   def vacuum(spark: SparkSession, table: String, cutoff: Long): Unit = {
-    val sidecar = sidecarDf(spark, table).getOrElse(return)
-    // Renamed keys (same reason as readAt): the survivor anti-join below
-    // mixes these with the USER table's columns, where a column named
-    // `f` or `p` would make the condition ambiguous.
-    val folded = sidecar.filter(col("v") <= cutoff && col("p") >= 0)
-      .select(col("f").as("_fold_f"), col("p").as("_fold_p"))
-      .distinct().cache()
-    val affected = folded.select("_fold_f").distinct()
-      .collect().map(_.getString(0)).sorted
-    if (affected.isEmpty) { folded.unpersist(); return }
+    val rows = sidecarRowsLocal(spark, table).getOrElse(return)
+    val folded = foldedCoords(rows, cutoff)
+    if (folded.isEmpty) return
+    val affected = folded.keys.toSeq.sorted
 
     val hconf = spark.sparkContext.hadoopConfiguration
     val cur = SnapshotCommit.currentLocation(spark, table).get
     val schema = spark.table(table).schema
     val dataCols = schema.fieldNames.toSeq
 
-    // Rebase map from a coordinates-only scan: survivor (f, p) ->
-    // new position = rank among the file's survivors by old position.
-    // Sidecar coordinates key on basenames in the current version.
-    val gfIdx = affected.zipWithIndex.toSeq
-    val gfMap = spark.createDataFrame(gfIdx).toDF("_mf", "_gf")
-    val affectedRows = spark.read.schema(schema)
+    // Survivors of the affected files. Renamed keys (same reason as
+    // readAt): the anti-join mixes these with the USER table's columns,
+    // where a column named `f` or `p` would make the condition ambiguous.
+    val foldedDf = spark.createDataFrame(folded.toSeq.flatMap {
+        case (f, ps) => ps.toSeq.map(p => (f, p)) })
+      .toDF("_fold_f", "_fold_p")
+    val gfIdx = affected.zipWithIndex
+    val survivors = spark.read.schema(schema)
       .parquet(affected.map(n => new Path(cur, n).toUri.getPath): _*)
       .withColumn("_f", substring_index(col("_metadata.file_path"), "/", -1))
       .withColumn("_p", col("_metadata.row_index"))
-    val survivors = affectedRows
-      .join(broadcast(folded),
+      .join(broadcast(foldedDf),
         col("_f") === col("_fold_f") && col("_p") === col("_fold_p"),
         "left_anti")
-    val rebase = survivors.select(col("_f"), col("_p"))
-      .withColumn("_np",
-        (row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("_f")).orderBy(col("_p"))) - 1).cast("long"))
 
     // One part file per affected source file, rows in old-position order.
     val staging = spark.conf.get("spark.sql.warehouse.dir") +
@@ -766,121 +776,85 @@ object DeletionVectors {
     val sfs = stagingPath.getFileSystem(hconf)
     sfs.delete(stagingPath, true)
     survivors
-      .join(broadcast(gfMap), col("_f") === col("_mf"))
+      .withColumn("_gf", element_at(typedLit(gfIdx.toMap), col("_f")))
       .repartition(col("_gf"))
       .sortWithinPartitions(col("_gf"), col("_p"))
       .select(dataCols.map(col) :+ col("_gf"): _*)
       .write.partitionBy("_gf").parquet(staging)
 
-    // New basenames for the rewritten groups. A file whose every row was
-    // folded leaves no staging group — it is simply not carried, and
-    // (having no survivors) can carry no rebased sidecar entry either.
-    val newFileOf: Map[Int, Path] = gfIdx.flatMap { case (_, i) =>
-      val dir = new Path(stagingPath, s"_gf=$i")
-      if (!sfs.exists(dir)) None
-      else {
-        val parts = sfs.listStatus(dir)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-        require(parts.length == 1,
-          s"expected one part file per vacuum group, got ${parts.length} in $dir")
-        Some(i -> parts.head.getPath)
-      }
-    }.toMap
+    // Each affected file with survivors -> (its staged part file, its
+    // new basename); a file whose every row folded leaves no group.
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val newNameOf: Map[String, String] = gfIdx.collect {
-      case (f, i) if newFileOf.contains(i) =>
-        f -> s"vacuum-$nonce-$i-${newFileOf(i).getName}"
+    val rewritten: Map[String, (Path, String)] = gfIdx.flatMap {
+      case (f, i) =>
+        val dir = new Path(stagingPath, s"_gf=$i")
+        if (!sfs.exists(dir)) None
+        else {
+          val parts = sfs.listStatus(dir)
+            .filter(_.getPath.getName.endsWith(".parquet"))
+          require(parts.length == 1, "expected one part file per vacuum " +
+            s"group, got ${parts.length} in $dir")
+          val part = parts.head.getPath
+          Some(f -> (part, s"vacuum-$nonce-$i-${part.getName}"))
+        }
     }.toMap
 
-    // Rebased sidecar for surviving versions, keyed by the new basenames.
-    val newNameMap = spark.createDataFrame(newNameOf.toSeq)
-      .toDF("_rf", "_newf")
-    val affectedSet = spark.createDataFrame(gfIdx).toDF("_af", "_i")
-    val keptEntries = sidecar.filter(col("v") > cutoff && col("p") >= 0)
-    val rebasedAffected = keptEntries
-      .join(broadcast(affectedSet), col("f") === col("_af"))
-      .join(rebase, col("f") === col("_f") && col("p") === col("_p"))
-      .join(broadcast(newNameMap), col("f") === col("_rf"))
-      .select(col("_newf").as("f"), col("_np").as("p"), col("v"))
-    val untouchedEntries = keptEntries
-      .join(broadcast(affectedSet), col("f") === col("_af"), "left_anti")
-      .select("f", "p", "v")
-    val sentinels = spark.createDataFrame(
-      Seq(("_floor", -1L, cutoff),
-          ("_hwm", -1L, math.max(cutoff, version(spark, table)))))
-      .toDF("f", "p", "v")
-    // Timestamp sentinels of versions AT or above the cutoff survive
-    // the fold: those versions stay readable (the cutoff version IS the
-    // floor state), so their TIMESTAMP AS OF anchors must keep
-    // resolving. Keeping the cutoff's own anchor also keeps
-    // versionAtTimestamp's completeness check satisfiable after a
-    // FULL fold (cutoff == hwm restates an _hwm sentinel, which must
-    // stay paired with a stamp — review r16: `> cutoff` bricked every
-    // later TIMESTAMP AS OF on a fully-vacuumed table). Stamps below
-    // the cutoff go with their folded history.
-    // _op:/_add: sentinels of surviving versions ride along with the
-    // timestamps (the change feed above the floor must keep answering);
-    // an _add: whose file the fold just rewrote is REMAPPED to the
-    // rewritten basename, and one whose file was folded away entirely
-    // is dropped with it (its insert rows are physically gone — the
-    // feed fails loudly on that span, like Delta after vacuum).
-    val keptSent = sidecar.filter(col("p") < 0 &&
-        ((col("v") >= cutoff &&
-          (col("f").startsWith(TsPrefix) || col("f").startsWith(OpPrefix) ||
-            col("f").startsWith(AddPrefix) ||
-            col("f").startsWith(LostPrefix))) ||
-          // The COPY INTO idempotence ledger survives every fold —
-          // losing it would re-ingest already-loaded files.
-          col("f").startsWith(CopyPrefix)))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .flatMap {
-        case (f, p, v) if f.startsWith(AddPrefix) =>
-          val n = f.substring(AddPrefix.length)
-          if (!affected.contains(n)) Some((f, p, v)) // untouched file
-          else newNameOf.get(n).map(nn => (s"$AddPrefix$nn", p, v))
-        case other => Some(other)
-      }.toSeq
-    val keptTs =
-      if (keptSent.isEmpty)
-        spark.createDataFrame(Seq(("_x", -1L, 0L))).toDF("f", "p", "v")
-          .limit(0)
-      else spark.createDataFrame(keptSent).toDF("f", "p", "v")
-    val newSidecar = untouchedEntries.unionByName(rebasedAffected)
-      .unionByName(keptTs).unionByName(sentinels)
+    // The rebased sidecar: data entries stamped after the cutoff (the
+    // scaladoc's rebase map); the COPY INTO ledger, always — losing it
+    // would re-ingest loaded files; and the _ts:/_op:/_lost:/_add:
+    // sentinels of versions AT or above the cutoff, which stay readable
+    // (the cutoff version IS the floor state), so their TIMESTAMP AS OF
+    // anchors and change feed keep answering. Keeping the cutoff's own
+    // _ts: also keeps versionAtTimestamp's completeness check satisfiable
+    // after a FULL fold (a `> cutoff` filter made every later TIMESTAMP
+    // AS OF fail). An _add: follows its file's rename, and goes with a
+    // file folded away entirely (the feed then fails loudly on that
+    // span, like Delta).
+    def renamed(f: String): Option[String] =
+      if (folded.contains(f)) rewritten.get(f).map(_._2) else Some(f)
+    val kept = rows.flatMap {
+      case (f, p, v) if p >= 0 =>
+        if (v <= cutoff) None
+        else folded.get(f) match {
+          case None => Some((f, p, v))
+          case Some(ps) =>
+            val i = java.util.Arrays.binarySearch(ps, p)
+            // i < 0: p survives, with -i - 1 folded positions below it.
+            if (i >= 0) None else renamed(f).map(nf => (nf, p + i + 1, v))
+        }
+      case (f, p, v) if f.startsWith(CopyPrefix) => Some((f, p, v))
+      case (f, p, v) if v >= cutoff && f.startsWith(AddPrefix) =>
+        renamed(f.substring(AddPrefix.length))
+          .map(n => (s"$AddPrefix$n", p, v))
+      case (f, p, v) if v >= cutoff && (f.startsWith(TsPrefix) ||
+          f.startsWith(OpPrefix) || f.startsWith(LostPrefix)) =>
+        Some((f, p, v))
+      case _ => None
+    }
+    val newSidecar = kept ++ Seq(("_floor", -1L, cutoff),
+      ("_hwm", -1L, math.max(cutoff, rows.map(_._3).max)))
 
-    // ONE atomic publish: rebased sidecar + rewritten groups + carried
-    // links. The sidecar write executes first (it reads the old files
-    // and old sidecar, both live until the pointer rename); the staged
-    // group files then move in by rename (staging is private to this
-    // call, so renaming them cannot disturb any reader).
-    // maxAttempts = 1: the rewritten groups and rebase map derive from
-    // the PRE-commit sidecar state and cannot rebase onto a concurrent
-    // writer's version — a lost claim must surface as a conflict
-    // (ConcurrentCommitException), exactly as a conflicting Delta
-    // maintenance transaction aborts.
-    // Cleanup in finally: a LOST claim is a documented outcome here
-    // (maxAttempts = 1 surfaces ConcurrentCommitException instead of
-    // rebasing), and without the finally the staged rewrite — a full
-    // copy of every affected file — would sit in _graft_staging until
-    // the next vacuum of this table happened to reclaim it.
+    // ONE atomic publish: rebased sidecar + rewritten groups (moved in
+    // by rename; staging is private to this call) + carried links.
+    // maxAttempts = 1: the rewrite and rebase derive from the PRE-commit
+    // sidecar and cannot rebase onto a concurrent writer's version — a
+    // lost claim surfaces as ConcurrentCommitException, as a conflicting
+    // Delta maintenance transaction aborts; the finally then reclaims
+    // the staged copy of every affected file.
     try SnapshotCommit.commit(spark, table, maxAttempts = 1,
         operation = "VACUUM") { dir =>
-      newSidecar.write.parquet(s"$dir/_dv")
       val to = new Path(dir)
-      gfIdx.foreach { case (f, i) =>
-        if (newFileOf.contains(i))
-          require(sfs.rename(newFileOf(i), new Path(to, newNameOf(f))),
-            s"could not move vacuum group $i into the staged snapshot")
+      writeSidecarRows(spark, new Path(to, "_dv"), newSidecar)
+      rewritten.values.foreach { case (part, name) =>
+        require(sfs.rename(part, new Path(to, name)),
+          s"could not move vacuum group $part into the staged snapshot")
       }
       linkDataFiles(spark, cur, to, except = affected.toSet)
       // Carried files reuse their sidecar rows; the rewritten vacuum
       // groups get footer-recomputed stats (metadata-only).
       StatsSkipping.refreshStats(spark, cur, to)
       SnapshotCommit.carryBatchId(spark, cur, to)
-    } finally {
-      folded.unpersist()
-      sfs.delete(stagingPath, true)
-    }
+    } finally sfs.delete(stagingPath, true)
     pruneImages(spark, table, cutoff) // folded UPDATE images go too
     registerDv(spark, table)
     spark.sql(s"REFRESH TABLE $table")
@@ -891,16 +865,10 @@ object DeletionVectors {
     * sentinel (pre-r16 sidecars) are absent from it. */
   private def tsAnchors(spark: SparkSession,
       table: String): Seq[(Long, Long)] =
-    sidecarDf(spark, table) match {
-      case None => Seq.empty
-      case Some(sc) => sc
-        .filter(col("p") < 0 && col("f").startsWith(TsPrefix))
-        .select(col("v"), col("f"))
-        .collect()
-        .map(r => r.getLong(0) ->
-          r.getString(1).substring(TsPrefix.length).toLong)
-        .toSeq.sortBy(_._1)
-    }
+    sidecarRowsLocal(spark, table).getOrElse(Nil).collect {
+      case (f, p, v) if p < 0 && f.startsWith(TsPrefix) =>
+        v -> f.substring(TsPrefix.length).toLong
+    }.sortBy(_._1)
 
   /** Resolve `TIMESTAMP AS OF <tsMs>` on the delete-version axis: the
     * LATEST delete version committed at or before `tsMs` (Delta's
@@ -930,10 +898,9 @@ object DeletionVectors {
     // Every delete version must carry a timestamp, or resolution would
     // silently skip the unstamped ones. Delete versions are exactly the
     // `_hwm` stamps (one per delete; vacuum restates only the HWM).
-    sidecarDf(spark, table).foreach { sc =>
+    sidecarRowsLocal(spark, table).foreach { rows =>
       val stamped = anchors.map(_._1).toSet
-      val hwms = sc.filter(col("f") === "_hwm").select(col("v"))
-        .collect().map(_.getLong(0)).toSet
+      val hwms = rows.collect { case ("_hwm", _, v) => v }.toSet
       val missing = hwms -- stamped
       require(missing.isEmpty,
         s"TIMESTAMP AS OF on $table: delete version(s) " +

@@ -10,8 +10,9 @@ import org.apache.spark.sql.SparkSession
   * bin-packs them back to the target.
   *
   * The record budget per file derives from the table's OWN bytes/row
-  * (total file bytes / total rows — the observed on-disk encoding, not
-  * a guess), enforced through the `maxRecordsPerFile` write option;
+  * (total file bytes / the rows their parquet footers record — the
+  * observed on-disk encoding, not a guess, read without a scan),
+  * enforced through the `maxRecordsPerFile` write option;
   * partition fan-in uses the same estimate so each task writes about
   * one target-sized file. Values and schema are untouched — this is a
   * pure layout rewrite, the compaction counterpart of
@@ -23,14 +24,10 @@ object Optimize {
     * the same spelling the reference declares. */
   val TargetFileSizeProp = "delta.targetFileSize"
 
-  private def tableFiles(spark: SparkSession, table: String) = {
+  private def tableFiles(spark: SparkSession, table: String): Seq[Path] = {
     val files = spark.table(table).inputFiles
     require(files.nonEmpty, s"$table has no files to compact")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    files.toSeq.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      p.getFileSystem(hconf).getFileStatus(p).getLen
-    }
+    files.toSeq.map(new Path(_))
   }
 
   /** Compact `table` so files land near the target size (bytes). With
@@ -79,13 +76,14 @@ object Optimize {
     }.getOrElse(128L * 1024 * 1024)
     require(target > 0, s"bad target file size: $target")
 
-    val sizes = tableFiles(spark, table)
-    val totalBytes = sizes.sum
-    // The live view: identical to spark.table when no vectors exist.
+    val files = tableFiles(spark, table)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val totalBytes =
+      files.map(p => p.getFileSystem(hconf).getFileStatus(p).getLen).sum
+    // Bytes per PHYSICAL row: the footers count the rows those bytes
+    // encode (DV-masked rows included) — metadata only, no scan.
+    val rows = StatsSkipping.footerRowCount(hconf, files)
     val hadVectors = DeletionVectors.version(spark, table) > 0
-    val live = if (hadVectors) DeletionVectors.read(spark, table)
-               else spark.table(table)
-    val rows = live.count()
     val bytesPerRow = math.max(1.0, totalBytes.toDouble / math.max(1L, rows))
     val recordsPerFile = math.max(1L, (target / bytesPerRow).toLong)
     val partitions = math.max(1,
@@ -122,7 +120,7 @@ object Optimize {
       }
     }
     if (hadVectors) spark.sql(s"DROP TABLE IF EXISTS ${table}__dv")
-    (sizes.length, spark.table(table).inputFiles.length)
+    (files.length, spark.table(table).inputFiles.length)
   }
 
   /** `OPTIMIZE ... ZORDER BY` — the MAINTENANCE half of the clustering

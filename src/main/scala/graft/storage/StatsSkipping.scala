@@ -146,6 +146,12 @@ object StatsSkipping {
       finally pool.shutdown()
     }
 
+  /** The total row count of `files`: the sum of their footers' row
+    * counts ([[footerLines]]' `#rows` lines), metadata only. */
+  private[storage] def footerRowCount(
+      hconf: org.apache.hadoop.conf.Configuration, files: Seq[Path]): Long =
+    footerLinesAll(hconf, files, Nil).map(_.split('\t')(3).toLong).sum
+
   /** One staged parquet file's sidecar lines for `cols` — from its
     * footer (metadata-only, never a data scan): file min/max per column
     * is the row groups' min of mins / max of maxes; a file where any

@@ -150,11 +150,36 @@ private[streaming] object GraftTableOffset {
   * (never orphaning a diff's parent). Legacy full-listing manifests
   * (r16 checkpoints) still parse.
   */
-private[streaming] object GraftTableSource {
+private[graft] object GraftTableSource {
   /** Diff-chain length bound: every MaxChain-th observed version writes
     * a full base manifest (periodic compaction, the FileStreamSourceLog
     * rule) so resolving a state reads at most MaxChain files. */
   val MaxChain = 8
+
+  /** One tiny fingerprint of a version's deletion-vector STATE (`dv` is
+    * its `_dv` directory): an order-independent hash over the sidecar's
+    * DATA entries (p >= 0 — the rows that actually mask data), "-" when
+    * there are none. Content-based, not file-based (r17): a versioned
+    * INSERT re-stamps the sidecar with sentinel rows, which rewrites its
+    * part files without touching any data entry — a name:length
+    * fingerprint would flag every INSERT INTO as a change commit.
+    * DELETE adds entries, RESTORE drops them, VACUUM rebases their
+    * coordinates — all change the content hash.
+    * Read on the driver, no Spark job, once per OBSERVED version; the
+    * value is `<count>:<bit_xor(xxhash64(concat_ws(':', f, p, v)))>`,
+    * as manifests have always recorded it, so old checkpoints restart
+    * without a spurious change commit. */
+  def dvFingerprint(spark: SparkSession, dv: Path): String = {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+    import org.apache.spark.unsafe.types.UTF8String
+    val data = graft.storage.DeletionVectors.sidecarRowsAt(spark, dv)
+      .getOrElse(Nil).filter(_._2 >= 0)
+    if (data.isEmpty) "-"
+    else s"${data.size}:" + data.foldLeft(0L) { case (h, (f, p, v)) =>
+      h ^ XxHash64Function.hash(UTF8String.fromString(s"$f:$p:$v"),
+        org.apache.spark.sql.types.StringType, 42L)
+    }
+  }
 }
 
 class GraftTableSource(sqlContext: SQLContext, metadataPath: String,
@@ -207,31 +232,6 @@ class GraftTableSource(sqlContext: SQLContext, metadataPath: String,
   /** The version's observed state: its DV fingerprint line plus the
     * data-file basenames. */
   private case class VersionState(dvFingerprint: String, names: Set[String])
-
-  /** One tiny fingerprint of the version's deletion-vector STATE: an
-    * order-independent hash over the sidecar's DATA entries (p >= 0 —
-    * the rows that actually mask data). Content-based, not file-based
-    * (r17): a versioned INSERT re-stamps the sidecar with sentinel
-    * rows, which rewrites its part files without touching any data
-    * entry — a name:length fingerprint would flag every INSERT INTO as
-    * a change commit. DELETE adds entries, RESTORE drops them, VACUUM
-    * rebases their coordinates — all change the content hash. One
-    * bounded aggregate per OBSERVED version (the sidecar is broadcast-
-    * small by contract). */
-  private def dvFingerprint(dir: Path): String = {
-    val dv = new Path(dir, "_dv")
-    val f = fs(dv)
-    if (!f.exists(dv)) "-"
-    else {
-      import org.apache.spark.sql.functions.{col, count, expr, lit}
-      val r = spark.read.parquet(dv.toString).filter(col("p") >= 0)
-        .agg(count(lit(1)).as("n"),
-          expr("bit_xor(xxhash64(concat_ws(':', f, p, v)))").as("h"))
-        .head()
-      if (r.getLong(0) == 0L) "-" // no data entries = no masking state
-      else s"${r.getLong(0)}:${if (r.isNullAt(1)) 0L else r.getLong(1)}"
-    }
-  }
 
   /** A manifest file as stored: diff manifests carry the parent they
     * diff against; base (and legacy r16 full-listing) manifests carry
@@ -314,7 +314,7 @@ class GraftTableSource(sqlContext: SQLContext, metadataPath: String,
     }
     f.mkdirs(manifestDir)
     val names = SnapshotCommit.listData(spark, dir).map(_.getName).toSet
-    val fp = dvFingerprint(dir)
+    val fp = GraftTableSource.dvFingerprint(spark, new Path(dir, "_dv"))
     val parent = manifestVersions().filter(_ < v).maxOption
       .filter(q => chainDepth(q) < GraftTableSource.MaxChain)
     val body = parent match {

@@ -693,8 +693,7 @@ object Streams {
     val ss = eventsSession(spark)
     val tbl = s"events_snap_${graft.core.Scratch.pathKey(sfDir)}"
     graft.storage.SnapshotCommit.destroy(ss, tbl)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_st21_ckpt").toString
+    val ckpt = graft.core.Scratch.fresh(ss, s"ckpt/st21_$tbl").toString
     val q = eventsStream(ss, sfDir, splitFiles = 4, maxFilesPerTrigger = 1)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
@@ -828,7 +827,8 @@ object Streams {
     val src = eventsStream(ss, sfDir, splitFiles = 4, maxFilesPerTrigger = 2)
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"), col("value"))
-    val root = java.nio.file.Files.createTempDirectory("graft_apply_changes")
+    val root = graft.core.Scratch.fresh(ss,
+      s"apply_changes/${graft.core.Scratch.pathKey(sfDir)}")
     val cur = new java.util.concurrent.atomic.AtomicReference[String](null)
     val gen = new java.util.concurrent.atomic.AtomicInteger(0)
     val bySeqDesc = org.apache.spark.sql.expressions.Window
@@ -895,7 +895,8 @@ object Streams {
     val src = eventsStream(ss, sfDir, splitFiles = 4, maxFilesPerTrigger = 2)
       .select(col("user_id"), unix_micros(col("ts")).as("valid_from_us"),
         col("event_id"), col("event_type"), col("value"))
-    val root = java.nio.file.Files.createTempDirectory("graft_scd2")
+    val root = graft.core.Scratch.fresh(ss,
+      s"scd2/${graft.core.Scratch.pathKey(sfDir)}")
     val cur = new java.util.concurrent.atomic.AtomicReference[String](null)
     val gen = new java.util.concurrent.atomic.AtomicInteger(0)
     val bySeq = org.apache.spark.sql.expressions.Window

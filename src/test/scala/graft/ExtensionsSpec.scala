@@ -1370,6 +1370,12 @@ class ExtensionsSpec extends SparkSpec {
       s"SELECT count(*) AS n FROM $tbl VERSION AS OF 1")
       .collect()(0).getLong(0) === 19950L,
       "DRY RUN must not fold anything")
+    // It names exactly the files the real VACUUM then replaces.
+    def files() = SnapshotCommit.dataFiles(spark, tbl).map(_._1).toSet
+    val filesBefore = files()
+    GraftSqlParser.sql(spark, s"VACUUM $tbl RETAIN 1 VERSIONS").collect()
+    assert(filesBefore -- files() ===
+      dry.collect { case ("file", f) => f }.toSet)
     spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }

@@ -262,6 +262,51 @@ class GraftTableSourceSpec extends SparkSpec {
     SnapshotCommit.destroy(spark, tbl)
   }
 
+  test("the driver-side DV fingerprint equals the Spark aggregate that " +
+      "earlier manifests recorded, so old checkpoints restart clean") {
+    import org.apache.hadoop.fs.Path
+    import graft.ext.GraftSqlParser
+    import graft.streaming.GraftTableSource
+    val tbl = "gts_fingerprint_tbl"
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+    // The fingerprint as manifests recorded it before it moved to the
+    // driver: one Spark aggregate over the version's `_dv` directory.
+    def sparkFingerprint(dv: Path): String = {
+      val r = spark.read.parquet(dv.toString).filter(col("p") >= 0)
+        .agg(count(lit(1)),
+          expr("bit_xor(xxhash64(concat_ws(':', f, p, v)))"))
+        .head()
+      if (r.getLong(0) == 0L) "-"
+      else s"${r.getLong(0)}:${if (r.isNullAt(1)) 0L else r.getLong(1)}"
+    }
+    def dv() = new Path(SnapshotCommit.currentLocation(spark, tbl).get, "_dv")
+    def check(): String = {
+      val fp = GraftTableSource.dvFingerprint(spark, dv())
+      assert(fp === sparkFingerprint(dv()))
+      fp
+    }
+    SnapshotSink.append(spark, tbl, 0L,
+      spark.range(0, 100).select(col("id"), (col("id") * 2).as("v")))
+    GraftSqlParser.sql(spark, s"INSERT INTO $tbl VALUES (100, 200)")
+    assert(check() === "-", "sentinels alone are no masking state")
+    val d1 = DeletionVectors.delete(spark, tbl, col("id") < 30)
+    // A re-deleting DELETE whose sidecar Spark writes (as part files).
+    spark.conf.set("spark.graft.dv.localSidecarMaxBytes", "0")
+    try DeletionVectors.delete(spark, tbl, col("id") % 4 === 0)
+    finally spark.conf.unset("spark.graft.dv.localSidecarMaxBytes")
+    GraftSqlParser.sql(spark, s"INSERT INTO $tbl VALUES (101, 202)")
+    // ids < 30, then every 4th id of 0..100 again (the raw table).
+    assert(check().startsWith("56:"))
+    // Folds ids < 30: their second entries go, ids 32..100 are rebased.
+    DeletionVectors.vacuum(spark, tbl, d1)
+    assert(check().startsWith("18:"))
+    DeletionVectors.delete(spark, tbl, col("id") === 101)
+    assert(check().startsWith("19:"))
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+  }
+
   test("a CHUNKED initial snapshot masks pre-existing DV deletes in " +
       "EVERY chunk, not just the first (r17 corruption fix)") {
     val tbl = "gts_chunkmask_tbl"

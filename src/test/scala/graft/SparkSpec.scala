@@ -4,12 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for test suites (one per suite; forked JVM),
-  * built by the engine's own session factory on a fresh warehouse.
+/** Shared local SparkSession for test suites, built by the engine's own
+  * session factory. The suites of one forked JVM share one session, so
+  * they share one warehouse ([[SparkSpec.warehouse]]).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = graft.core.Session.local(warehouse = Some(
-    java.nio.file.Files.createTempDirectory("graft_test_wh").toString))
+  lazy val spark: SparkSession =
+    graft.core.Session.local(warehouse = Some(SparkSpec.warehouse))
 
   override def beforeAll(): Unit = {
     super.beforeAll()
@@ -17,4 +18,28 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   val Sf0001 = "/root/testdata/sf0.001"
+}
+
+object SparkSpec {
+
+  /** The JVM's test warehouse: one temp directory, deleted at exit
+    * after the SparkContext has stopped (Spark stops it from a Hadoop
+    * shutdown hook at priority 50; hooks run highest first). */
+  lazy val warehouse: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_test_wh")
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => scala.util.Try(deleteRecursively(dir)), 20)
+    dir.toString
+  }
+
+  /** Delete `p` and everything under it, without following links. */
+  def deleteRecursively(p: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, LinkOption}
+    if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) {
+      val it = Files.list(p)
+      try it.iterator().forEachRemaining(c => deleteRecursively(c))
+      finally it.close()
+    }
+    Files.deleteIfExists(p)
+  }
 }

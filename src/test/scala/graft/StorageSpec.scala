@@ -556,6 +556,109 @@ class StorageSpec extends SparkSpec {
     assert(ids(DeletionVectors.read(spark, tbl)) === (liveBefore - 1L))
   }
 
+  test("vacuum parity: below the HWM, every retained version, the change " +
+      "feed and the sentinels survive, and rebased coordinates match a " +
+      "fresh scan") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.ext.GraftSqlParser
+    import graft.storage.{DeletionVectors, SnapshotCommit}
+    val tbl = "dv_vac_parity_tbl"
+    Seq(tbl, s"${tbl}__dv").foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      graft.core.CatalogUtil.dropOrphanLocation(spark, t)
+    }
+    SnapshotCommit.destroy(spark, tbl)
+    spark.range(0, 1000).select(col("id"), (col("id") * 3).as("payload"))
+      .repartitionByRange(4, col("id"))
+      .write.mode("overwrite").format("parquet").saveAsTable(tbl)
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString(",")).toSeq.sorted
+    // id -> (file, position) in the current version's raw files.
+    def coords(): Map[Long, (String, Long)] = spark.table(tbl)
+      .select(col("id"), col("_metadata.file_name"),
+        col("_metadata.row_index"))
+      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2)))
+      .toMap
+    def sidecar(): Seq[(String, Long, Long)] =
+      spark.table(s"${tbl}__dv").select("f", "p", "v").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+
+    val v1 = DeletionVectors.delete(spark, tbl, col("id") % 10 === 0)
+    // Every row of the file holding id 0 folds (range layout: that file
+    // is [0, maxA]).
+    val fileA = coords()(0L)._1
+    val maxA = coords().collect { case (id, (f, _)) if f == fileA => id }.max
+    val v2 = DeletionVectors.delete(spark, tbl, col("id") <= maxA)
+    GraftSqlParser.sql(spark, s"INSERT INTO $tbl SELECT id, id * 3 AS " +
+      "payload FROM range(2000, 2010)")
+    val copyDir = new java.io.File(SparkSpec.warehouse, "vac_parity_copy")
+    spark.range(3000, 3010).select(col("id"), (col("id") * 3).as("payload"))
+      .coalesce(1).write.mode("overwrite").parquet(copyDir.toString)
+    GraftSqlParser.sql(spark,
+      s"COPY INTO $tbl FROM '$copyDir' FILEFORMAT = PARQUET")
+    // The cutoff: its deletes reach the INSERTed and the COPYed files.
+    val cutoff = DeletionVectors.delete(spark, tbl,
+      (col("id") >= 2000 && col("id") % 2 === 0) || col("id") === 3001)
+    // Above the cutoff: re-deleted coordinates (DELETE reads the raw
+    // table, so rows folded at v1 get second entries), fresh deletes
+    // across the rewritten files, an INSERT and a delete in its file.
+    val v6 = DeletionVectors.delete(spark, tbl,
+      (col("id") % 10 === 0 && col("id") < 500) || col("id") % 7 === 1)
+    GraftSqlParser.sql(spark, s"INSERT INTO $tbl SELECT id, id * 3 AS " +
+      "payload FROM range(4000, 4010)")
+    val hwm = DeletionVectors.delete(spark, tbl,
+      col("id") % 3 === 2 && col("id") > 900)
+    assert((v1, v2, cutoff, v6, hwm) === (1L, 2L, 5L, 6L, 8L))
+    val sideBefore = sidecar()
+    val inserted = sideBefore.collect { case (f, _, v)
+      if v == v2 + 1 && f.startsWith(DeletionVectors.AddPrefix) =>
+        f.stripPrefix(DeletionVectors.AddPrefix) }
+    assert(inserted.nonEmpty && inserted.forall(n => sideBefore.exists {
+      case (f, p, v) => f == n && p >= 0 && v <= cutoff }),
+      "fixture must hold an INSERT whose file the vacuum rewrites")
+    val readsBefore = (cutoff to hwm).map(v =>
+      rows(DeletionVectors.readAt(spark, tbl, v)))
+    val liveBefore = rows(DeletionVectors.read(spark, tbl))
+    val feedBefore = rows(DeletionVectors.changesBetween(spark, tbl,
+      cutoff, hwm))
+    val idAt = coords().map(_.swap)
+    val foldedIds = sideBefore.collect {
+      case (f, p, v) if p >= 0 && v <= cutoff => idAt((f, p)) }.toSet
+    val keptIds = sideBefore.collect {
+      case (f, p, v) if p >= 0 && v > cutoff => (idAt((f, p)), v) }
+    assert(keptIds.exists { case (id, _) => foldedIds(id) },
+      "fixture must hold a re-deleted coordinate")
+    val copied = DeletionVectors.copiedSources(spark, tbl)
+    assert(copied.nonEmpty)
+
+    DeletionVectors.vacuum(spark, tbl, cutoff)
+
+    assert(!SnapshotCommit.dataFiles(spark, tbl).toMap.contains(fileA),
+      "a file whose every row folded must not be carried")
+    assert(rows(DeletionVectors.read(spark, tbl)) === liveBefore)
+    (cutoff to hwm).zip(readsBefore).foreach { case (v, before) =>
+      assert(rows(DeletionVectors.readAt(spark, tbl, v)) === before,
+        s"readAt($v) changed across the vacuum")
+    }
+    assert(rows(DeletionVectors.changesBetween(spark, tbl, cutoff, hwm))
+      === feedBefore)
+    val sideAfter = sidecar()
+    assert(sideAfter.filter(_._1 == "_floor") === Seq(("_floor", -1L, cutoff)))
+    assert(sideAfter.filter(_._1 == "_hwm") === Seq(("_hwm", -1L, hwm)))
+    assert(DeletionVectors.copiedSources(spark, tbl) === copied,
+      "the COPY INTO ledger must survive the fold")
+    // Brute force: each kept entry's row, located by a fresh scan of the
+    // vacuumed files; entries of folded rows are gone.
+    val now = coords()
+    val expected = keptIds.collect { case (id, v) if !foldedIds(id) =>
+      (now(id)._1, now(id)._2, v) }.sorted
+    assert(sideAfter.filter(_._2 >= 0).sorted === expected)
+    assert(DeletionVectors.version(spark, tbl) === hwm)
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+  }
+
   test("bloom index: point probe skippable by bloom where min/max prunes nothing") {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
