@@ -134,7 +134,10 @@ object SnapshotCommit {
     * the finalized `v<N>` when present, else the staging directory the
     * pointer's content records (a commit whose finalization rename has
     * not happened yet — crash recovery, or the instant before
-    * [[register]] replays it).
+    * [[register]] replays it). A version is renamed only from its
+    * staging directory to `v<N>`, so when the staging probe misses,
+    * `v<N>` is probed once more: a [[finalizeDir]] that ran between the
+    * two probes has published it there.
     */
   private[graft] def resolveDir(spark: SparkSession, table: String,
       v: Long): Option[Path] = {
@@ -147,7 +150,7 @@ object SnapshotCommit {
       val name =
         try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
       new Path(root, name)
-    }.toOption.filter(fs.exists)
+    }.toOption.filter(fs.exists).orElse(Some(vd).filter(fs.exists))
   }
 
   /** Highest published version whose snapshot directory exists. */

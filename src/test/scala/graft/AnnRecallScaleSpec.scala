@@ -48,7 +48,7 @@ class AnnRecallScaleSpec extends SparkSpec {
       else bumped.withColumn("embedding",
         expr(s"transform(embedding, (x, i) -> embedding[(i + $r) % $Dims])"))
     }.reduce(_ unionAll _)
-    val dir = Files.createTempDirectory(s"graft_ann_recall_${factor}x")
+    val dir = SparkSpec.tempDir(s"graft_ann_recall_${factor}x")
     replicated.write.mode("overwrite")
       .parquet(dir.resolve("embeddings.parquet").toString)
     val recall = SimilarityQueries.s12AnnRecall.fn(spark, dir.toString)

@@ -57,7 +57,7 @@ class CrossProcessSpec extends SparkSpec {
     if (mode == "append") SnapshotCommit.destroy(spark, tbl)
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
     val barrier =
-      Files.createTempDirectory("graft_xproc_barrier").toString
+      SparkSpec.tempDir("graft_xproc_barrier").toString
     val n = 4
     val lock = "graft.storage.FileLockCommitLock"
     def launch(id: String): Process =
@@ -200,7 +200,7 @@ class CrossProcessSpec extends SparkSpec {
         .coalesce(1).write.parquet(dir)
     }
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val barrier = Files.createTempDirectory("graft_xproc_kill").toString
+    val barrier = SparkSpec.tempDir("graft_xproc_kill").toString
     // One child, n=1: it stages, drops its staged-A marker, then blocks
     // waiting for a peer that never comes — a process frozen at the
     // most dangerous instant (work fully staged, claim not yet made).
@@ -287,7 +287,7 @@ class CrossProcessSpec extends SparkSpec {
       }
       val warehouse = spark.conf.get("spark.sql.warehouse.dir")
       val barrier =
-        Files.createTempDirectory(s"graft_xproc_clone$round").toString
+        SparkSpec.tempDir(s"graft_xproc_clone$round").toString
       def launch(id: String, mode: String, n: Int): Process =
         spawn(Paths.get(barrier, s"out-$id"), "graft.CrossProcessCommitter",
           warehouse, src, id, n.toString, barrier,
@@ -395,7 +395,7 @@ class CrossProcessSpec extends SparkSpec {
     * correctness assertions throw as usual. */
   private def streamRestartAttempt(mode: String, nFiles: Int,
       rowsFor: Int => Seq[Long], expectedIds: Set[Long]): Boolean = {
-    val base = Files.createTempDirectory(s"graft_xproc_stream_$mode")
+    val base = SparkSpec.tempDir(s"graft_xproc_stream_$mode")
     val data = base.resolve("data"); Files.createDirectories(data)
     val ckpt = base.resolve("ckpt").toString
     val out = base.resolve("out").toString

@@ -1293,8 +1293,7 @@ class ExtensionsSpec extends SparkSpec {
         "WHEN NOT MATCHED THEN INSERT *"))
     assert(e3.getMessage.contains("v_pos"), e3.getMessage)
     // COPY INTO: staged files that violate abort before any load.
-    val copyDir = java.nio.file.Files
-      .createTempDirectory("check_copy").toString
+    val copyDir = SparkSpec.tempDir("check_copy").toString
     spark.range(300, 303).select(col("id"), lit(-1L).as("v"))
       .coalesce(1).write.mode("overwrite").parquet(copyDir)
     val e4 = intercept[Exception](GraftSqlParser.sql(spark,

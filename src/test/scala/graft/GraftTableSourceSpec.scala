@@ -38,8 +38,7 @@ class GraftTableSourceSpec extends SparkSpec {
       "restart emits nothing") {
     val tbl = "gts_stream_tbl"
     SnapshotCommit.destroy(spark, tbl)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("gts_ckpt").toString
+    val ckpt = SparkSpec.tempDir("gts_ckpt").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     def collect(b: DataFrame, id: Long): Unit =
       b.select("id").collect().foreach(r => seen.add(r.getLong(0)))
@@ -72,8 +71,7 @@ class GraftTableSourceSpec extends SparkSpec {
       "(crash between WAL write and commit)") {
     val tbl = "gts_replay_tbl"
     SnapshotCommit.destroy(spark, tbl)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("gts_ckpt_replay").toString
+    val ckpt = SparkSpec.tempDir("gts_ckpt_replay").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     def collect(b: DataFrame, id: Long): Unit =
       b.select("id").collect().foreach(r => seen.add(r.getLong(0)))
@@ -112,8 +110,7 @@ class GraftTableSourceSpec extends SparkSpec {
       "resumes mid-diff across a restart") {
     val tbl = "gts_chunk_tbl"
     SnapshotCommit.destroy(spark, tbl)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("gts_ckpt_chunk").toString
+    val ckpt = SparkSpec.tempDir("gts_ckpt_chunk").toString
     // Initial snapshot of 6 files, then a 4-file append while down: a
     // maxFilesPerTrigger=2 stream must drain both in <=2-file batches.
     SnapshotSink.append(spark, tbl, 0L,
@@ -169,8 +166,7 @@ class GraftTableSourceSpec extends SparkSpec {
     val dst = "gts_sink_dst"
     SnapshotCommit.destroy(spark, src)
     SnapshotCommit.destroy(spark, dst)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("gts_ckpt_sink").toString
+    val ckpt = SparkSpec.tempDir("gts_ckpt_sink").toString
     def pump(): Unit = {
       val q = spark.readStream.format("graft-table")
         .option("table", src).load()
@@ -207,8 +203,8 @@ class GraftTableSourceSpec extends SparkSpec {
       spark.readStream.format("graft-table").option("table", src).load()
         .writeStream.format("graft-table").option("table", dst)
         .outputMode("complete")
-        .option("checkpointLocation", java.nio.file.Files
-          .createTempDirectory("gts_bad").toString)
+        .option("checkpointLocation",
+          SparkSpec.tempDir("gts_bad").toString)
         .start()
     }
     SnapshotCommit.destroy(spark, src)
@@ -220,8 +216,7 @@ class GraftTableSourceSpec extends SparkSpec {
     val tbl = "gts_change_tbl"
     spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("gts_ckpt_chg").toString
+    val ckpt = SparkSpec.tempDir("gts_ckpt_chg").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     def collect(b: DataFrame, id: Long): Unit =
       b.select("id").collect().foreach(r => seen.add(r.getLong(0)))
@@ -242,8 +237,7 @@ class GraftTableSourceSpec extends SparkSpec {
     // Delta's masked-snapshot semantics), and a later compaction
     // (removes + re-adds files) is skipped silently while a subsequent
     // append still streams.
-    val ckpt2 = java.nio.file.Files
-      .createTempDirectory("gts_ckpt_skip").toString
+    val ckpt2 = SparkSpec.tempDir("gts_ckpt_skip").toString
     seen.clear()
     drain(tbl, ckpt2, skipChangeCommits = true)(collect)
     assert(seen.asScala.toSet === (0L until 10L).toSet - 3L,
@@ -318,8 +312,7 @@ class GraftTableSourceSpec extends SparkSpec {
       spark.range(0, 60).select(col("id"), (col("id") * 2).as("v"))
         .repartition(6))
     DeletionVectors.delete(spark, tbl, col("id") % 10 === 0)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("gts_ckpt_chunkmask").toString
+    val ckpt = SparkSpec.tempDir("gts_ckpt_chunkmask").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val batches = new java.util.concurrent.atomic.AtomicInteger()
     val q = spark.readStream.format("graft-table")
@@ -352,8 +345,7 @@ class GraftTableSourceSpec extends SparkSpec {
     val tbl = "gts_midchange_tbl"
     spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("gts_ckpt_mid").toString
+    val ckpt = SparkSpec.tempDir("gts_ckpt_mid").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     def collect(b: DataFrame, id: Long): Unit =
       b.select("id").collect().foreach(r => seen.add(r.getLong(0)))
@@ -400,8 +392,7 @@ class GraftTableSourceSpec extends SparkSpec {
       "O(appended files) bytes, with a periodic full base (r17)") {
     val tbl = "gts_diffchain_tbl"
     SnapshotCommit.destroy(spark, tbl)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("gts_ckpt_chain").toString
+    val ckpt = SparkSpec.tempDir("gts_ckpt_chain").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     def collect(b: DataFrame, id: Long): Unit =
       b.select("id").collect().foreach(r => seen.add(r.getLong(0)))
@@ -452,8 +443,7 @@ class GraftTableSourceSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("gts_ckpt_alter").toString
+    val ckpt = SparkSpec.tempDir("gts_ckpt_alter").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     def collect(b: DataFrame, id: Long): Unit =
       b.select("id").collect().foreach(r => seen.add(r.getLong(0)))
@@ -474,7 +464,7 @@ class GraftTableSourceSpec extends SparkSpec {
     // pinned at start): the next advance fails loudly instead of
     // silently dropping the new column from every future batch.
     val liveSrc = new graft.streaming.GraftTableSource(spark.sqlContext,
-      java.nio.file.Files.createTempDirectory("gts_alter_meta").toString,
+      SparkSpec.tempDir("gts_alter_meta").toString,
       tbl, skipChangeCommits = false, maxFilesPerTrigger = None)
     assert(liveSrc.getOffset.isDefined, "pre-alter advance works")
     graft.ext.GraftSqlParser.sql(spark,
@@ -543,8 +533,7 @@ class GraftTableSourceSpec extends SparkSpec {
       s"DELETE FROM $tbl WHERE id = 3 OR id = 4")
     graft.ext.GraftSqlParser.sql(spark, s"INSERT INTO $tbl " +
       "SELECT id, CAST(id * 10 AS BIGINT) AS v FROM range(20, 23)")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("gts_cdc_ckpt").toString
+    val ckpt = SparkSpec.tempDir("gts_cdc_ckpt").toString
     drainCdc(ckpt, Some(0L))
     assert(seen.asScala.toSet === Set(
       (3L, 30L, "delete", 1L), (4L, 40L, "delete", 1L),
@@ -565,8 +554,7 @@ class GraftTableSourceSpec extends SparkSpec {
     assert(seen.isEmpty)
     // DEFAULT start (no startingVersion): a fresh checkpoint serves
     // only changes committed AFTER the stream first advanced.
-    val ckpt2 = java.nio.file.Files
-      .createTempDirectory("gts_cdc_ckpt2").toString
+    val ckpt2 = SparkSpec.tempDir("gts_cdc_ckpt2").toString
     seen.clear()
     drainCdc(ckpt2, None)
     assert(seen.isEmpty, s"default start must skip history, got " +
@@ -650,8 +638,7 @@ class GraftTableSourceSpec extends SparkSpec {
     def drain(opts: Map[String, String]): Set[(Long, String, Long)] = {
       val seen = new java.util.concurrent.ConcurrentLinkedQueue[
         (Long, String, Long)]()
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("gts_cdc_start_ckpt").toString
+      val ckpt = SparkSpec.tempDir("gts_cdc_start_ckpt").toString
       val q = opts.foldLeft(spark.readStream.format("graft-table")
           .option("table", tbl).option("readChangeFeed", "true")) {
           case (r, (k, v)) => r.option(k, v)
@@ -688,8 +675,8 @@ class GraftTableSourceSpec extends SparkSpec {
     intercept[Exception] {
       spark.readStream.format("graft-table").option("table", tbl)
         .option("startingVersion", "1").load()
-        .writeStream.option("checkpointLocation", java.nio.file.Files
-          .createTempDirectory("gts_cdc_start_bad").toString)
+        .writeStream.option("checkpointLocation",
+          SparkSpec.tempDir("gts_cdc_start_bad").toString)
         .trigger(Trigger.AvailableNow())
         .foreachBatch((_: DataFrame, _: Long) => ()).start()
         .awaitTermination()
@@ -746,10 +733,10 @@ class GraftTableSourceSpec extends SparkSpec {
       Thread.sleep(200) // drain the async listener bus
       (bytes.get(), n.get())
     }
-    val (fullIo, fullRows) = measuredDrain(java.nio.file.Files
-      .createTempDirectory("gts_sp_full").toString, filtered = false)
-    val (prunedIo, prunedRows) = measuredDrain(java.nio.file.Files
-      .createTempDirectory("gts_sp_pruned").toString, filtered = true)
+    val (fullIo, fullRows) = measuredDrain(
+      SparkSpec.tempDir("gts_sp_full").toString, filtered = false)
+    val (prunedIo, prunedRows) = measuredDrain(
+      SparkSpec.tempDir("gts_sp_pruned").toString, filtered = true)
     assert(fullRows === 320000L)
     assert(prunedRows === 10000L, "the filter is a filter, not a skip")
     info(f"filtered stream IO: $prunedIo vs full $fullIo " +

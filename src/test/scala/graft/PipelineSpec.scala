@@ -16,7 +16,7 @@ import graft.pipeline.{Dataset, Materialize, Pipeline, PipelineCycleException}
 class PipelineSpec extends SparkSpec {
 
   private lazy val csvDir: String = {
-    val dir = Files.createTempDirectory("graft_pipe_csv").toFile
+    val dir = SparkSpec.tempDir("graft_pipe_csv").toFile
     val f = new java.io.File(dir, "orders.csv")
     val w = new java.io.PrintWriter(f)
     w.println("order_id,amount,status")
@@ -399,7 +399,7 @@ class PipelineSpec extends SparkSpec {
   test("csv schemaLocation: persisted contract, rescue drift, then evolve") {
     import java.nio.file.Files
     import graft.ingest.CsvSource
-    val base = Files.createTempDirectory("graft_csv_evo_spec")
+    val base = SparkSpec.tempDir("graft_csv_evo_spec")
     val data = base.resolve("data"); Files.createDirectories(data)
     val schemas = base.resolve("schemas").toString
     Files.writeString(data.resolve("b1.csv"), "a,b\n1,x\n2,y\n")
@@ -441,7 +441,7 @@ class PipelineSpec extends SparkSpec {
     import java.nio.file.Files
     import org.apache.spark.sql.types._
     import graft.ingest.CsvSource
-    val base = Files.createTempDirectory("graft_csv_conform_spec")
+    val base = SparkSpec.tempDir("graft_csv_conform_spec")
     val data = base.resolve("data"); Files.createDirectories(data)
     val schemas = base.resolve("schemas").toString
     // First contact persists the contract from an unquoted header.
@@ -492,7 +492,7 @@ class PipelineSpec extends SparkSpec {
     // A streaming Table over a source directory with no files: the
     // AvailableNow query terminates without a batch; the contract is an
     // empty TABLE, not TABLE_OR_VIEW_NOT_FOUND for every downstream.
-    val emptyDir = Files.createTempDirectory("graft_empty_stream_src")
+    val emptyDir = SparkSpec.tempDir("graft_empty_stream_src")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.StringType)))
@@ -512,7 +512,7 @@ class PipelineSpec extends SparkSpec {
     import java.nio.file.Files
     import graft.ingest.CsvSource
     import org.apache.spark.sql.streaming.OutputMode
-    val base = Files.createTempDirectory("graft_csv_evo_stream")
+    val base = SparkSpec.tempDir("graft_csv_evo_stream")
     val data = base.resolve("data"); Files.createDirectories(data)
     val schemas = base.resolve("schemas").toString
     Files.writeString(data.resolve("b1.csv"), "a,b\n1,x\n2,y\n")
@@ -543,7 +543,7 @@ class PipelineSpec extends SparkSpec {
     import java.nio.file.Files
     import graft.ingest.CsvSource
     import org.apache.spark.sql.streaming.Trigger
-    val base = Files.createTempDirectory("graft_csv_mfpt")
+    val base = SparkSpec.tempDir("graft_csv_mfpt")
     val data = base.resolve("data"); Files.createDirectories(data)
     val schemas = base.resolve("schemas").toString
     (1 to 4).foreach(i =>
@@ -557,7 +557,7 @@ class PipelineSpec extends SparkSpec {
           sizes += b.count(); () }
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_mfpt_ckpt").toString)
+          SparkSpec.tempDir("graft_mfpt_ckpt").toString)
         .start()
       q.awaitTermination()
       sizes.toSeq

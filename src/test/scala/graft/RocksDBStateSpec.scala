@@ -33,7 +33,7 @@ class RocksDBStateSpec extends SparkSpec {
     val saved = spark.conf.getOption(ProviderKey)
     spark.conf.set(ProviderKey, RocksDB)
     try {
-      val base = Files.createTempDirectory("graft_rocksdb_state")
+      val base = SparkSpec.tempDir("graft_rocksdb_state")
       val data = base.resolve("data"); Files.createDirectories(data)
       val ckpt = base.resolve("ckpt").toString
       val out = base.resolve("out").toString

@@ -32,6 +32,11 @@ object SparkSpec {
     dir.toString
   }
 
+  /** A fresh directory under [[warehouse]], deleted with it at exit. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(warehouse), prefix)
+
   /** Delete `p` and everything under it, without following links. */
   def deleteRecursively(p: java.nio.file.Path): Unit = {
     import java.nio.file.{Files, LinkOption}

@@ -47,8 +47,7 @@ class StorageSpec extends SparkSpec {
     // every row group's [min,max] spans the probe and nothing prunes.
     val names = graft.olist.OlistMaterialized.ensure(spark, Sf0001)
     val fact = spark.table(names.fact)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_clusterby").toString
+    val base = SparkSpec.tempDir("graft_clusterby").toString
     fact.repartitionByRange(8, col("product_key"))
       .sortWithinPartitions(col("product_key"))
       .write.mode("overwrite").parquet(s"$base/clustered")
@@ -245,6 +244,46 @@ class StorageSpec extends SparkSpec {
     assert(out.count() === 7)
     assert(out.select("gen").distinct().collect()
       .map(_.getString(0)).toSeq === Seq("second"))
+  }
+
+  test("resolveDir finds a version whose stage finalizeDir renames to " +
+      "v<N> between its two probes") {
+    // A reader resolves each version it sees while one writer commits
+    // ~200 more. A pointer's directory is always either its stage or
+    // v<N>, so the only legal None is a version prune has dropped (it
+    // keeps the current version and the one before).
+    import java.nio.file.{Files, Paths}
+    import graft.storage.SnapshotCommit
+    val tbl = "snap_resolve_race_tbl"
+    SnapshotCommit.destroy(spark, tbl)
+    val seed = SparkSpec.tempDir("graft_resolve_race").resolve("seed")
+    spark.range(0, 1).toDF("id").coalesce(1).write.parquet(seed.toString)
+    val part = Files.list(seed).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get
+    def commitOne(): Unit = SnapshotCommit.commit(spark, tbl) { dir =>
+      val local = Paths.get(new org.apache.hadoop.fs.Path(dir).toUri.getPath)
+      Files.createDirectories(local)
+      Files.copy(part, local.resolve("part-00000.parquet"))
+    }
+    commitOne()
+    @volatile var writing = true
+    val misses = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val reads = new java.util.concurrent.atomic.AtomicLong()
+    val reader = new Thread(() => while (writing) {
+      SnapshotCommit.currentVersion(spark, tbl).foreach { v =>
+        reads.incrementAndGet()
+        if (SnapshotCommit.resolveDir(spark, tbl, v).isEmpty &&
+            SnapshotCommit.currentVersion(spark, tbl).forall(_ < v + 2))
+          misses.add(v)
+      }
+    })
+    reader.start()
+    try (2 to 200).foreach(_ => commitOne())
+    finally { writing = false; reader.join() }
+    assert(SnapshotCommit.currentVersion(spark, tbl) === Some(200L))
+    assert(reads.get > 200, s"reader resolved only ${reads.get} versions")
+    assert(misses.isEmpty, s"published versions resolved to None: $misses")
+    SnapshotCommit.destroy(spark, tbl)
   }
 
   test("register fast path: a SIBLING session's cache from a dead " +
@@ -457,8 +496,7 @@ class StorageSpec extends SparkSpec {
     // key, so a median-key probe on EITHER column prunes.
     val names = graft.olist.OlistMaterialized.ensure(spark, Sf0001)
     val fact = spark.table(names.fact)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_zorder_proof").toString
+    val base = SparkSpec.tempDir("graft_zorder_proof").toString
     graft.storage.ZOrder
       .layout(fact, Seq("product_key", "seller_key"), partitions = Some(8))
       .write.mode("overwrite").parquet(s"$base/z")
@@ -812,8 +850,7 @@ class StorageSpec extends SparkSpec {
     import graft.storage.SnapshotCommit
     val tbl = "pointat_repair_tbl"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_pointat").toString
+    val base = SparkSpec.tempDir("graft_pointat").toString
     spark.range(0, 5).select(col("id"), lit("winner").as("gen"))
       .write.parquet(s"$base/locA")
     spark.range(0, 9).select(col("id"), lit("ours").as("gen"))
