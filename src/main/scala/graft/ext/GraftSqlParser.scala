@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
 import org.apache.spark.sql.catalyst.catalog.ClusterBySpec
@@ -1067,22 +1067,37 @@ object GraftSqlParser {
     })
   }
 
-  /** The source keys' per-column [min, max] envelope as a pushable
+  /** One pass over a MERGE source's keys: whether a key repeats (NULL
+    * keys group together, as in GROUP BY, so two NULL-key rows repeat)
+    * and the keys' per-column [min, max] envelope as a pushable
     * predicate — the probe-pruning bounds (see the runMerge probe
-    * comment). One 1-row aggregate over the source. None when ANY key
-    * column has no non-null value: such a source equi-matches nothing,
-    * so the caller can skip the probe scan outright. */
-  private def sourceKeyRange(src: DataFrame,
-      keys: Seq[String]): Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{col, lit, max, min}
-    val aggs = keys.flatMap(k =>
-      Seq(min(col(k)).as(s"_lo_$k"), max(col(k)).as(s"_hi_$k")))
-    val r = src.agg(aggs.head, aggs.tail: _*).head()
-    if (keys.indices.exists(i => r.isNullAt(2 * i))) None
-    else Some(keys.zipWithIndex.map { case (k, i) =>
-      col(k) >= lit(r.get(2 * i)) && col(k) <= lit(r.get(2 * i + 1))
-    }.reduce(_ && _))
+    * comment). The envelope is None when ANY key column has no non-null
+    * value: such a source equi-matches nothing, so the caller can skip
+    * the probe scan outright. One grouped aggregate folded to one row. */
+  private def sourceKeyStats(src: DataFrame,
+      keys: Seq[String]): (Boolean, Option[Column]) = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min}
+    val n = "_graft_n"
+    val aggs = max(col(n)) +:
+      keys.flatMap(k => Seq(min(col(k)), max(col(k))))
+    val r = src.groupBy(keys.map(col): _*).agg(count(lit(1)).as(n))
+      .agg(aggs.head, aggs.tail: _*).head()
+    val dup = !r.isNullAt(0) && r.getLong(0) > 1
+    val range =
+      if (keys.indices.exists(i => r.isNullAt(1 + 2 * i))) None
+      else Some(keys.zipWithIndex.map { case (k, i) =>
+        col(k) >= lit(r.get(1 + 2 * i)) && col(k) <= lit(r.get(2 + 2 * i))
+      }.reduce(_ && _))
+    (dup, range)
   }
+
+  /** The distinct `_graft_file` names of a touched-file probe, in ONE
+    * Spark job with no shuffle: each partition dedupes its own names (a
+    * scan split reads one file or a few) and the driver unions them. */
+  private def probeFiles(probe: DataFrame): Set[String] =
+    probe.select("_graft_file").as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+      .collect().toSet
 
   /** Execute one parsed MERGE as a snapshot commit (the Delta execution
     * model: merge produces a new version; readers of older versions are
@@ -1139,13 +1154,27 @@ object GraftSqlParser {
     * on a lost claim the commit protocol re-points at the winner's
     * version and RE-INVOKES the closure, so the merge rebases onto the
     * winner's rows (ExtensionsSpec races two merges to pin this).
+    *
+    * JOB SHAPE of a star upsert into a change-feed table whose deletion
+    * vector holds no coordinate (10 Spark jobs; ExtensionsSpec pins at
+    * most 11):
+    *  - the duplicate check and the key envelope: one grouped aggregate
+    *    over the source, folded to one row (3 jobs);
+    *  - the probe: the source keys' broadcast, then one scan that
+    *    dedupes file names per partition (2);
+    *  - the rewrite: the keys' broadcast, then the write (2);
+    *  - the change-feed images: the keys' broadcast, the matched keys'
+    *    broadcast, then the write (3).
+    * No key set is de-duplicated: a repeated key on the right of a semi-
+    * or anti-join changes nothing. A vector WITH coordinates adds one
+    * sidecar broadcast to each masked scan (probe, rewrite, images).
     */
   private def runMerge(spark: SparkSession, tgt: String, tA: String,
       source: LogicalPlan, sA: String, keys: Seq[String],
       matched: Seq[MatchedClause], notMatched: Seq[NotMatchedClause],
       sync: Boolean): Long = {
-    import org.apache.spark.sql.functions.{array, col, count, explode, lit,
-      struct, when}
+    import org.apache.spark.sql.functions.{array, col, explode, lit, struct,
+      when}
     val sc = graft.storage.SnapshotCommit
     val dv = graft.storage.DeletionVectors
     val IdxCol = "_graft_clause"
@@ -1162,14 +1191,14 @@ object GraftSqlParser {
     keys.foreach(k => require(
       srcDf.columns.exists(_.equalsIgnoreCase(k)),
       s"MERGE source $sA has no key column $k"))
-    if (matched.exists(c => c.cond.isDefined || c.action != DeleteRow)) {
-      val dup = srcDf.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1).limit(1).count()
-      require(dup == 0,
-        s"MERGE source $sA has duplicate keys on ${keys.mkString(",")} — " +
-          "updates would be nondeterministic (Delta's multiple-matches " +
-          "error)")
-    }
+    // The duplicate-key check and the probe's key envelope share one
+    // pass over the source; a MERGE that needs neither never runs it.
+    val checkDup = matched.exists(c => c.cond.isDefined || c.action != DeleteRow)
+    lazy val keyStats = sourceKeyStats(srcDf, keys)
+    if (checkDup) require(!keyStats._1,
+      s"MERGE source $sA has duplicate keys on ${keys.mkString(",")} — " +
+        "updates would be nondeterministic (Delta's multiple-matches " +
+        "error)")
     sc.commit(spark, tgt, operation = "MERGE") { dir =>
       val stage = new org.apache.hadoop.fs.Path(dir)
       val cur = sc.currentLocation(spark, tgt).getOrElse(
@@ -1190,12 +1219,16 @@ object GraftSqlParser {
         keys.foreach(k => require(
           rawSchema.fieldNames.exists(_.equalsIgnoreCase(k)),
           s"MERGE target $tgt has no key column $k"))
-        val srcKeys = srcDf.select(keys.map(col): _*).distinct()
+        // Source keys as they are: a repeated key on the right of a semi-
+        // or anti-join changes nothing, so no distinct (a shuffle and a
+        // job) is paid for it.
+        val srcKeys = srcDf.select(keys.map(col): _*)
         // Probe. The semi-join carries no literal bounds StatsSkippingRule
-        // could prune with, so a target WITH a stats sidecar restricts the
-        // probe scan to the source keys' per-column [min, max] (Delta's
-        // source-stats file pruning: one tiny agg on the source, pushed
-        // down onto the scan); a stats-less target skips the agg (it could
+        // could prune with, so the probe scan is restricted to the source
+        // keys' per-column [min, max] (Delta's source-stats file pruning,
+        // pushed down onto the scan) whenever the envelope is at hand:
+        // the duplicate check computed it, or the target has a stats
+        // sidecar to prune with. Otherwise the pass is skipped (it could
         // prune nothing, and an extra job per statement is real cost in
         // per-micro-batch MERGE loops). Null keys never equi-match; an
         // all-null or empty source skips the probe scan entirely.
@@ -1203,18 +1236,16 @@ object GraftSqlParser {
           if (matched.isEmpty) Set.empty
           else {
             val range =
-              if (graft.storage.StatsSkipping.loadStats(spark, cur)
-                  .exists(_.nonEmpty)) sourceKeyRange(srcDf, keys)
+              if (checkDup || graft.storage.StatsSkipping.loadStats(spark,
+                  cur).exists(_.nonEmpty)) keyStats._2
               else Some(lit(true))
             range match {
               case None => Set.empty
               case Some(rangePred) =>
-                dv.readWithProvenance(spark, tgt, "_graft_file")
+                probeFiles(dv.readWithProvenance(spark, tgt, "_graft_file")
                   .filter(rangePred)
                   .select(keys.map(col) :+ col("_graft_file"): _*)
-                  .join(srcKeys, keys, "left_semi")
-                  .select("_graft_file").distinct()
-                  .collect().map(_.getString(0)).toSet
+                  .join(srcKeys, keys, "left_semi"))
             }
           }
         val touchedFiles = allFiles.filter(p => touched(p.getName))
@@ -1255,7 +1286,7 @@ object GraftSqlParser {
         // probe) pays the full live-key scan, its only target read.
         lazy val insertOut = {
           val liveKeys = (if (matched.nonEmpty) touchedLive
-            else dv.read(spark, tgt)).select(keys.map(col): _*).distinct()
+            else dv.read(spark, tgt)).select(keys.map(col): _*)
           srcDf.alias(sA).join(liveKeys, keys, "left_anti")
             .withColumn(IdxCol, clauseIndex(notMatched.map(_.cond)))
             .filter(col(IdxCol) > 0)
@@ -1287,14 +1318,17 @@ object GraftSqlParser {
         // the same construction as the rewrite.
         def images: DataFrame =
           if (starUpsert) {
-            // Every live matched key lives in the touched subset, so its
-            // distinct keys split the source into updates and inserts.
-            val liveKeys = touchedLive.select(keys.map(col): _*).distinct()
+            // Every live matched key lives in the touched subset, so the
+            // MATCHED keys (touched live keys the source holds — at most
+            // the source's size, not the touched files') split the source
+            // into updates and inserts.
+            val matchedKeys = touchedLive.select(keys.map(col): _*)
+              .join(srcKeys, keys, "left_semi")
             touchedLive.join(srcKeys, keys, "left_semi")
               .withColumn("change_type", lit("update_preimage"))
-              .unionByName(aligned.join(liveKeys, keys, "left_semi")
+              .unionByName(aligned.join(matchedKeys, keys, "left_semi")
                 .withColumn("change_type", lit("update_postimage")))
-              .unionByName(aligned.join(liveKeys, keys, "left_anti")
+              .unionByName(aligned.join(matchedKeys, keys, "left_anti")
                 .withColumn("change_type", lit("insert")))
           } else {
             val matchedImgs = if (matched.isEmpty) None else Some {
@@ -1396,9 +1430,7 @@ object GraftSqlParser {
         s"UPDATE $tbl: WHERE predicate must be deterministic " +
           "(rand()/sampled subqueries evaluate differently between the " +
           "file probe and the rewrite)")
-      val touched: Set[String] = probe
-        .select("_graft_file").distinct()
-        .collect().map(_.getString(0)).toSet
+      val touched: Set[String] = probeFiles(probe)
       val touchedFiles = allFiles.filter(p => touched(p.getName))
       val touchedLive =
         if (touchedFiles.isEmpty) spark.table(tbl).limit(0)

@@ -506,7 +506,9 @@ class Pipeline {
               try {
                 val target = spark.table(name)
                 val liveFiles = target.inputFiles.map(local).toSet
-                val batchKeys = batch.select(keys.map(batch.col): _*).distinct()
+                // No distinct: a repeated key on the right of the semi-
+                // and anti-join below changes neither result.
+                val batchKeys = batch.select(keys.map(batch.col): _*)
                 val touched = target
                   .withColumn("_graft_file",
                     org.apache.spark.sql.functions.input_file_name())
@@ -577,7 +579,7 @@ class Pipeline {
               if (!spark.catalog.tableExists(qName)) incoming
               else incoming.unionByName(
                 spark.table(qName).join(
-                  incoming.select(keys.map(incoming.col): _*).distinct(),
+                  incoming.select(keys.map(incoming.col): _*),
                   keys, "left_anti"))
             val qStage = spark.conf.get("spark.sql.warehouse.dir") +
               s"/_graft_staging/${qName}_merge"

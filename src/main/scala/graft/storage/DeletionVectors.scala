@@ -49,10 +49,11 @@ import org.apache.hadoop.fs.Path
   *
   * Scale: delete cost = one column-pruned scan + a bounded sidecar
   * rewrite of matched coordinates; read overhead = a broadcast hash
-  * anti-join probe per row; restore touches only the sidecar. Single
-  * writer assumed (the Delta difference is multi-writer arbitration —
-  * its log serializes concurrent commits); the query-visible semantics
-  * are identical.
+  * anti-join probe per row, and nothing while the sidecar holds only
+  * sentinel rows (one footer read decides); restore touches only the
+  * sidecar. Single writer assumed (the Delta difference is multi-writer
+  * arbitration — its log serializes concurrent commits); the
+  * query-visible semantics are identical.
   */
 object DeletionVectors {
 
@@ -379,7 +380,8 @@ object DeletionVectors {
     committed
   }
 
-  /** The live view: table rows minus the whole deletion vector. */
+  /** The live view: table rows minus the whole deletion vector — the
+    * plain table scan while the vector holds no coordinate (maskAt). */
   def read(spark: SparkSession, table: String): DataFrame =
     readAt(spark, table, Long.MaxValue)
 
@@ -392,7 +394,9 @@ object DeletionVectors {
     * read DIRECTLY under that schema: a column added since the anchor
     * is absent, a column dropped since still reads from the files that
     * carry its bytes (r17 — the live-schema projection the pre-drop
-    * code used cannot resurrect a dropped column).
+    * code used cannot resurrect a dropped column). While the current
+    * sidecar holds no data coordinate, no version subtracts anything
+    * and the read is the plain scan (maskAt).
     */
   def readAt(spark: SparkSession, table: String, v: Long): DataFrame = {
     val ledger = SnapshotCommit.schemaVersions(spark, table)
@@ -411,7 +415,8 @@ object DeletionVectors {
     * read paths (StatsSkipping.readRange's pruned file scan) from
     * resurrecting deleted rows. Coordinates key on file BASENAME +
     * row index, so a scan over any subset of the version's files masks
-    * correctly; a table with no sidecar passes through untouched.
+    * correctly; a table whose sidecar holds no coordinate passes
+    * through untouched.
     */
   private[graft] def mask(spark: SparkSession, table: String,
       base: DataFrame): DataFrame = maskAt(spark, table, base, Long.MaxValue)
@@ -563,9 +568,38 @@ object DeletionVectors {
     if (f.listStatus(root).isEmpty) f.delete(root, false)
   }
 
+  /** Does the current sidecar hold a DATA coordinate (p >= 0)? Decided
+    * from the `_dv` files' parquet footers alone — the `p` column's
+    * min/max statistics, no row read and no Spark job — so the check
+    * costs the same at any sidecar size. A non-empty file whose footer
+    * gives `p` no usable range counts as holding coordinates. */
+  private def holdsCoordinates(spark: SparkSession, table: String): Boolean =
+    dvDir(spark, table).exists { d =>
+      val files =
+        try fs(spark, d).listStatus(d).toSeq
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          .map(_.getPath)
+        catch { case _: java.io.FileNotFoundException => Nil }
+      val lines = StatsSkipping.footerLinesAll(
+        spark.sparkContext.hadoopConfiguration, files, Seq("p"))
+        .map(_.split('\t'))
+      val rows = lines.collect {
+        case Array(f, StatsSkipping.RowsCol, _, n, _) => f -> n.toLong }.toMap
+      val pMax = lines.collect {
+        case Array(f, "p", "long", _, mx) => f -> mx.toLong }.toMap
+      files.exists(f => rows(f.getName) > 0 &&
+        pMax.get(f.getName).forall(_ >= 0))
+    }
+
+  /** `base` minus the sidecar coordinates stamped <= `v`. The IDENTITY
+    * while the sidecar holds no data coordinate ([[holdsCoordinates]]):
+    * sentinel rows (p = -1) match no data row, so a table that was only
+    * ever inserted into, updated or merged reads with no join and no
+    * broadcast job. */
   private def maskAt(spark: SparkSession, table: String, base: DataFrame,
-      v: Long): DataFrame = {
-    sidecarDf(spark, table) match {
+      v: Long): DataFrame =
+    if (!holdsCoordinates(spark, table)) base
+    else sidecarDf(spark, table) match {
       case None => base
       // The sidecar's key columns are RENAMED before the join: a user
       // table legitimately carrying a column named `f` or `p` would
@@ -580,7 +614,6 @@ object DeletionVectors {
           "left_anti")
         .drop("_dv_file", "_dv_pos")
     }
-  }
 
   /** RESTORE TABLE ... TO VERSION AS OF `v`: one atomic commit with the
     * data files linked unchanged and every DATA sidecar entry stamped

@@ -123,7 +123,7 @@ object StatsSkipping {
     * tail). Work is file-proportional to the STATEMENT's own output,
     * never the table. Deterministic: per-file results concatenate in
     * input order (and the sidecar writer sorts lines anyway). */
-  private def footerLinesAll(
+  private[storage] def footerLinesAll(
       hconf: org.apache.hadoop.conf.Configuration, files: Seq[Path],
       cols: Seq[String]): Seq[String] =
     if (files.sizeIs <= 1) files.flatMap(footerLines(hconf, _, cols))
@@ -148,7 +148,7 @@ object StatsSkipping {
 
   /** The total row count of `files`: the sum of their footers' row
     * counts ([[footerLines]]' `#rows` lines), metadata only. */
-  private[storage] def footerRowCount(
+  private[graft] def footerRowCount(
       hconf: org.apache.hadoop.conf.Configuration, files: Seq[Path]): Long =
     footerLinesAll(hconf, files, Nil).map(_.split('\t')(3).toLong).sum
 

@@ -54,11 +54,24 @@ object SnapshotSink {
     * duplicate version. */
   private final class AlreadyCommitted extends RuntimeException
 
+  /** Control-flow signal: the batch wrote no row into a table that
+    * already has a version — there is nothing to publish. */
+  private final class EmptyBatch extends RuntimeException
+
   /** Commit `batch` as the table's next version iff `batchId` has not
-    * already been committed (idempotent under micro-batch replay).
-    * Returns true when a commit happened. Intended as a foreachBatch
-    * body: `.foreachBatch((b, id) => SnapshotSink.append(spark, tbl,
-    * id, b))`.
+    * already been committed (idempotent under micro-batch replay) and
+    * the batch holds a row. Returns true when a commit happened.
+    * Intended as a foreachBatch body: `.foreachBatch((b, id) =>
+    * SnapshotSink.append(spark, tbl, id, b))`.
+    *
+    * An EMPTY batch into a table that already has a version publishes
+    * nothing: no version, no zero-row file (a watermarked stream runs a
+    * no-data batch after each batch that moves its watermark). Its rows
+    * are known only once written, so the write runs and the staged
+    * files' footers decide; the stage is then discarded. The batch id
+    * is not recorded, which keeps exactly-once: a replay of the batch
+    * is empty again and publishes nothing again. A table's FIRST batch
+    * commits even when empty, so the table exists with its schema.
     *
     * The idempotence check runs INSIDE the commit closure, against the
     * version the claim will validate: two writers racing the same
@@ -103,7 +116,8 @@ object SnapshotSink {
         //    AFTER the join (it lists the staged files, so it needs the
         //    batch's output in place). An EMPTY batch still writes one
         //    schema-bearing file (SPARK-23271), so an empty first
-        //    version registers like any other (PipelineSpec pins it).
+        //    version registers like any other (PipelineSpec pins it);
+        //    a later empty batch stops here (see the scaladoc).
         var carried = Set.empty[String]
         graft.core.Overlap.overlapped {
           batch.write.mode("append").parquet(stage)
@@ -117,8 +131,11 @@ object SnapshotSink {
         // change-axis stamp below names them so table_changes (and the
         // streaming change feed) serve this micro-batch as inserts,
         // exactly what Delta's CDF does for streaming writes.
-        val appended = SnapshotCommit.listData(spark, stageP).map(_.getName)
-          .filterNot(carried)
+        val appended = SnapshotCommit.listData(spark, stageP)
+          .filterNot(p => carried(p.getName))
+        if (prev.isDefined && graft.storage.StatsSkipping.footerRowCount(
+            spark.sparkContext.hadoopConfiguration, appended) == 0)
+          throw new EmptyBatch
         prev.foreach(p =>
           graft.storage.StatsSkipping.refreshStats(spark, p, stageP))
         // Stamp the CHANGE AXIS (r17): one version per micro-batch,
@@ -128,7 +145,7 @@ object SnapshotSink {
         // Every existing delete coordinate is kept (stampVersion's
         // contract), replacing the previous physical _dv carry.
         graft.storage.DeletionVectors.stampVersion(spark, table,
-          stageP, op = "WRITE", added = appended)
+          stageP, op = "WRITE", added = appended.map(_.getName))
         // 3. The progress marker, atomic WITH the rows it covers.
         val out = fs.create(new Path(stageP, BatchIdFile), false)
         try out.write(batchId.toString.getBytes("UTF-8"))
@@ -138,6 +155,6 @@ object SnapshotSink {
       // version's freshly-stamped sidecar (the DML realign contract).
       graft.storage.DeletionVectors.realign(spark, table)
       true
-    } catch { case _: AlreadyCommitted => false }
+    } catch { case _: AlreadyCommitted | _: EmptyBatch => false }
   }
 }

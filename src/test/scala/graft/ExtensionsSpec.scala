@@ -1767,4 +1767,222 @@ class ExtensionsSpec extends SparkSpec {
     assert(SnapshotCommit.currentVersion(spark, plain).isEmpty)
     spark.sql(s"DROP TABLE IF EXISTS $plain")
   }
+
+  /** A change-feed table shaped like the lifecycle benchmark's: eight
+    * range-clustered files of (k, cust, status, total, prio), then one
+    * INSERT, so its `_dv` sidecar holds sentinel rows only. */
+  private def sentinelOnlyTable(tbl: String, rows: Long = 20000L): Unit = {
+    import org.apache.spark.sql.functions._
+    import graft.ext.GraftSqlParser
+    import graft.storage.SnapshotCommit
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+    SnapshotCommit.commit(spark, tbl) { dir =>
+      spark.range(0, rows).select(col("id").as("k"),
+          (col("id") % 500).as("cust"), lit("O").as("status"),
+          (col("id") * 1.5).as("total"), lit("1-URGENT").as("prio"))
+        .repartitionByRange(8, col("k")).sortWithinPartitions("k")
+        .write.parquet(dir)
+    }
+    SnapshotCommit.register(spark, tbl)
+    GraftSqlParser.sql(spark, s"ALTER TABLE $tbl SET TBLPROPERTIES " +
+      "('delta.enableChangeDataFeed' = 'true')")
+    GraftSqlParser.sql(spark,
+      s"INSERT INTO $tbl VALUES ($rows, 1, 'N', 10.0D, '2-HIGH')")
+  }
+
+  /** A star-upsert MERGE source view: 50 live keys spread over every
+    * file of [[sentinelOnlyTable]], then 50 new keys. */
+  private def upsertSource(view: String, rows: Long = 20000L): Unit = {
+    val hit = (0 until 50).map(i => i * (rows / 50) + 7)
+    val fresh = (0 until 50).map(i => rows + 1 + i)
+    val values = (hit ++ fresh).map(k =>
+      s"($k, 3, 'M', ${k * 2}.25D, '3-MEDIUM')").mkString(", ")
+    spark.sql(s"CREATE OR REPLACE TEMP VIEW $view AS SELECT * FROM " +
+      s"VALUES $values AS s(k, cust, status, total, prio)")
+  }
+
+  test("an empty deletion vector costs no job: on a change-feed table " +
+      "whose sidecar holds only sentinels, a masked read runs 1 job, an " +
+      "UPDATE at most 4 and a star-upsert MERGE at most 11") {
+    import org.apache.spark.sql.functions._
+    import graft.ext.GraftSqlParser
+    import graft.storage.{DeletionVectors, SnapshotCommit}
+    val tbl = "dv_jobs_tbl"
+    sentinelOnlyTable(tbl)
+    val (readJobs, n) = jobsOf(DeletionVectors.read(spark, tbl)
+      .filter(col("cust") === 7).collect().length)
+    assert(n === 40)
+    assert(readJobs.size === 1, readJobs.mkString("\n"))
+    val (updJobs, _) = jobsOf(GraftSqlParser.sql(spark,
+      s"UPDATE $tbl SET total = total + 1.5D, status = 'U' WHERE k % 97 = 5"))
+    assert(updJobs.size <= 4, updJobs.mkString("\n"))
+    upsertSource("dv_jobs_src")
+    val vPre = DeletionVectors.version(spark, tbl)
+    val (mrgJobs, _) = jobsOf(GraftSqlParser.sql(spark,
+      s"MERGE INTO $tbl t USING dv_jobs_src s ON t.k = s.k " +
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"))
+    assert(mrgJobs.size <= 11, mrgJobs.mkString("\n"))
+    // The feed splits the source by the matched keys: 50 update pairs
+    // (pre-images hold the old rows), 50 inserts.
+    val hit = (0 until 50).map(_ * 400L + 7).toSet
+    val feed = GraftSqlParser.sql(spark, "SELECT k, status, total, " +
+      s"change_type FROM table_changes('$tbl', $vPre, ${vPre + 1})").collect()
+      .groupBy(_.getString(3))
+    assert(feed.keySet === Set("update_preimage", "update_postimage", "insert"))
+    assert(feed("update_preimage").map(_.getLong(0)).toSet === hit)
+    assert(feed("update_preimage").forall(r => r.getString(1) != "M" &&
+      r.getDouble(2) === r.getLong(0) * 1.5 +
+        (if (r.getString(1) == "U") 1.5 else 0.0)))
+    assert(feed("update_postimage").map(_.getLong(0)).toSet === hit)
+    assert(feed("insert").map(_.getLong(0)).toSet ===
+      (0 until 50).map(20001L + _).toSet)
+    assert((feed("update_postimage") ++ feed("insert")).forall(r =>
+      r.getString(1) == "M" && r.getDouble(2) === r.getLong(0) * 2 + 0.25))
+    assert(feed.values.forall(_.length == 50))
+    val live = DeletionVectors.read(spark, tbl)
+    assert(live.count() === 20001L + 50L)
+    assert(live.filter(col("status") === "M").count() === 100L)
+    assert(live.filter(col("status") === "U").count() ===
+      (0L until 20000L).count(_ % 97 == 5) -
+        (0 until 50).map(_ * 400L + 7).count(_ % 97 == 5))
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+  }
+
+  test("a deletion vector with coordinates still masks every path: " +
+      "reads, VERSION AS OF, UPDATE, MERGE and its change feed hide the " +
+      "deleted rows, also under a `_dv` file written without statistics") {
+    import org.apache.spark.sql.functions._
+    import graft.ext.GraftSqlParser
+    import graft.storage.{DeletionVectors, SnapshotCommit}
+    val tbl = "dv_mask_paths_tbl"
+    sentinelOnlyTable(tbl)
+    def live = DeletionVectors.read(spark, tbl)
+    def countAsOf(v: Long) = GraftSqlParser.sql(spark,
+      s"SELECT count(*) AS n FROM $tbl VERSION AS OF $v")
+      .collect()(0).getLong(0)
+    val vBefore = DeletionVectors.version(spark, tbl)
+    GraftSqlParser.sql(spark, s"DELETE FROM $tbl WHERE k % 10 = 3")
+    val vDel = DeletionVectors.version(spark, tbl)
+    assert(live.count() === 18001L)
+
+    // Rewrite the sidecar without column statistics: its footers can no
+    // longer show that it holds coordinates, so the mask must stay.
+    val dvDir = new org.apache.hadoop.fs.Path(
+      SnapshotCommit.currentLocation(spark, tbl).get, "_dv")
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val fs = dvDir.getFileSystem(hconf)
+    val rows = DeletionVectors.sidecarRowsAt(spark, dvDir).get
+    fs.listStatus(dvDir).foreach(st => fs.delete(st.getPath, false))
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message spark_schema { optional binary f (UTF8); " +
+        "optional int64 p; optional int64 v; }")
+    val file = new org.apache.hadoop.fs.Path(dvDir, "part-00000-nostats.parquet")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
+        .fromPath(file, hconf))
+      .withConf(hconf).withType(schema).withStatisticsEnabled(false).build()
+    try rows.foreach { case (f, p, v) =>
+      val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
+      g.add("f", f); g.add("p", p); g.add("v", v)
+      w.write(g)
+    } finally w.close()
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, hconf))
+    try {
+      import scala.jdk.CollectionConverters._
+      val chunks = footer.getFooter.getBlocks.asScala
+        .flatMap(_.getColumns.asScala)
+      assert(chunks.nonEmpty && chunks.forall { c =>
+        val st = c.getStatistics
+        st == null || st.isEmpty || !st.hasNonNullValue
+      }, "the rewritten sidecar must carry no usable statistics")
+    } finally footer.close()
+    spark.sql(s"REFRESH TABLE ${tbl}__dv")
+    assert(live.count() === 18001L, "a stats-less sidecar must still mask")
+    assert(live.filter(col("k") % 10 === 3).count() === 0L)
+    assert(countAsOf(vBefore) === 20001L)
+    assert(countAsOf(vDel) === 18001L)
+
+    // UPDATE over masked rows: updates only live ones, resurrects none.
+    GraftSqlParser.sql(spark, s"UPDATE $tbl SET status = 'U' WHERE k < 100")
+    assert(live.filter(col("status") === "U").count() === 90L)
+    assert(live.count() === 18001L)
+    assert(countAsOf(vDel) === 18001L)
+
+    // MERGE: a deleted key inserts, a live key updates, a new key
+    // inserts; the feed's images follow the same split.
+    val vPre = DeletionVectors.version(spark, tbl)
+    spark.sql(s"CREATE OR REPLACE TEMP VIEW dv_mask_src AS SELECT * FROM " +
+      "VALUES (13L, 3L, 'M', 1.0D, 'x'), (14L, 3L, 'M', 2.0D, 'x'), " +
+      "(50000L, 3L, 'M', 3.0D, 'x') AS s(k, cust, status, total, prio)")
+    GraftSqlParser.sql(spark, s"MERGE INTO $tbl t USING dv_mask_src s " +
+      "ON t.k = s.k WHEN MATCHED THEN UPDATE SET * " +
+      "WHEN NOT MATCHED THEN INSERT *")
+    val vMrg = DeletionVectors.version(spark, tbl)
+    assert(live.count() === 18003L)
+    assert(live.filter(col("k") % 10 === 3).select("k").collect()
+      .map(_.getLong(0)).toSet === Set(13L))
+    assert(live.filter(col("status") === "M").count() === 3L)
+    val feed = GraftSqlParser.sql(spark, "SELECT k, status, change_type " +
+      s"FROM table_changes('$tbl', $vPre, $vMrg)").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    assert(feed === Set((14L, "U", "update_preimage"),
+      (14L, "M", "update_postimage"), (13L, "M", "insert"),
+      (50000L, "M", "insert")), feed.toString)
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+  }
+
+  test("count(*) over the live view of a sentinel-only table is answered " +
+      "from metadata, with no scan in the plan") {
+    import org.apache.spark.sql.functions._
+    import graft.ext.GraftSqlParser
+    import graft.storage.{DeletionVectors, SnapshotCommit, StatsSkipping}
+    val tbl = "dv_sentinel_count_tbl"
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+    StatsSkipping.commitWithStats(spark, tbl, "id") { stage =>
+      spark.range(0, 3000).select(col("id"), (col("id") % 7).as("g"))
+        .repartitionByRange(4, col("id")).write.parquet(stage)
+    }
+    SnapshotCommit.register(spark, tbl)
+    GraftSqlParser.sql(spark, s"INSERT INTO $tbl VALUES (5000, 1), (5001, 2)")
+    GraftSqlParser.sql(spark, s"UPDATE $tbl SET g = 9 WHERE id < 10")
+    assert(DeletionVectors.version(spark, tbl) === 2L)
+    StatsSkipping.installRule(spark)
+    val n = DeletionVectors.read(spark, tbl).agg(count(lit(1)).as("n"))
+    assert(n.collect()(0).getLong(0) === 3002L)
+    val plan = n.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0)
+    assert(!plan.contains("Scan parquet"), plan)
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+  }
+
+  test("MERGE with duplicate source keys fails before publishing, also " +
+      "when the only repeat is two NULL-key rows") {
+    import graft.ext.GraftSqlParser
+    import graft.storage.SnapshotCommit
+    val tbl = "dv_merge_dup_tbl"
+    sentinelOnlyTable(tbl, rows = 1000L)
+    val before = SnapshotCommit.currentVersion(spark, tbl)
+    val files = SnapshotCommit.dataFiles(spark, tbl).map(_._1).sorted
+    Seq("(5L, 1L, 'M', 1.0D, 'x'), (5L, 2L, 'M', 2.0D, 'x')",
+      "(CAST(NULL AS BIGINT), 1L, 'M', 1.0D, 'x'), " +
+        "(CAST(NULL AS BIGINT), 2L, 'M', 2.0D, 'x'), (7L, 3L, 'M', 3.0D, 'x')"
+    ).foreach { values =>
+      spark.sql(s"CREATE OR REPLACE TEMP VIEW dv_merge_dup_src AS SELECT * " +
+        s"FROM VALUES $values AS s(k, cust, status, total, prio)")
+      val e = intercept[Exception](GraftSqlParser.sql(spark,
+        s"MERGE INTO $tbl t USING dv_merge_dup_src s ON t.k = s.k " +
+          "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"))
+      assert(e.getMessage.contains("duplicate keys"), e.getMessage)
+      assert(SnapshotCommit.currentVersion(spark, tbl) === before)
+      assert(SnapshotCommit.dataFiles(spark, tbl).map(_._1).sorted === files)
+    }
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+  }
 }

@@ -746,4 +746,70 @@ class GraftTableSourceSpec extends SparkSpec {
         s"stats sidecar: $prunedIo bytes vs $fullIo unfiltered")
     SnapshotCommit.destroy(spark, tbl)
   }
+
+  test("graft-table SINK: a watermarked stream's no-data micro-batch " +
+      "publishes no version and no file, and its replay stays " +
+      "exactly-once") {
+    val dst = "gts_sink_nodata"
+    SnapshotCommit.destroy(spark, dst)
+    val landing = SparkSpec.tempDir("gts_nodata_landing")
+    val ckpt = SparkSpec.tempDir("gts_nodata_ckpt").toString
+    def land(name: String, ids: Seq[Long], hour: Int): Unit =
+      spark.createDataFrame(ids.map(i => (i, i * 10)))
+        .toDF("event_id", "v")
+        .withColumn("ts", to_timestamp(lit(f"2024-01-01 $hour%02d:00:00")))
+        .coalesce(1).write.parquet(landing.resolve(name).toString)
+    land("f1", 0L until 20L, hour = 1)
+    val schema = spark.read.parquet(landing.resolve("f1").toString).schema
+    val q = spark.readStream.schema(schema)
+      .parquet(landing.toString + "/*")
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("event_id")
+      .writeStream.format("graft-table").option("table", dst)
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime(50))
+      .start()
+    // Until a batch with no input rows has run after the last one with
+    // rows (the watermark moved, so the dedup state needs an eviction
+    // pass), and returns the id of that last batch with rows.
+    def awaitNoDataBatch(): Long = {
+      q.processAllAvailable()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      def progress = q.recentProgress.toSeq
+      while (!progress.lastOption.exists(_.numInputRows == 0) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      val ps = progress
+      assert(ps.lastOption.exists(_.numInputRows == 0),
+        s"no no-data batch ran: ${ps.map(p => p.batchId -> p.numInputRows)}")
+      ps.filter(_.numInputRows > 0).map(_.batchId).max
+    }
+    try {
+      val b1 = awaitNoDataBatch()
+      assert(SnapshotCommit.currentVersion(spark, dst) === Some(1L))
+      val files1 = SnapshotCommit.dataFiles(spark, dst).map(_._1).sorted
+      assert(SnapshotSink.lastBatchId(spark, dst) === b1)
+      // A replay of the no-data batch is empty again: nothing published.
+      val empty = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        spark.table(dst).schema)
+      assert(!SnapshotSink.append(spark, dst, b1 + 1, empty))
+      assert(SnapshotCommit.currentVersion(spark, dst) === Some(1L))
+      assert(SnapshotCommit.dataFiles(spark, dst).map(_._1).sorted === files1)
+      // A replay of the batch with rows is skipped by its recorded id.
+      assert(!SnapshotSink.append(spark, dst, b1, spark.table(dst)))
+      // The next file: duplicates inside the watermark drop, new ids land
+      // as one version, and its no-data batch publishes nothing again.
+      land("f2", 15L until 30L, hour = 2)
+      awaitNoDataBatch()
+      assert(SnapshotCommit.currentVersion(spark, dst) === Some(2L))
+      val rows = SnapshotCommit.dataFiles(spark, dst).map { case (_, p) =>
+        spark.read.parquet(p.toString).count() }
+      assert(rows.forall(_ > 0), s"a zero-row file was published: $rows")
+      assert(rows.sum === 30L)
+    } finally q.stop()
+    SnapshotCommit.register(spark, dst)
+    assert(spark.table(dst).select("event_id").collect().map(_.getLong(0))
+      .sorted.toSeq === (0L until 30L))
+    SnapshotCommit.destroy(spark, dst)
+  }
 }

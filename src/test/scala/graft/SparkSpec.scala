@@ -18,6 +18,41 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   val Sf0001 = "/root/testdata/sf0.001"
+
+  /** The Spark jobs `body` starts, with its result: one entry per job,
+    * naming its tasks per stage and the engine call site of the query
+    * that ran it, which a failing count prints. Counts the jobs of every
+    * thread on the session's context, so nothing else may run on it
+    * meanwhile (the suites of one JVM run one at a time). */
+  def jobsOf[T](body: => T): (Seq[String], T) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          sites.put(s.executionId.toString, s.details.split("\n")
+            .filter(_.contains("graft.")).take(2).mkString(" < "))
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val id = Option(e.properties)
+          .map(_.getProperty("spark.sql.execution.id", "")).getOrElse("")
+        jobs.add(s"tasks ${e.stageInfos.map(_.numTasks).mkString(",")} " +
+          s"at ${sites.getOrDefault(id, "?")}")
+      }
+    }
+    org.apache.spark.graftbridge.ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.graftbridge.ListenerBus.drain(sc)
+      (jobs.toArray(Array.empty[String]).toSeq, out)
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
