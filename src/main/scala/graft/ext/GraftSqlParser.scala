@@ -1371,7 +1371,7 @@ object GraftSqlParser {
           // with carry+stamp — both only need the statement's target
           // version, deterministic up front.
           if (dv.cdfEnabled(spark, tgt)) {
-            val vNext = dv.nextStampVersion(spark, tgt)
+            val vNext = dv.version(spark, tgt) + 1
             overlapped {
               dv.recordImages(spark, tgt, vNext,
                 images.withColumn("commit_version", lit(vNext)))
@@ -1470,7 +1470,8 @@ object GraftSqlParser {
         // (each matched row explodes into its pre and post image — a
         // union would read the touched files twice). The image write is
         // independent of carry+stamp (both only need the statement's
-        // target version, deterministic up front via nextStampVersion),
+        // target version — `version + 1`, fixed up front: a concurrent
+        // writer loses the claim rather than change the current sidecar),
         // so the two run CONCURRENTLY (guide §2.6) — the tail's wall is
         // max(images, carry+stamp), not their sum; a version mismatch
         // aborts the commit (the orphan image dir is unreferenced).
@@ -1484,7 +1485,7 @@ object GraftSqlParser {
                 case _ => col(f.name).cast(f.dataType).as(f.name)
               }
             } :+ lit(tag).as("change_type")): _*)
-          val vNext = dv.nextStampVersion(spark, tbl)
+          val vNext = dv.version(spark, tbl) + 1
           overlapped {
             dv.recordImages(spark, tbl, vNext, touchedLive.filter(pred)
               .select(explode(array(image("update_preimage", false),

@@ -47,8 +47,13 @@ import org.apache.hadoop.fs.Path
   * registered as the `<table>__dv` catalog table (re-pointed after each
   * commit) so it stays directly queryable.
   *
-  * Scale: delete cost = one column-pruned scan + a bounded sidecar
-  * rewrite of matched coordinates; read overhead = a broadcast hash
+  * Scale: the sidecar is sized for the driver. Every path that reads
+  * it (the stamp of each DML commit, delete, restore, vacuum, the
+  * change feed) reads its rows on the driver with no Spark job, and
+  * [[read]] broadcasts it, so its coordinates must fit in driver memory
+  * between compactions; [[compact]] and vacuum are what shrink it.
+  * Delete cost = one column-pruned scan of the matched coordinates + a
+  * driver-side sidecar rewrite; read overhead = a broadcast hash
   * anti-join probe per row, and nothing while the sidecar holds only
   * sentinel rows (one footer read decides); restore touches only the
   * sidecar. Single writer assumed (the Delta difference is multi-writer
@@ -234,26 +239,6 @@ object DeletionVectors {
       })
   }
 
-  /** Total bytes of the current sidecar's parquet files — ONE
-    * listStatus, no data IO. The r18 driver-side fast paths
-    * (delete/restore union, change-feed assembly) gate on this: below
-    * the threshold the sidecar is read and written on the driver with
-    * zero jobs; above it (a large table with many masked rows — the
-    * sf1.0 decade run measured the driver single-threaded read LOSING
-    * to the old distributed plan at ~500k coordinates) the original
-    * Spark-side path runs unchanged, so the scale shape is the
-    * distributed one. Deployment override:
-    * spark.graft.dv.localSidecarMaxBytes. */
-  private def sidecarIsSmall(spark: SparkSession, table: String): Boolean = {
-    val max = spark.conf.getOption("spark.graft.dv.localSidecarMaxBytes")
-      .map(_.toLong).getOrElse(1L << 20)
-    dvDir(spark, table).filter(d => fs(spark, d).exists(d)).forall { d =>
-      fs(spark, d).listStatus(d)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getLen).sum <= max
-    }
-  }
-
   /** Driver-side counterpart of the stamp's sidecar write: one parquet
     * file under `dir`, schema-compatible with the Spark-written
     * sidecars every read path (including [[sidecarDf]] joins) consumes.
@@ -328,45 +313,15 @@ object DeletionVectors {
       // against the winner's (version, sidecar) pair, so its delete
       // stamp and sidecar union rebase instead of clobbering. Both
       // writes read the CURRENT version (still live until the pointer
-      // claim): the sidecar union scans the old sidecar table and the
-      // matched rows' metadata, then the data files are linked.
-      val v = version(spark, table) + 1
-      // The (_hwm, -1, v) sentinel CONSUMES the version number even when
-      // the predicate matches zero rows: without it the sidecar's max
-      // would not advance and the NEXT delete would reuse the v this
-      // call already returned — a later readAt(v) would then subtract
-      // that other delete's rows, silently changing what the returned
-      // anchor means. Synthetic coordinates (p = -1) match no data row.
-      if (sidecarIsSmall(spark, table)) {
-        // SMALL sidecar (sidecarIsSmall scaladoc): matched coordinates
-        // COLLECTED, union written DRIVER-SIDE — skips a full Spark
-        // write-commit job per DELETE (the stampVersion r17 reasoning;
-        // the probe job computing the coordinates stays distributed).
-        val coordRows: Seq[(String, Long, Long)] =
-          withCoords(spark.table(table)).filter(pred)
-            .select(col("_dv_file"), col("_dv_pos"))
-            .collect().map(r => (r.getString(0), r.getLong(1), v)).toSeq
-        val stamp = Seq(("_hwm", -1L, v),
-          (s"$TsPrefix${clockMs()}", -1L, v), (s"${OpPrefix}DELETE", -1L, v))
-        val old = sidecarRowsLocal(spark, table).getOrElse(Nil)
-        writeSidecarRows(spark, new Path(s"$dir/_dv"),
-          old ++ coordRows ++ stamp)
-      } else {
-        // LARGE sidecar: the original distributed union write.
-        val coords = withCoords(spark.table(table))
-          .filter(pred)
-          .select(col("_dv_file").as("f"), col("_dv_pos").as("p"),
-            lit(v).as("v"))
-        val stamp = spark.createDataFrame(
-            Seq(("_hwm", -1L, v), (s"$TsPrefix${clockMs()}", -1L, v),
-              (s"${OpPrefix}DELETE", -1L, v)))
-          .toDF("f", "p", "v")
-        val newSidecar = (sidecarDf(spark, table) match {
-          case Some(sc) => sc.unionByName(coords)
-          case None => coords
-        }).unionByName(stamp)
-        newSidecar.write.parquet(s"$dir/_dv")
-      }
+      // claim): the matched rows' coordinates are collected (the one
+      // Spark job), the stamp unions them into the old sidecar on the
+      // driver, then the data files are linked.
+      val coords: Seq[(String, Long)] =
+        withCoords(spark.table(table)).filter(pred)
+          .select(col("_dv_file"), col("_dv_pos"))
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      val v = stampVersion(spark, table, new Path(dir), op = "DELETE",
+        added = Nil, deleted = coords)
       val cur = SnapshotCommit.currentLocation(spark, table).get
       linkDataFiles(spark, cur, new Path(dir))
       // Skipping and stream progress survive the delete: same
@@ -437,26 +392,6 @@ object DeletionVectors {
         .drop("_dv_pos"),
       Long.MaxValue)
 
-  /** Carry the table's live sidecar into staged `to`, DROPPING the data
-    * entries of `dropped` basenames (files a rewrite just removed from
-    * the version — their coordinates would dangle) while keeping
-    * sentinel rows (p = -1), so the delete-version high-water mark stays
-    * monotone across rewrites. Maintains the invariant that every
-    * non-sentinel sidecar entry references a live basename (what lets
-    * [[graft.storage.MetadataAggRule]] answer count(*) from sidecars
-    * alone). The sidecar is bounded between compactions, so the rewrite
-    * is metadata-scale. No-op when the table carries no sidecar.
-    */
-  private[graft] def carrySidecarDropping(spark: SparkSession,
-      table: String, dropped: Set[String], to: Path): Unit =
-    sidecarDf(spark, table).foreach { sc =>
-      val kept =
-        if (dropped.isEmpty) sc
-        else sc.filter(col("p") === -1L ||
-          !col("f").isin(dropped.toSeq: _*))
-      kept.write.parquet(new Path(to, "_dv").toString)
-    }
-
   /** Re-point (or drop) the `<table>__dv` catalog table after an
     * externally-committed version change (SQL MERGE) — the same
     * post-commit alignment [[delete]]/[[restore]]/[[vacuum]] do. */
@@ -464,19 +399,26 @@ object DeletionVectors {
     registerDv(spark, table)
 
   /** Stamp a staged commit with the NEXT change version: writes the
-    * staged `_dv` sidecar = current sidecar (minus the data entries of
-    * `dropped` basenames, keeping sentinels — the
-    * [[carrySidecarDropping]] algebra) plus this version's sentinel
-    * rows: `_hwm` (consumes the number), `_ts:` (the TIMESTAMP AS OF /
-    * RETAIN anchor), `_op:<op>` (what committed it — the
-    * [[changesBetween]] dispatch key) and one `_add:<basename>` per
-    * appended file. Called INSIDE a SnapshotCommit write closure —
-    * everything re-derives per attempt, so a lost-claim rebase stamps
-    * against the winner's sidecar. Returns the stamped version. */
+    * staged `_dv` sidecar = current sidecar, minus the data entries of
+    * `dropped` basenames (files a rewrite removed from the version),
+    * plus the `deleted` (basename, position) coordinates of a DELETE,
+    * plus this version's sentinel rows: `_hwm` (consumes the number,
+    * even when nothing matched, so no later stamp reuses a version a
+    * caller already holds), `_ts:` (the TIMESTAMP AS OF / RETAIN
+    * anchor), `_op:<op>` (what committed it — the [[changesBetween]]
+    * dispatch key) and one `_add:<basename>` per appended file.
+    * Sentinels (p = -1) always survive, so the high-water mark stays
+    * monotone across rewrites, and every data entry keeps referencing a
+    * live basename — the invariant that lets
+    * [[graft.storage.MetadataAggRule]] answer count(*) from sidecars
+    * alone. Called INSIDE a SnapshotCommit write closure — everything
+    * re-derives per attempt, so a lost-claim rebase stamps against the
+    * winner's sidecar. Returns the stamped version. */
   private[graft] def stampVersion(spark: SparkSession, table: String,
       stage: Path, op: String, added: Seq[String],
       dropped: Set[String] = Set.empty,
-      copied: Seq[String] = Nil): Long = {
+      copied: Seq[String] = Nil,
+      deleted: Seq[(String, Long)] = Nil): Long = {
     // FULLY driver-side (r17): the sidecar is broadcast-small by
     // contract, so both the read and the stamp's write bypass the
     // scheduler outright — a DML statement pays ZERO jobs for its
@@ -499,22 +441,10 @@ object DeletionVectors {
       added.sorted.map(n => (s"$AddPrefix$n", -1L, v)) ++
       copied.sorted.map(p => (s"$CopyPrefix$p", -1L, v)) ++
       lost.map(lv => (s"$LostPrefix$lv", -1L, lv))
-    writeSidecarRows(spark, new Path(stage, "_dv"), kept ++ sentinels)
+    writeSidecarRows(spark, new Path(stage, "_dv"),
+      kept ++ deleted.map { case (f, p) => (f, p, v) } ++ sentinels)
     v
   }
-
-  /** The version the NEXT stampVersion call on this table will mint —
-    * max sidecar version + 1 over the CURRENT sidecar, which is
-    * immutable for the duration of a statement (the stamp writes into
-    * the STAGE directory; a concurrent writer loses the optimistic
-    * claim instead of mutating it). Lets a DML statement start its CDC
-    * image write concurrently with the carry+stamp tail: both need the
-    * same v, and the stamp's own computation must agree (the callers
-    * require it and abort the commit otherwise). */
-  private[graft] def nextStampVersion(spark: SparkSession,
-      table: String): Long =
-    sidecarRowsLocal(spark, table).getOrElse(Nil)
-      .map(_._3).maxOption.getOrElse(0L) + 1
 
   /** Is the change-data-feed's IMAGE RECORDING enabled for this table —
     * Delta's `delta.enableChangeDataFeed` table property, same gate:
@@ -621,16 +551,11 @@ object DeletionVectors {
     * Sentinels survive the rollback, so [[version]] (the high-water
     * mark) does not move backwards and later deletes never reuse a
     * historical version number. Restoring below a vacuum's floor
-    * throws: those states are physically unreconstructible.
+    * throws: those states are physically unreconstructible. The
+    * sidecar is read and rewritten on the driver, like the stamp path:
+    * no Spark job.
     */
   def restore(spark: SparkSession, table: String, v: Long): Unit =
-    if (sidecarIsSmall(spark, table)) restoreLocal(spark, table, v)
-    else restoreDistributed(spark, table, v)
-
-  /** [[restore]], small-sidecar arm: sidecar read and rewritten
-    * DRIVER-SIDE (r18) — zero jobs, like the stamp path. */
-  private def restoreLocal(spark: SparkSession, table: String,
-      v: Long): Unit =
     sidecarRowsLocal(spark, table).foreach { rows0 =>
       // Below a vacuum's floor the rows are PHYSICALLY gone (folded into
       // rewritten files) — no metadata operation can bring them back, so
@@ -666,39 +591,6 @@ object DeletionVectors {
         val lostMarks = filtered ++
           rolled.map(lv => (s"$LostPrefix$lv", -1L, lv))
         writeSidecarRows(spark, new Path(s"$dir/_dv"), lostMarks)
-        val cur = SnapshotCommit.currentLocation(spark, table).get
-        linkDataFiles(spark, cur, new Path(dir))
-        StatsSkipping.refreshStats(spark, cur, new Path(dir))
-        SnapshotCommit.carryBatchId(spark, cur, new Path(dir))
-      }
-      registerDv(spark, table)
-    }
-
-  /** [[restore]], large-sidecar arm: the original distributed form —
-    * sidecar filtered and rewritten as Spark jobs. */
-  private def restoreDistributed(spark: SparkSession, table: String,
-      v: Long): Unit =
-    sidecarDf(spark, table).foreach { sc0 =>
-      val floor = sc0.filter(col("f") === "_floor")
-        .agg(coalesce(max(col("v")), lit(0L))).head().getLong(0)
-      require(v >= floor,
-        s"cannot restore $table to delete version $v: vacuum folded " +
-          s"versions <= $floor into the data files; states below the " +
-          "floor are no longer reconstructible")
-      SnapshotCommit.commit(spark, table, operation = "RESTORE") { dir =>
-        // Re-derived per attempt; sentinel-keeping and _lost: marking
-        // semantics identical to the local arm (see restoreLocal).
-        val sc = sidecarDf(spark, table)
-          .getOrElse(sys.error(s"$table sidecar vanished during restore"))
-        val filtered = sc.filter(col("v") <= v || col("p") < 0)
-        val rolled = sc.filter(col("v") > v && col("p") >= 0)
-          .select(col("v")).distinct().collect().map(_.getLong(0)).toSeq
-        val lostMarks =
-          if (rolled.isEmpty) filtered
-          else filtered.unionByName(spark.createDataFrame(
-            rolled.map(lv => (s"$LostPrefix$lv", -1L, lv)))
-            .toDF("f", "p", "v"))
-        lostMarks.write.parquet(s"$dir/_dv")
         val cur = SnapshotCommit.currentLocation(spark, table).get
         linkDataFiles(spark, cur, new Path(dir))
         StatsSkipping.refreshStats(spark, cur, new Path(dir))
@@ -1023,115 +915,45 @@ object DeletionVectors {
       toV: Long): DataFrame = {
     require(fromV <= toV,
       s"table_changes($table, $fromV, $toV): empty/negative range")
-    // SMALL sidecars read DRIVER-SIDE (r18): the floor probe and the
-    // sentinel scan — two scheduler round-trips per feed request in the
-    // r17 form, paid per MICRO-BATCH by the streaming CDC path (st25's
-    // getBatch) — come from one driver parquet read with no job at all,
-    // and the first-delete map becomes a broadcast LOCAL relation
-    // instead of a scan + aggregate subtree. LARGE sidecars (many
-    // masked rows — the sf1.0 decade run measured the single-threaded
-    // driver read losing at ~500k coordinates) keep the original
-    // distributed plan: see sidecarIsSmall. Same rows either way;
-    // nothing is memoized across calls — the sidecar is read ONCE per
-    // request here and the high-water mark derives from the same read
-    // (the r17 form re-read it per probe: three driver parquet opens
-    // per streaming micro-batch).
-    val localRows =
-      if (sidecarIsSmall(spark, table)) sidecarRowsLocal(spark, table)
-      else None
-    val hwm = localRows
-      .map(_.map(_._3).maxOption.getOrElse(0L))
-      .getOrElse(version(spark, table))
+    // The sidecar is read ONCE per request, on the driver: the floor,
+    // the in-range sentinels, the high-water mark and the first-delete
+    // map all derive from those rows, with no Spark job (the streaming
+    // CDC path pays this per micro-batch, in getBatch). Nothing is
+    // memoized across calls.
+    val rows = sidecarRowsLocal(spark, table)
+    val hwm = rows.flatMap(_.map(_._3).maxOption).getOrElse(0L)
     require(toV <= hwm,
       s"table_changes($table, $fromV, $toV): version $toV is beyond " +
         s"the table's latest change version $hwm — Delta errors on " +
         "out-of-range versions rather than serving a partial feed")
-    // ONE table plan per request: its schema feeds every arm, and
-    // the same frame is the full-scan join input on the fallback path.
+    // ONE table plan per request: its schema feeds every arm.
     val raw = spark.table(table)
     val schema = raw.schema
     val cols = schema.fieldNames.toSeq
     def shaped(df: DataFrame): DataFrame =
       df.select(cols.map(col) :+ col("change_type") :+
         col("commit_version"): _*)
-    lazy val base = withCoords(raw)
     val empty = shaped(raw.limit(0)
       .withColumn("change_type", lit(""))
       .withColumn("commit_version", lit(0L)))
-    val distSc = if (localRows.isDefined) None else sidecarDf(spark, table)
-    if (localRows.isEmpty && distSc.isEmpty) return empty
-    // DELETE-arm file prune (r18, guide §2.3/§6 "shuffle/read fewer
-    // bytes"): the in-range first-delete coordinates NAME the files
-    // their rows live in, so the arm's scan can read exactly those
-    // files instead of joining the broadcast map against the WHOLE
-    // table — at scale the feed's delete arm is then proportional to
-    // the files a version touched (the same discipline the insert arm
-    // already has), not to table size. `delNames = None` keeps the
-    // original full-scan join: the distributed arm falls back when the
-    // distinct-file set exceeds a bounded driver collect (file-count
-    // proportional, capped — spark.graft.cdc.deleteArmPruneMaxFiles).
-    val (floor: Long, sentinels: Seq[(String, Long)],
-        firstDel: DataFrame, delNames: Option[Seq[String]]) =
-      localRows match {
-      case Some(rows) =>
-        val fl = rows.collect { case ("_floor", _, v) => v }
-          .maxOption.getOrElse(0L)
-        val sent = rows.collect {
-          case (f, p, v) if p < 0 && v > fromV && v <= toV => f -> v
-        }
-        // DELETE arm input: first-delete semantics over the data
-        // entries, grouped driver-side into a broadcast local relation.
-        val firstDelRows: Seq[(String, Long, Long)] = rows
-          .collect { case (f, p, v) if p >= 0 => (f, p) -> v }
-          .groupMapReduce(_._1)(_._2)(math.min)
-          .collect { case ((f, p), v) if v > fromV && v <= toV =>
-            (f, p, v) }.toSeq
-        (fl, sent, spark.createDataFrame(firstDelRows)
-          .toDF("_dv_f", "_dv_p", "commit_version"),
-          Some(firstDelRows.map(_._1).distinct))
-      case None =>
-        val sc = distSc.get
-        val cap = spark.conf
-          .getOption("spark.graft.cdc.deleteArmPruneMaxFiles")
-          .map(_.toInt).getOrElse(10000)
-        // ONE collect job serves all three bounded probes (the r17 form
-        // paid two — floor head() + sentinel collect — and a naive
-        // prune would add a third, measured as a 1.3x regression on the
-        // sf1.0 decade): the floor rows, the in-range sentinel rows,
-        // and the DISTINCT file names with any in-range delete entry —
-        // a SUPERSET of the first-delete arm's files (a file whose
-        // pairs' first deletes all precede the range scans for nothing
-        // and the join drops its rows), which is what makes it cheap:
-        // no group-min, one filter+distinct, capped.
-        val fileTag = -999L
-        val probe = sc
-          .filter(col("f") === "_floor" || (col("p") < 0 &&
-            col("v") > fromV && col("v") <= toV))
-          .select(col("f"), col("p"), col("v"))
-          .unionByName(sc
-            .filter(col("p") >= 0 && col("v") > fromV &&
-              col("v") <= toV)
-            .select(col("f")).distinct().limit(cap + 1)
-            .select(col("f"), lit(fileTag).as("p"), lit(0L).as("v")))
-          .collect()
-        val fl = probe.collect {
-          case r if r.getString(0) == "_floor" => r.getLong(2)
-        }.maxOption.getOrElse(0L)
-        val sent = probe.collect {
-          case r if r.getLong(1) < 0 && r.getLong(1) != fileTag &&
-            r.getString(0) != "_floor" && r.getLong(2) > fromV &&
-            r.getLong(2) <= toV => r.getString(0) -> r.getLong(2)
-        }.toSeq
-        val names = probe.collect {
-          case r if r.getLong(1) == fileTag => r.getString(0) }.toSeq
-        val fd = sc.filter(col("p") >= 0)
-          .groupBy(col("f").as("_dv_f"), col("p").as("_dv_p"))
-          .agg(min(col("v")).as("commit_version"))
-          .filter(col("commit_version") > fromV &&
-            col("commit_version") <= toV)
-        (fl, sent, fd,
-          if (names.length > cap) None else Some(names))
+    val all = rows.getOrElse(return empty)
+    val floor = all.collect { case ("_floor", _, v) => v }
+      .maxOption.getOrElse(0L)
+    val sentinels = all.collect {
+      case (f, p, v) if p < 0 && v > fromV && v <= toV => f -> v
     }
+    // DELETE arm input: first-delete semantics over the data entries,
+    // grouped on the driver into a broadcast local relation. Its
+    // coordinates NAME the files their rows live in, so the arm scans
+    // exactly those files: the delete arm costs the files a version
+    // touched, not the table (the insert arm's discipline too).
+    val firstDelRows: Seq[(String, Long, Long)] = all
+      .collect { case (f, p, v) if p >= 0 => (f, p) -> v }
+      .groupMapReduce(_._1)(_._2)(math.min)
+      .collect { case ((f, p), v) if v > fromV && v <= toV => (f, p, v) }
+      .toSeq
+    val firstDel = spark.createDataFrame(firstDelRows)
+      .toDF("_dv_f", "_dv_p", "commit_version")
     require(fromV >= floor,
       s"table_changes($table, $fromV, $toV): vacuum folded " +
         s"versions <= $floor into the data files — the change " +
@@ -1163,16 +985,14 @@ object DeletionVectors {
         lazy val live = SnapshotCommit.dataFiles(spark, table).toMap
         // The pruned scan reads the named files under the table schema
         // (old files null-fill post-ALTER columns, like the insert arm);
-        // names physically gone serve nothing — exactly what the
-        // full-scan join did for them. No in-range deletes: no arm.
-        val delBase: Option[DataFrame] = delNames match {
-          case Some(ns) =>
-            val paths = ns.flatMap(live.get).map(_.toString)
-            if (paths.isEmpty) None
-            else Some(withCoords(
-              spark.read.schema(schema).parquet(paths: _*)))
-          case None => Some(base)
-        }
+        // names physically gone serve nothing. No in-range deletes: no
+        // arm.
+        val delPaths = firstDelRows.map(_._1).distinct.flatMap(live.get)
+          .map(_.toString)
+        val delBase: Option[DataFrame] =
+          if (delPaths.isEmpty) None
+          else Some(withCoords(
+            spark.read.schema(schema).parquet(delPaths: _*)))
         val delArm = delBase.map(b => shaped(b.join(broadcast(firstDel),
             col("_dv_file") === col("_dv_f") &&
               col("_dv_pos") === col("_dv_p"))

@@ -97,8 +97,8 @@ object MetadataAggRule extends Rule[LogicalPlan] {
     *    `count(DISTINCT f, p)` collapses re-deleted coordinates and
     *    drops null coordinates — mirroring the anti-join's semantics
     *    exactly. Every non-sentinel entry references a live basename
-    *    (the carrySidecarDropping invariant), so each distinct pair
-    *    subtracts exactly one live row.
+    *    (the invariant DeletionVectors.stampVersion keeps), so each
+    *    distinct pair subtracts exactly one live row.
     */
   private def rewriteDvCount(agg: Aggregate): Option[LogicalPlan] = {
     // Strip a pure column-pruning Project above the join, if any.

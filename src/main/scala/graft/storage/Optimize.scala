@@ -83,7 +83,6 @@ object Optimize {
     // Bytes per PHYSICAL row: the footers count the rows those bytes
     // encode (DV-masked rows included) — metadata only, no scan.
     val rows = StatsSkipping.footerRowCount(hconf, files)
-    val hadVectors = DeletionVectors.version(spark, table) > 0
     val bytesPerRow = math.max(1.0, totalBytes.toDouble / math.max(1L, rows))
     val recordsPerFile = math.max(1L, (target / bytesPerRow).toLong)
     val partitions = math.max(1,
@@ -102,10 +101,7 @@ object Optimize {
       // re-invokes this closure against the concurrent winner's version,
       // so the compaction rewrites THAT state (the sizing estimates
       // above are heuristics and may stay one version stale).
-      val liveNow = if (DeletionVectors.version(spark, table) > 0)
-        DeletionVectors.read(spark, table)
-        else spark.table(table)
-      liveNow.coalesce(partitions).write
+      DeletionVectors.read(spark, table).coalesce(partitions).write
         .option("maxRecordsPerFile", recordsPerFile)
         .parquet(dir)
       // A compacted file is a rewrite: when the superseded version
@@ -119,7 +115,7 @@ object Optimize {
         SnapshotCommit.carryBatchId(spark, cur, new Path(dir))
       }
     }
-    if (hadVectors) spark.sql(s"DROP TABLE IF EXISTS ${table}__dv")
+    DeletionVectors.realign(spark, table)
     (files.length, spark.table(table).inputFiles.length)
   }
 
@@ -145,20 +141,16 @@ object Optimize {
   def zorder(spark: SparkSession, table: String, cols: Seq[String],
       partitions: Option[Int] = None): Unit = {
     require(cols.nonEmpty, "zorder needs at least one clustering column")
-    val hadVectors = DeletionVectors.version(spark, table) > 0
     StatsSkipping.commitWithStats(spark, table, cols,
       operation = "OPTIMIZE ZORDER") { dir =>
       // Re-derived per attempt (commit write-closure contract): a lost
       // claim re-invokes against the winner's version, folding ITS
       // state.
-      val liveNow = if (DeletionVectors.version(spark, table) > 0)
-        DeletionVectors.read(spark, table)
-        else spark.table(table)
-      ZOrder.layout(liveNow, cols.take(4), partitions)
-        .write.parquet(dir)
+      val live = DeletionVectors.read(spark, table)
+      ZOrder.layout(live, cols.take(4), partitions).write.parquet(dir)
       SnapshotCommit.currentLocation(spark, table).foreach(cur =>
         SnapshotCommit.carryBatchId(spark, cur, new Path(dir)))
     }
-    if (hadVectors) spark.sql(s"DROP TABLE IF EXISTS ${table}__dv")
+    DeletionVectors.realign(spark, table)
   }
 }

@@ -935,6 +935,23 @@ class ExtensionsSpec extends SparkSpec {
       assert(e.getMessage.contains(named), e.getMessage)
     }
     assert(!spark.table(tbl).columns.contains("y"))
+    // OPTIMIZE folds the delete. A second OPTIMIZE finds no deletion
+    // vector but the schema ledger, and still rewrites the same rows
+    // under the same schema.
+    def state() = {
+      val df = DeletionVectors.read(spark, tbl)
+      (df.schema.map(f => f.name -> f.dataType),
+        df.collect().map(_.toSeq).toSet)
+    }
+    val before = state()
+    for (round <- 1 to 2) {
+      GraftSqlParser.sql(spark, s"OPTIMIZE $tbl").collect()
+      assert(state() === before, s"OPTIMIZE $round changed the table")
+      assert(spark.table(tbl).schema.map(f => f.name -> f.dataType) ===
+        before._1)
+      assert(DeletionVectors.version(spark, tbl) === 0L)
+      assert(SnapshotCommit.schemaVersions(spark, tbl).nonEmpty)
+    }
     // Plain catalog tables delegate to Spark's own ALTER.
     val plain = "addcol_plain_tbl"
     spark.sql(s"DROP TABLE IF EXISTS $plain")

@@ -285,10 +285,26 @@ class GraftTableSourceSpec extends SparkSpec {
     GraftSqlParser.sql(spark, s"INSERT INTO $tbl VALUES (100, 200)")
     assert(check() === "-", "sentinels alone are no masking state")
     val d1 = DeletionVectors.delete(spark, tbl, col("id") < 30)
-    // A re-deleting DELETE whose sidecar Spark writes (as part files).
-    spark.conf.set("spark.graft.dv.localSidecarMaxBytes", "0")
-    try DeletionVectors.delete(spark, tbl, col("id") % 4 === 0)
-    finally spark.conf.unset("spark.graft.dv.localSidecarMaxBytes")
+    // A re-deleting DELETE whose sidecar Spark wrote as several part
+    // files, as older tables carry: the old sidecar, every 4th id's
+    // coordinates and the version's stamp rows.
+    val cur = SnapshotCommit.currentLocation(spark, tbl).get
+    val v2 = d1 + 1
+    SnapshotCommit.commit(spark, tbl, operation = "DELETE") { dir =>
+      val coords = spark.table(tbl).filter(col("id") % 4 === 0)
+        .select(substring_index(col("_metadata.file_path"), "/", -1)
+          .as("f"), col("_metadata.row_index").as("p"), lit(v2).as("v"))
+      val stamp = spark.createDataFrame(Seq(("_hwm", -1L, v2),
+        (s"${DeletionVectors.TsPrefix}${DeletionVectors.clockMs()}", -1L, v2),
+        (s"${DeletionVectors.OpPrefix}DELETE", -1L, v2))).toDF("f", "p", "v")
+      spark.read.parquet(new Path(cur, "_dv").toString)
+        .unionByName(coords).unionByName(stamp).repartition(3)
+        .write.parquet(new Path(dir, "_dv").toString)
+      SnapshotCommit.carryData(spark, cur, new Path(dir))
+    }
+    DeletionVectors.realign(spark, tbl)
+    assert(dv().getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dv()).count(_.getPath.getName.endsWith(".parquet")) > 1)
     GraftSqlParser.sql(spark, s"INSERT INTO $tbl VALUES (101, 202)")
     // ids < 30, then every 4th id of 0..100 again (the raw table).
     assert(check().startsWith("56:"))

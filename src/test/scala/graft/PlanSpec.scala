@@ -725,8 +725,7 @@ class PlanSpec extends SparkSpec {
     // this pin is what keeps the two branches answer-identical: every
     // step is BIGINT arithmetic, so the full row sets must be EQUAL,
     // not merely close. A zero byte cap forces the distributed rounds
-    // (a non-empty graph has bytes > 0), the same idiom StorageSpec uses
-    // with localSidecarMaxBytes=0.
+    // (a non-empty graph has bytes > 0).
     val key = "spark.graft.graph.localMaxBytes"
     val graphBytes = Seq(graft.core.Tables.orders(spark, Sf0001),
       graft.core.Tables.lineitem(spark, Sf0001))

@@ -1774,16 +1774,14 @@ class StorageSpec extends SparkSpec {
   }
 
   test("change-feed delete arm scans only the files carrying in-range " +
-      "deletes — local and distributed sidecar arms, capped fallback") {
+      "deletes") {
     import org.apache.spark.sql.functions._
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     // 32-file range-clustered table; the DELETE's id window lands in
     // 1-2 of them. The feed request must plan its delete arm over
     // exactly those files (r18: the coordinates name them), not the
-    // table — the scan's numFiles is the pin, on BOTH sidecar arms
-    // (the size gate routes them differently), and the capped
-    // fallback must keep the original full-scan join.
+    // table — the scan's file count is the pin.
     val tbl = "cdc_prune_tbl"
     spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
@@ -1826,33 +1824,62 @@ class StorageSpec extends SparkSpec {
         id >= 70000 && id < 70100 && v == id * 3 &&
           ct == "delete" && cv == 1L })
     }
-    val localArm = feed()
-    checkRows(localArm)
-    val localFiles = scanFiles(localArm)
-    assert(localFiles <= 3,
-      s"local-arm delete scan must read the touched files, " +
-        s"got $localFiles/32")
-    try {
-      // Force the distributed (large-sidecar) arm through the size
-      // gate: same rows, same pruned shape, one probe collect job.
-      spark.conf.set("spark.graft.dv.localSidecarMaxBytes", "0")
-      val distArm = feed()
-      checkRows(distArm)
-      val distFiles = scanFiles(distArm)
-      assert(distFiles <= 3,
-        s"distributed-arm delete scan must read the touched files, " +
-          s"got $distFiles/32")
-      // Above the prune cap the ORIGINAL full-scan join must still
-      // serve the identical feed (the safety fallback, not an error).
-      spark.conf.set("spark.graft.cdc.deleteArmPruneMaxFiles", "0")
-      val fallback = feed()
-      checkRows(fallback)
-      assert(scanFiles(fallback) === 32,
-        "capped fallback must keep the full-scan join shape")
-    } finally {
-      spark.conf.unset("spark.graft.dv.localSidecarMaxBytes")
-      spark.conf.unset("spark.graft.cdc.deleteArmPruneMaxFiles")
+    val arm = feed()
+    checkRows(arm)
+    val files = scanFiles(arm)
+    assert(files <= 3,
+      s"delete-arm scan must read the touched files, got $files/32")
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+  }
+
+  test("a deletion vector above 1 MiB is read and written on the driver: " +
+      "RESTORE and the change-feed plan run no job, DELETE one") {
+    import org.apache.spark.sql.functions._
+    import graft.storage.{DeletionVectors, SnapshotCommit}
+    // Every DML stamp reads the whole sidecar on the driver, at any
+    // size. Above 1 MiB, where older builds moved DELETE, RESTORE and
+    // the change feed to Spark jobs, they add no job around that read.
+    val tbl = "dv_large_tbl"
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+    val n = 800000L
+    SnapshotCommit.commit(spark, tbl) { dir =>
+      spark.range(0, n, 1, 8).select(col("id"), (col("id") * 3).as("v"))
+        .write.parquet(dir)
     }
+    SnapshotCommit.register(spark, tbl)
+    val first = pmod(xxhash64(col("id")), lit(2L)) === 0L
+    val second = col("id") % 1000 === 7L
+    val v1 = DeletionVectors.delete(spark, tbl, first)
+    val dv = new org.apache.hadoop.fs.Path(
+      SnapshotCommit.currentLocation(spark, tbl).get, "_dv")
+    val dvBytes = dv.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dv).filter(_.getPath.getName.endsWith(".parquet"))
+      .map(_.getLen).sum
+    assert(dvBytes > (1L << 20), s"the sidecar must exceed 1 MiB: $dvBytes")
+
+    val (delJobs, v2) = jobsOf(DeletionVectors.delete(spark, tbl, second))
+    assert(delJobs.size <= 1, delJobs.mkString("\n"))
+    val (feedJobs, feed) =
+      jobsOf(DeletionVectors.changesBetween(spark, tbl, v1, v2))
+    assert(feedJobs.isEmpty, feedJobs.mkString("\n"))
+    // First-delete semantics: the rows the first delete already removed
+    // are not in the second version's feed.
+    val raw = spark.range(0, n).toDF()
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getLong(0)).toSet
+    val fed = feed.collect()
+    val want = ids(raw.filter(second && !first))
+    assert(fed.length === want.size)
+    assert(fed.map(_.getLong(0)).toSet === want)
+    assert(fed.forall(r => r.getLong(1) == r.getLong(0) * 3 &&
+      r.getString(2) == "delete" && r.getLong(3) == v2))
+
+    val (rstJobs, _) = jobsOf(DeletionVectors.restore(spark, tbl, v1))
+    assert(rstJobs.isEmpty, rstJobs.mkString("\n"))
+    assert(DeletionVectors.read(spark, tbl).count() ===
+      raw.filter(!first).count())
     spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
