@@ -1387,7 +1387,6 @@ object GraftSqlParser {
       }
     }
     } finally if (mustPin) srcDf.unpersist(false)
-    dv.realign(spark, tgt) // re-point (or drop) the <tgt>__dv table
     sc.register(spark, tgt)
       .getOrElse(sys.error(s"MERGE into $tgt left no published version"))
   }
@@ -1502,7 +1501,6 @@ object GraftSqlParser {
       graft.storage.StatsSkipping.refreshStats(spark, cur, stage)
       sc.carryBatchId(spark, cur, stage)
     }
-    dv.realign(spark, tbl)
     sc.register(spark, tbl)
       .getOrElse(sys.error(s"UPDATE of $tbl left no published version"))
   }
@@ -1605,7 +1603,6 @@ object GraftSqlParser {
         (if (ledger.isEmpty)
           Map(s"${sc.SchemaPropPrefix}0" -> old.toDDL)
         else Map.empty))
-    dv.realign(spark, tbl)
     val cat = spark.sessionState.catalog
     catalogEntry(spark, tbl) match {
       case Some(meta) =>
@@ -1676,7 +1673,6 @@ object GraftSqlParser {
       sc.currentLocation(spark, tbl).foreach(prev =>
         sc.carryBatchId(spark, prev, new org.apache.hadoop.fs.Path(stage)))
     }
-    graft.storage.DeletionVectors.realign(spark, tbl) // replace drops _dv
     if (replace) { // the change axis, schema ledger and constraints
       // reset with it (REPLACE is a new table definition — Delta
       // drops CHECK constraints there, unlike INSERT OVERWRITE which
@@ -1938,7 +1934,6 @@ object GraftSqlParser {
           added = appended)
       }
     }
-    dv.realign(spark, tbl)
     sc.register(spark, tbl)
       .getOrElse(sys.error(s"$stmt $tbl left no published version"))
   }
@@ -2019,7 +2014,6 @@ object GraftSqlParser {
       dv.stampVersion(spark, tbl, stage, op = "COPY",
         added = appended.map(_.getName), copied = fresh)
     }
-    dv.realign(spark, tbl)
     sc.register(spark, tbl)
     (dv.version(spark, tbl), fresh.size.toLong, rows)
   }

@@ -185,10 +185,8 @@ object ChangeDataQueries {
       |WHERE o_orderkey % 7 <> 0 AND o_orderkey % 5 = 0""".stripMargin) {
     (s, d) =>
       val tbl = s"orders_diff_${graft.queries.StorageQueries.sfName(d)}"
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
       graft.storage.SnapshotCommit.destroy(s, tbl)
-      Seq(tbl, s"${tbl}__dv").foreach(t =>
-        graft.core.CatalogUtil.dropOrphanLocation(s, t))
+      graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").cast("double").as("total"))
@@ -237,7 +235,6 @@ object ChangeDataQueries {
     val tbl = s"cust_merge_$k"
     val srcV = s"cust_merge_src_$k"
     val delV = s"cust_merge_del_$k"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     val c = Tables.customer(s, d)
@@ -318,7 +315,6 @@ object ChangeDataQueries {
     val k = graft.queries.StorageQueries.sfName(d)
     val tbl = s"cust_cmerge_$k"
     val srcV = s"cust_cmerge_src_$k"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     val c = Tables.customer(s, d)
@@ -368,7 +364,6 @@ object ChangeDataQueries {
       |       o_orderstatus AS status
       |FROM orders WHERE o_orderkey % 6 <> 0""".stripMargin) { (s, d) =>
     val tbl = s"orders_dml_${graft.queries.StorageQueries.sfName(d)}"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     graft.storage.SnapshotCommit.commit(s, tbl) { dir =>
@@ -407,7 +402,6 @@ object ChangeDataQueries {
       |       CAST(o_totalprice AS DOUBLE) AS total
       |FROM orders WHERE o_orderkey % 7 <> 0""".stripMargin) { (s, d) =>
     val tbl = s"orders_asof_${graft.queries.StorageQueries.sfName(d)}"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     graft.storage.SnapshotCommit.commit(s, tbl) { dir =>
@@ -440,7 +434,6 @@ object ChangeDataQueries {
       |       CAST(o_totalprice AS DOUBLE) AS total
       |FROM orders WHERE o_orderkey % 7 <> 0""".stripMargin) { (s, d) =>
     val tbl = s"orders_tsasof_${graft.queries.StorageQueries.sfName(d)}"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     graft.storage.SnapshotCommit.commit(s, tbl) { dir =>
@@ -480,7 +473,6 @@ object ChangeDataQueries {
       |FROM orders WHERE o_orderkey % 5 <> 0""".stripMargin) { (s, d) =>
     val tbl = s"orders_ctas_${graft.queries.StorageQueries.sfName(d)}"
     val src = s"${tbl}_src"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     Tables.orders(s, d)
@@ -534,7 +526,6 @@ object ChangeDataQueries {
     (s, d) =>
       val tbl = s"orders_cdc_${graft.queries.StorageQueries.sfName(d)}"
       val src = s"${tbl}_ins_src"
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
       graft.storage.SnapshotCommit.destroy(s, tbl)
       graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
       graft.storage.SnapshotCommit.commit(s, tbl) { dir =>
@@ -575,7 +566,6 @@ object ChangeDataQueries {
       |FROM orders WHERE o_orderkey % 7 <> 0""".stripMargin) { (s, d) =>
     val tbl = s"orders_ovr_${graft.queries.StorageQueries.sfName(d)}"
     val src = s"${tbl}_src"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     Tables.orders(s, d)
@@ -626,7 +616,6 @@ object ChangeDataQueries {
       |FROM orders WHERE o_orderkey % 2 <> 0""".stripMargin) { (s, d) =>
     val tbl = s"orders_addcol_${graft.queries.StorageQueries.sfName(d)}"
     val src = s"${tbl}_src"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     Tables.orders(s, d)
@@ -667,7 +656,6 @@ object ChangeDataQueries {
       |FROM orders""".stripMargin) { (s, d) =>
     val tbl = s"orders_copy_${graft.queries.StorageQueries.sfName(d)}"
     val src = s"${tbl}_src"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     Tables.orders(s, d)
@@ -713,7 +701,6 @@ object ChangeDataQueries {
     val silver = s"orders_sii_silver_${graft.queries.StorageQueries.sfName(d)}"
     val src = s"${bronze}_src"
     Seq(bronze, silver).foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS ${t}__dv")
       graft.storage.SnapshotCommit.destroy(s, t)
       graft.core.CatalogUtil.dropOrphanLocation(s, t)
     }
@@ -769,7 +756,6 @@ object ChangeDataQueries {
       |       CAST(1 AS BIGINT)
       |FROM orders WHERE o_orderkey % 9 = 0""".stripMargin) { (s, d) =>
     val tbl = s"orders_cdfupd_${graft.queries.StorageQueries.sfName(d)}"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     graft.storage.SnapshotCommit.commit(s, tbl) { dir =>
@@ -822,7 +808,6 @@ object ChangeDataQueries {
     val out = s"${tbl}_feed"
     val src = s"${tbl}_src"
     Seq(tbl, out).foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS ${t}__dv")
       graft.storage.SnapshotCommit.destroy(s, t)
       graft.core.CatalogUtil.dropOrphanLocation(s, t)
     }
@@ -885,7 +870,6 @@ object ChangeDataQueries {
       |       CAST(o_totalprice AS DOUBLE) AS total
       |FROM orders WHERE o_orderkey % 6 <> 0""".stripMargin) { (s, d) =>
     val tbl = s"orders_convert_${graft.queries.StorageQueries.sfName(d)}"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     Tables.orders(s, d)
@@ -932,7 +916,6 @@ object ChangeDataQueries {
       |FROM orders WHERE o_orderkey % 10 = 0""".stripMargin) { (s, d) =>
     val tbl = s"orders_check_${graft.queries.StorageQueries.sfName(d)}"
     val src = s"${tbl}_src"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     Tables.orders(s, d)
@@ -987,7 +970,6 @@ object ChangeDataQueries {
       |FROM orders WHERE o_orderkey % 3 = 0""".stripMargin) { (s, d) =>
     val tbl = s"orders_dropcol_${graft.queries.StorageQueries.sfName(d)}"
     val src = s"${tbl}_src"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     Tables.orders(s, d)

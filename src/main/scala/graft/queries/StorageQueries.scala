@@ -221,13 +221,11 @@ object StorageQueries {
       |WHERE NOT (o_orderkey % 7 = 0) AND NOT (o_orderkey % 5 = 0)""".stripMargin) {
     (s, d) =>
       val tbl = s"orders_dv_${sfName(d)}"
-      // in-session rerun or fresh JVM over a used warehouse: drop the
-      // sidecar registration, clear every snapshot version, and clear
-      // the legacy managed dir the saveAsTable below re-creates.
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+      // in-session rerun or fresh JVM over a used warehouse: clear
+      // every snapshot version, and clear the legacy managed dir the
+      // saveAsTable below re-creates.
       graft.storage.SnapshotCommit.destroy(s, tbl)
-      Seq(tbl, s"${tbl}__dv").foreach(t =>
-        graft.core.CatalogUtil.dropOrphanLocation(s, t))
+      graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").cast("double").as("total"))
@@ -255,10 +253,8 @@ object StorageQueries {
       |WHERE NOT (o_orderkey % 7 = 0)""".stripMargin) {
     (s, d) =>
       val tbl = s"orders_tt_${sfName(d)}"
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
       graft.storage.SnapshotCommit.destroy(s, tbl)
-      Seq(tbl, s"${tbl}__dv").foreach(t =>
-        graft.core.CatalogUtil.dropOrphanLocation(s, t))
+      graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").cast("double").as("total"))
@@ -289,10 +285,8 @@ object StorageQueries {
       |  AND NOT (o_orderkey % 11 = 0)""".stripMargin) {
     (s, d) =>
       val tbl = s"orders_vac_${sfName(d)}"
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
       graft.storage.SnapshotCommit.destroy(s, tbl)
-      Seq(tbl, s"${tbl}__dv").foreach(t =>
-        graft.core.CatalogUtil.dropOrphanLocation(s, t))
+      graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").cast("double").as("total"))
@@ -455,8 +449,6 @@ object StorageQueries {
       val src = s"orders_clsrc_${sfName(d)}"
       val cln = s"orders_cldst_${sfName(d)}"
       Seq(src, cln).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS ${t}__dv")
-        graft.storage.SnapshotCommit.destroy(s, s"${t}__dv")
         graft.storage.SnapshotCommit.destroy(s, t)
         graft.core.CatalogUtil.dropOrphanLocation(s, t)
       }
@@ -493,7 +485,6 @@ object StorageQueries {
       |WHERE o_orderkey % 2 = 0 AND NOT (o_orderkey % 10 = 0)""".stripMargin) {
     (s, d) =>
       val tbl = s"orders_compact_${sfName(d)}"
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
       graft.storage.SnapshotCommit.destroy(s, tbl)
       graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
       graft.storage.SnapshotCommit.commit(s, tbl) { dir =>
@@ -618,7 +609,6 @@ object StorageQueries {
       |WHERE o_custkey BETWEEN 10 AND 60
       |  AND NOT (o_orderkey % 5 = 0)""".stripMargin) { (s, d) =>
     val tbl = s"orders_zopt_${sfName(d)}"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     graft.storage.SnapshotCommit.commit(s, tbl) { dir =>
@@ -657,7 +647,6 @@ object StorageQueries {
       |WHERE o_custkey BETWEEN 10 AND 60
       |  AND NOT (o_orderkey % 5 = 0)""".stripMargin) { (s, d) =>
     val tbl = s"orders_msql_${sfName(d)}"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     graft.storage.SnapshotCommit.commit(s, tbl) { dir =>
@@ -752,7 +741,6 @@ object StorageQueries {
       |  CAST((SELECT count(*) FROM lineitem) AS BIGINT) AS raw_rows"""
       .stripMargin) { (s, d) =>
     val tbl = s"lineitem_maggdv_${sfName(d)}"
-    s.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(s, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(s, tbl)
     graft.storage.StatsSkipping.commitWithStats(s, tbl, "l_orderkey") {

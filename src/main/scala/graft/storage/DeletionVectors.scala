@@ -14,8 +14,8 @@ import org.apache.hadoop.fs.Path
   * position inside its file) — so the same contract runs on plain
   * parquet:
   *
-  *  - [[delete]] appends the matched rows' (file, pos) pairs to a
-  *    `<table>__dv` sidecar, stamped with a monotonically increasing
+  *  - [[delete]] appends the matched rows' (file, pos) pairs to the
+  *    version's `_dv` sidecar, stamped with a monotonically increasing
   *    DELETE VERSION. The DATA FILES ARE NOT TOUCHED (StorageSpec pins
   *    their names, sizes and mtimes across a delete); repeated deletes
   *    accumulate.
@@ -43,9 +43,9 @@ import org.apache.hadoop.fs.Path
   * guarantee Delta's log gives a DV write. Data files move between
   * versions by hard link (directory entries — names, sizes and mtimes
   * preserved, no IO), and sidecar coordinates key on file BASENAME,
-  * which linking keeps stable across versions. The sidecar is also
-  * registered as the `<table>__dv` catalog table (re-pointed after each
-  * commit) so it stays directly queryable.
+  * which linking keeps stable across versions. The sidecar is a file
+  * of the version, not a table: no catalog entry names it, and every
+  * reader finds it by path from the current version directory.
   *
   * Scale: the sidecar is sized for the driver. Every path that reads
   * it (the stamp of each DML commit, delete, restore, vacuum, the
@@ -61,8 +61,6 @@ import org.apache.hadoop.fs.Path
   * query-visible semantics are identical.
   */
 object DeletionVectors {
-
-  private def dvName(table: String) = s"${table}__dv"
 
   /** Wall clock for delete-version timestamp sentinels — a test hook
     * (specs pin TIMESTAMP AS OF / RETAIN n HOURS resolution against
@@ -147,19 +145,6 @@ object DeletionVectors {
   private def dvDir(spark: SparkSession, table: String): Option[Path] =
     SnapshotCommit.currentLocation(spark, table).map(new Path(_, "_dv"))
 
-  /** Align the `<table>__dv` catalog table with the current snapshot's
-    * sidecar directory (or drop it when the current version carries no
-    * vectors). Idempotent; replays the registration tail of any
-    * interrupted commit. */
-  private def registerDv(spark: SparkSession, table: String): Unit =
-    dvDir(spark, table) match {
-      case Some(d) if fs(spark, d).exists(d) =>
-        SnapshotCommit.pointAt(spark, dvName(table), d)
-      case Some(_) =>
-        spark.sql(s"DROP TABLE IF EXISTS ${dvName(table)}")
-      case None => ()
-    }
-
   /** Carry every data file of the current version into a staged
     * snapshot directory, names preserved (SnapshotCommit.carry).
     * `except` filters by basename (vacuum skips the files it
@@ -207,29 +192,32 @@ object DeletionVectors {
     }
 
   /** The current sidecar rows ((f, p, v)), read DRIVER-SIDE — no
-    * catalog registration, no Spark job. The sidecar is broadcast-small
-    * by contract (every consumer collect()ed it already), so routing
-    * its read through the scheduler cost a full job round-trip per DML
-    * statement; the per-micro-batch commit loops (st21/st22's shape)
-    * pay that on every append. None when the current version carries no
-    * `_dv` directory — the same condition under which [[sidecarDf]]
-    * drops the catalog table. */
+    * Spark job. The sidecar is broadcast-small by contract (every
+    * consumer collect()ed it already), so routing its read through the
+    * scheduler cost a full job round-trip per DML statement; the
+    * per-micro-batch commit loops (st21/st22's shape) pay that on every
+    * append. None when the current version carries no `_dv`
+    * directory. */
   private def sidecarRowsLocal(spark: SparkSession,
       table: String): Option[Seq[(String, Long, Long)]] =
     dvDir(spark, table).flatMap(sidecarRowsAt(spark, _))
 
+  /** The parquet files of the sidecar directory `d`; empty when `d`
+    * does not exist. */
+  private def sidecarFiles(spark: SparkSession, d: Path): Seq[Path] =
+    try fs(spark, d).listStatus(d).toSeq
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath)
+    catch { case _: java.io.FileNotFoundException => Nil }
+
   /** The (f, p, v) rows of the sidecar directory `d` (any version's
     * `_dv`), read on the driver; None when `d` does not exist. */
   private[graft] def sidecarRowsAt(spark: SparkSession,
-      d: Path): Option[Seq[(String, Long, Long)]] = {
-    val f = fs(spark, d)
-    if (!f.exists(d)) None
-    else Some(f.listStatus(d).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .flatMap { st =>
+      d: Path): Option[Seq[(String, Long, Long)]] =
+    if (!fs(spark, d).exists(d)) None
+    else Some(sidecarFiles(spark, d).flatMap { file =>
         val rdr = org.apache.parquet.hadoop.ParquetReader.builder(
-          new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          st.getPath)
+          new org.apache.parquet.hadoop.example.GroupReadSupport(), file)
           .withConf(spark.sparkContext.hadoopConfiguration).build()
         try Iterator.continually(rdr.read()).takeWhile(_ != null)
           .map(g => (g.getString("f", 0),
@@ -237,30 +225,16 @@ object DeletionVectors {
           .toList
         finally rdr.close()
       })
-  }
 
   /** Driver-side counterpart of the stamp's sidecar write: one parquet
-    * file under `dir`, schema-compatible with the Spark-written
-    * sidecars every read path (including [[sidecarDf]] joins) consumes.
-    */
+    * file under `dir` with the [[SidecarSchema]] columns, which every
+    * read path (including [[maskAt]]'s join) consumes. */
   private def writeSidecarRows(spark: SparkSession, dir: Path,
       rows: Seq[(String, Long, Long)]): Unit = {
     import org.apache.parquet.schema.MessageTypeParser
     val schema = MessageTypeParser.parseMessageType(
       "message spark_schema { optional binary f (UTF8); " +
         "optional int64 p; optional int64 v; }")
-    // Spark's writer stamps the serialized Catalyst schema into the
-    // footer; stamp-written sidecars must carry the same key or the
-    // footerSparkSchema fast path (whose hot case IS the _dv sidecar's
-    // per-statement pointAt) silently falls back to a full DataSource
-    // inference pass on every sidecar registration.
-    val sparkSchemaJson = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("f",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("p",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.LongType))).json
     val hconf = spark.sparkContext.hadoopConfiguration
     fs(spark, dir).mkdirs(dir)
     val file = new Path(dir, "part-00000-graft-dv.parquet")
@@ -268,8 +242,6 @@ object DeletionVectors {
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
         .fromPath(file, hconf))
       .withConf(hconf).withType(schema)
-      .withExtraMetaData(java.util.Map.of(
-        "org.apache.spark.sql.parquet.row.metadata", sparkSchemaJson))
       .withCompressionCodec(
         org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
       .build()
@@ -278,14 +250,6 @@ object DeletionVectors {
       g.add("f", fb); g.add("p", p); g.add("v", v)
       w.write(g)
     } finally w.close()
-  }
-
-  /** The current sidecar frame ((f, p, v) rows), empty if none. */
-  private def sidecarDf(spark: SparkSession, table: String): Option[DataFrame] = {
-    registerDv(spark, table)
-    if (spark.catalog.tableExists(dvName(table)))
-      Some(spark.table(dvName(table)))
-    else None
   }
 
   /** The table's delete-version HIGH-WATER MARK: 0 before any delete,
@@ -331,7 +295,6 @@ object DeletionVectors {
       SnapshotCommit.carryBatchId(spark, cur, new Path(dir))
       committed = v
     }
-    registerDv(spark, table)
     committed
   }
 
@@ -391,12 +354,6 @@ object DeletionVectors {
         .withColumnRenamed("_dv_file", fileCol)
         .drop("_dv_pos"),
       Long.MaxValue)
-
-  /** Re-point (or drop) the `<table>__dv` catalog table after an
-    * externally-committed version change (SQL MERGE) — the same
-    * post-commit alignment [[delete]]/[[restore]]/[[vacuum]] do. */
-  private[graft] def realign(spark: SparkSession, table: String): Unit =
-    registerDv(spark, table)
 
   /** Stamp a staged commit with the NEXT change version: writes the
     * staged `_dv` sidecar = current sidecar, minus the data entries of
@@ -498,52 +455,54 @@ object DeletionVectors {
     if (f.listStatus(root).isEmpty) f.delete(root, false)
   }
 
-  /** Does the current sidecar hold a DATA coordinate (p >= 0)? Decided
-    * from the `_dv` files' parquet footers alone — the `p` column's
-    * min/max statistics, no row read and no Spark job — so the check
-    * costs the same at any sidecar size. A non-empty file whose footer
-    * gives `p` no usable range counts as holding coordinates. */
-  private def holdsCoordinates(spark: SparkSession, table: String): Boolean =
-    dvDir(spark, table).exists { d =>
-      val files =
-        try fs(spark, d).listStatus(d).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath)
-        catch { case _: java.io.FileNotFoundException => Nil }
-      val lines = StatsSkipping.footerLinesAll(
-        spark.sparkContext.hadoopConfiguration, files, Seq("p"))
-        .map(_.split('\t'))
-      val rows = lines.collect {
-        case Array(f, StatsSkipping.RowsCol, _, n, _) => f -> n.toLong }.toMap
-      val pMax = lines.collect {
-        case Array(f, "p", "long", _, mx) => f -> mx.toLong }.toMap
-      files.exists(f => rows(f.getName) > 0 &&
-        pMax.get(f.getName).forall(_ >= 0))
-    }
+  /** Do the sidecar `files` hold a DATA coordinate (p >= 0)? Decided
+    * from their parquet footers alone — the `p` column's min/max
+    * statistics, no row read and no Spark job — so the check costs the
+    * same at any sidecar size. A non-empty file whose footer gives `p`
+    * no usable range counts as holding coordinates. */
+  private def holdsCoordinates(spark: SparkSession,
+      files: Seq[Path]): Boolean = {
+    val lines = StatsSkipping.footerLinesAll(
+      spark.sparkContext.hadoopConfiguration, files, Seq("p"))
+      .map(_.split('\t'))
+    val rows = lines.collect {
+      case Array(f, StatsSkipping.RowsCol, _, n, _) => f -> n.toLong }.toMap
+    val pMax = lines.collect {
+      case Array(f, "p", "long", _, mx) => f -> mx.toLong }.toMap
+    files.exists(f => rows(f.getName) > 0 &&
+      pMax.get(f.getName).forall(_ >= 0))
+  }
 
-  /** `base` minus the sidecar coordinates stamped <= `v`. The IDENTITY
-    * while the sidecar holds no data coordinate ([[holdsCoordinates]]):
-    * sentinel rows (p = -1) match no data row, so a table that was only
-    * ever inserted into, updated or merged reads with no join and no
+  /** The sidecar's columns: data file basename, row position, change
+    * version. */
+  private val SidecarSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "f STRING, p BIGINT, v BIGINT")
+
+  /** `base` minus the sidecar coordinates stamped <= `v`, the sidecar
+    * read by path from the current version's `_dv` directory, resolved
+    * once for both the check and the join. The IDENTITY while the
+    * sidecar holds no data coordinate ([[holdsCoordinates]]): sentinel
+    * rows (p = -1) match no data row, so a table that was only ever
+    * inserted into, updated or merged reads with no join and no
     * broadcast job. */
   private def maskAt(spark: SparkSession, table: String, base: DataFrame,
-      v: Long): DataFrame =
-    if (!holdsCoordinates(spark, table)) base
-    else sidecarDf(spark, table) match {
-      case None => base
+      v: Long): DataFrame = dvDir(spark, table) match {
+    case Some(d) if holdsCoordinates(spark, sidecarFiles(spark, d)) =>
+      val sc = spark.read.schema(SidecarSchema).parquet(d.toString)
       // The sidecar's key columns are RENAMED before the join: a user
       // table legitimately carrying a column named `f` or `p` would
       // otherwise make the join condition ambiguous and every DV read
       // throw AMBIGUOUS_REFERENCE. (`_dv_`-prefixed names remain
       // reserved, as withCoords already requires.)
-      case Some(sc) => withCoords(base)
+      withCoords(base)
         .join(broadcast(sc.filter(col("v") <= v)
             .select(col("f").as("_dv_f"), col("p").as("_dv_p"))),
           col("_dv_file") === col("_dv_f") &&
             col("_dv_pos") === col("_dv_p"),
           "left_anti")
         .drop("_dv_file", "_dv_pos")
-    }
+    case _ => base
+  }
 
   /** RESTORE TABLE ... TO VERSION AS OF `v`: one atomic commit with the
     * data files linked unchanged and every DATA sidecar entry stamped
@@ -596,7 +555,6 @@ object DeletionVectors {
         StatsSkipping.refreshStats(spark, cur, new Path(dir))
         SnapshotCommit.carryBatchId(spark, cur, new Path(dir))
       }
-      registerDv(spark, table)
     }
 
   /** `VACUUM ... DRY RUN`: the files a vacuum at `cutoff` WOULD
@@ -781,7 +739,6 @@ object DeletionVectors {
       SnapshotCommit.carryBatchId(spark, cur, to)
     } finally sfs.delete(stagingPath, true)
     pruneImages(spark, table, cutoff) // folded UPDATE images go too
-    registerDv(spark, table)
     spark.sql(s"REFRESH TABLE $table")
   }
 
@@ -1063,6 +1020,5 @@ object DeletionVectors {
       }
     }
     pruneImages(spark, table, Long.MaxValue) // history folded away
-    spark.sql(s"DROP TABLE IF EXISTS ${dvName(table)}")
   }
 }

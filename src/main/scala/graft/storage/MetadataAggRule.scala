@@ -89,8 +89,9 @@ object MetadataAggRule extends Rule[LogicalPlan] {
     *    from the `_metadata` struct (file/row coordinates), so left row
     *    count = raw file row count, with NO Filter in between;
     *  - the RIGHT must be (a projection of, optionally a Filter over)
-    *    the SAME version directory's `_dv` sidecar — verified by path:
-    *    one distinct left parent D, right files under D/_dv. The
+    *    the SAME version directory's `_dv` sidecar, which maskAt reads
+    *    as a path relation (no catalog entry names it) — verified by
+    *    path: one distinct left parent D, right files under D/_dv. The
     *    sidecar's own `v <= bound` time-travel Filter is KEPT in the
     *    rewrite, so `readAt(v)` counts answer exactly as of v;
     *  - sentinel rows (p = -1, which match no data row) are filtered;
@@ -127,7 +128,7 @@ object MetadataAggRule extends Rule[LogicalPlan] {
             case _ => None
           }
           // right: Project of bare f/p attrs over (Filter over)? the
-          // SAME version's _dv sidecar relation
+          // SAME version's _dv sidecar, read by path
           (fOut, pOut, rightRel) <- right match {
             case p @ Project(ps, child) if ps.length == 2 =>
               val named = ps.flatMap {

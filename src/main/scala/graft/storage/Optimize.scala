@@ -115,7 +115,6 @@ object Optimize {
         SnapshotCommit.carryBatchId(spark, cur, new Path(dir))
       }
     }
-    DeletionVectors.realign(spark, table)
     (files.length, spark.table(table).inputFiles.length)
   }
 
@@ -151,6 +150,5 @@ object Optimize {
       SnapshotCommit.currentLocation(spark, table).foreach(cur =>
         SnapshotCommit.carryBatchId(spark, cur, new Path(dir)))
     }
-    DeletionVectors.realign(spark, table)
   }
 }

@@ -624,10 +624,6 @@ object SnapshotCommit {
       }
     }
 
-  /** Create `table` at `loc`, or re-point a registration whose catalog
-    * location differs. Also used for sidecar tables that live INSIDE a
-    * snapshot (DeletionVectors' `_dv` — whose READ path calls this per
-    * query, which is why the aligned fast path below matters). */
   /** The Catalyst schema one data file's footer declares, via the
     * serialized Spark schema key Spark's own inference consults first —
     * a single footer read instead of a full DataSource inference pass
@@ -658,9 +654,10 @@ object SnapshotCommit {
       }
     }.toOption.flatten
 
-  /** Re-point the session catalog's registration of `table` at `loc`
-    * (creating it when absent), repairing schema drift when the
-    * location move crossed a widening/narrowing commit.
+  /** Create `table` at `loc`, or re-point a registration whose catalog
+    * location differs (the aligned case returns on the fast path below),
+    * repairing schema drift when the location move crossed a
+    * widening/narrowing commit.
     *
     * CACHING CONTRACT: registration invalidates the session's RELATION
     * cache only (SessionCatalog.refreshTable). Plans a caller pinned
@@ -691,16 +688,17 @@ object SnapshotCommit {
         spark.catalog.dropTempView(table)
       if (!spark.catalog.tableExists(table))
         // IF NOT EXISTS: two threads can race the tableExists probe on an
-        // unregistered table (e.g. concurrent first DV reads of one
-        // sidecar); the loser must fall through, not throw
-        // TableAlreadyExists out of a read.
+        // unregistered table (e.g. two writers' first commits, or a
+        // commit racing a register() from a read path); the loser must
+        // fall through, not throw TableAlreadyExists out of a read.
         spark.sql(s"CREATE TABLE IF NOT EXISTS $table USING parquet " +
           s"LOCATION '$loc' TBLPROPERTIES ('graft.incarnation' = " +
           s"'${java.util.UUID.randomUUID()}')")
       // NOT an else: a loser of the CREATE IF NOT EXISTS race falls
       // through with the WINNER's registration in place — if the winner
-      // created the table at a different location (e.g. a first DV read
-      // racing a delete's post-commit registerDv), proceeding without
+      // created the table at a different location (e.g. a reader's
+      // register() racing a writer's post-commit re-point to the next
+      // version), proceeding without
       // re-checking would leave this caller silently reading the winner's
       // location. The alignment check below is shared by both arrivals:
       // a winner (or already-registered caller) at `loc` passes it and
@@ -1016,13 +1014,10 @@ object SnapshotCommit {
     // A same-name temp view goes too: it would shadow the rebuilt table.
     spark.catalog.dropTempView(table)
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    // The DV sidecar registration dies with the root (r17): a rebuild
-    // recreates the SAME version-dir paths, and a surviving `__dv`
-    // catalog entry — aligned by location string — would serve the old
-    // run's file listing from the relation cache (FILE_NOT_EXIST on
-    // the recreated _dv; surfaced by bench's min-of-3 reruns once the
-    // streaming sink started stamping sidecars on every table).
-    spark.sql(s"DROP TABLE IF EXISTS ${table}__dv")
+    // The deletion-vector sidecar is a file of each version, found by
+    // path and listed afresh by every read, so it dies with the root: a
+    // rebuild that recreates the SAME v<N>/_dv paths cannot be served
+    // the old run's listing.
     val root = rootDir(spark, table)
     StatsSkipping.invalidate(root) // rebuilt v<N> paths re-probe sidecars
     val fs = fsOf(spark, root)

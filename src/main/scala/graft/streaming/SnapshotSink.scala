@@ -151,9 +151,6 @@ object SnapshotSink {
         try out.write(batchId.toString.getBytes("UTF-8"))
         finally out.close()
       }
-      // Re-point the <table>__dv registration at the published
-      // version's freshly-stamped sidecar (the DML realign contract).
-      graft.storage.DeletionVectors.realign(spark, table)
       true
     } catch { case _: AlreadyCommitted | _: EmptyBatch => false }
   }

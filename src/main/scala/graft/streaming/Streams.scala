@@ -1130,7 +1130,6 @@ object Streams {
     val ss = eventsSession(spark)
     val k = saneKey(sfDir).replaceAll("[^A-Za-z0-9_]", "_")
     val tbl = s"st22_merge_$k"
-    ss.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     graft.storage.SnapshotCommit.destroy(ss, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(ss, tbl)
     // Seed v1 EMPTY but schema-bearing (one empty part file carries the

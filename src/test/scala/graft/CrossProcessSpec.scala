@@ -165,8 +165,7 @@ class CrossProcessSpec extends SparkSpec {
   test("two JVM processes race deletion-vector deletes: every residue " +
       "class lands, stamps and versions serialize") {
     val tbl = "xproc_dv_tbl"
-    Seq(tbl, s"${tbl}__dv").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t"))
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
     SnapshotCommit.destroy(spark, tbl)
     // Seed v1: 1000 rows in two files, adopted into snapshot form so
     // both children's first delete races against the same real version.

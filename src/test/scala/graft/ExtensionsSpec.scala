@@ -98,7 +98,6 @@ class ExtensionsSpec extends SparkSpec {
     // (item, value) metric rows.
     val tbl = "sqlsurface_tbl"; val cln = "sqlsurface_cln"
     Seq(tbl, cln).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS ${t}__dv")
       SnapshotCommit.destroy(spark, t)
     }
     SnapshotCommit.commit(spark, tbl) { dir =>
@@ -138,7 +137,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(m("files_after").toInt <= m("files_before").toInt)
     assert(DeletionVectors.read(spark, cln).count() === live)
     Seq(tbl, cln).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS ${t}__dv")
       SnapshotCommit.destroy(spark, t)
     }
   }
@@ -149,7 +147,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "merge_sql_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     SnapshotCommit.commit(spark, tbl) { dir =>
       spark.range(0, 10)
@@ -226,7 +223,6 @@ class ExtensionsSpec extends SparkSpec {
     SnapshotCommit.register(spark, tbl)
     assert(spark.table(tbl).select("id").collect().map(_.getLong(0)).toSet
       === Set(100L, 101L, 102L))
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -236,7 +232,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.{GraftHistoryCommand, GraftSqlParser}
     import graft.storage.SnapshotCommit
     val tbl = "history_sql_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     for (i <- 1 to 3)
       SnapshotCommit.commit(spark, tbl) { dir =>
@@ -284,7 +279,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(detail("deleteVersion") === "1")
     intercept[Exception](
       GraftSqlParser.sql(spark, "DESCRIBE DETAIL history_sql_missing"))
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -294,7 +288,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "dml_sql_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     SnapshotCommit.commit(spark, tbl) { dir =>
       spark.range(0, 100).select(col("id"), (col("id") * 10).as("v"))
@@ -356,7 +349,6 @@ class ExtensionsSpec extends SparkSpec {
     // Statement terminators parse (every reference SQL file ends in one).
     assert(GraftSqlParser.sql(spark, s"DESCRIBE HISTORY $tbl;")
       .count() >= 1)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -568,7 +560,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "restore_ts_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     SnapshotCommit.commit(spark, tbl) { dir =>
       spark.range(0, 100).select(col("id"), (col("id") * 10).as("v"))
@@ -614,7 +605,6 @@ class ExtensionsSpec extends SparkSpec {
     intercept[Exception](GraftSqlParser.sql(spark,
       s"ALTER TABLE $tbl SET TBLPROPERTIES ('location' = '/elsewhere')"))
     assert(!SnapshotCommit.properties(spark, tbl).contains("location"))
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -625,7 +615,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "ts_asof_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     SnapshotCommit.commit(spark, tbl) { dir =>
       spark.range(0, 100).select(col("id"), (col("id") * 10).as("v"))
@@ -701,7 +690,6 @@ class ExtensionsSpec extends SparkSpec {
         t0 + 20L * 3600 * 1000) === 2,
         "a fully-vacuumed table still resolves current timestamps")
     } finally DeletionVectors.clockMs = prevClock
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -711,7 +699,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "tcf_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     SnapshotCommit.commit(spark, tbl) { dir =>
       spark.range(0, 100).select(col("id"), (col("id") * 10).as("v"))
@@ -757,7 +744,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(GraftSqlParser.sql(spark,
       s"SELECT count(*) AS n FROM table_changes('$tbl', 0, 1)")
       .collect()(0).getLong(0) === 15L)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -768,7 +754,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "tcf_model_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     GraftSqlParser.sql(spark, s"CREATE TABLE $tbl AS " +
@@ -840,7 +825,6 @@ class ExtensionsSpec extends SparkSpec {
     val liveRows = DeletionVectors.read(spark, tbl)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(liveRows === live.toMap, "the live view must match the model")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -851,7 +835,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit, StatsSkipping}
     val tbl = "merge_nd_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     // Stats present so sourceKeyRange RUNS (the advice's hazard: its
     // extra evaluation of an unpinned source could derive bounds that
@@ -880,7 +863,6 @@ class ExtensionsSpec extends SparkSpec {
       assert(rows.toSet === (0L until 1000L).toSet,
         s"round $round: key set must be stable")
     }
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -891,7 +873,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "addcol_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     GraftSqlParser.sql(spark, s"CREATE TABLE $tbl AS " +
@@ -961,7 +942,6 @@ class ExtensionsSpec extends SparkSpec {
     GraftSqlParser.sql(spark, s"ALTER TABLE $plain ADD COLUMNS (b STRING)")
     assert(spark.table(plain).columns.toSeq === Seq("a", "b"))
     spark.sql(s"DROP TABLE IF EXISTS $plain")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -973,7 +953,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "tcf_full_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     GraftSqlParser.sql(spark, s"CREATE TABLE $tbl AS " +
@@ -1095,7 +1074,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(GraftSqlParser.sql(spark,
       s"SELECT count(*) AS n FROM table_changes('$tbl', 2, 3)")
       .collect()(0).getLong(0) === 2L)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1105,7 +1083,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.SnapshotCommit
     val tbl = "tc_ts_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     def fmt(ms: Long): String = java.time.Instant.ofEpochMilli(ms)
@@ -1151,7 +1128,6 @@ class ExtensionsSpec extends SparkSpec {
       s"SELECT * FROM table_changes('$tbl', 'not a time', 1)"))
     assert(g.getMessage.contains("neither a version number nor a " +
       "parseable timestamp"), g.getMessage)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1161,7 +1137,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit, StatsSkipping}
     val tbl = "ctas_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     GraftSqlParser.sql(spark,
       s"CREATE TABLE $tbl AS SELECT id, id * 2 AS v FROM range(100)")
@@ -1253,7 +1228,6 @@ class ExtensionsSpec extends SparkSpec {
     if (ovFiles > 1)
       assert(StatsSkipping.survivingFiles(spark, tbl, "id", 1L, 3L).size
         < ovFiles, "INSERT OVERWRITE must recompute per-file stats")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1263,7 +1237,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "check_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     GraftSqlParser.sql(spark, s"CREATE TABLE $tbl AS " +
@@ -1326,7 +1299,6 @@ class ExtensionsSpec extends SparkSpec {
     GraftSqlParser.sql(spark, s"INSERT INTO $tbl VALUES (101, -1)")
     assert(DeletionVectors.read(spark, tbl)
       .filter(col("v") === -1L).count() === 1)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1337,7 +1309,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{SnapshotCommit, StatsSkipping}
     val tbl = "cluster_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     GraftSqlParser.sql(spark, s"CREATE TABLE $tbl AS SELECT " +
@@ -1392,7 +1363,6 @@ class ExtensionsSpec extends SparkSpec {
     GraftSqlParser.sql(spark, s"VACUUM $tbl RETAIN 1 VERSIONS").collect()
     assert(filesBefore -- files() ===
       dry.collect { case ("file", f) => f }.toSet)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1402,7 +1372,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "reorg_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     GraftSqlParser.sql(spark, s"CREATE TABLE $tbl AS " +
@@ -1418,7 +1387,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(DeletionVectors.read(spark, tbl).count() === 90)
     assert(spark.table(tbl).count() === 90,
       "after PURGE the raw files themselves exclude the deleted rows")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1429,7 +1397,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "dropcol_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     GraftSqlParser.sql(spark, s"CREATE TABLE $tbl AS SELECT id, " +
@@ -1477,13 +1444,11 @@ class ExtensionsSpec extends SparkSpec {
       s"ALTER TABLE $plain DROP COLUMN id"))
     assert(ep.getMessage.contains("CONVERT"), ep.getMessage)
     spark.sql(s"DROP TABLE IF EXISTS $plain")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     // A saveAsTable-then-CONVERT table stays MANAGED in the catalog —
     // the narrowing re-declare must not let the managed drop delete
     // the live version directory (review r17).
     val mtbl = "dropcol_managed_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${mtbl}__dv")
     SnapshotCommit.destroy(spark, mtbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, mtbl)
     spark.range(0, 10).select(col("id"), (col("id") * 2).as("v"))
@@ -1493,7 +1458,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(spark.table(mtbl).columns.toSeq === Seq("id"))
     assert(spark.table(mtbl).count() === 10,
       "the managed->narrowed re-declare must not delete the data")
-    spark.sql(s"DROP TABLE IF EXISTS ${mtbl}__dv")
     SnapshotCommit.destroy(spark, mtbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, mtbl)
     // A CHECK blocks the drop of the columns its expression references,
@@ -1522,7 +1486,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit, StatsSkipping}
     val tbl = "convert_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     // A plain parquet catalog table with several files and disjoint
@@ -1556,13 +1519,11 @@ class ExtensionsSpec extends SparkSpec {
     assert(GraftSqlParser.sql(spark,
       s"SELECT count(*) AS n FROM $tbl VERSION AS OF 0")
       .collect()(0).getLong(0) === 1000L)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     // NO STATISTICS: versioned but statless — every file survives a
     // range probe (conservative contract).
     val tbl2 = "convert_nostats_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl2}__dv")
     SnapshotCommit.destroy(spark, tbl2)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl2)
     spark.range(0, 100).select(col("id"))
@@ -1572,7 +1533,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(SnapshotCommit.register(spark, tbl2).contains(1L))
     assert(StatsSkipping.survivingFiles(spark, tbl2, "id", 1L, 2L).size
       === 4, "NO STATISTICS must skip the footer pass")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl2}__dv")
     SnapshotCommit.destroy(spark, tbl2)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl2)
     // Loud rejections: a missing table, a partitioned table, the
@@ -1616,7 +1576,6 @@ class ExtensionsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
     // A one-version versioned table, rebuilt before every statement.
     def fresh(): Map[String, Long] = {
-      spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
       SnapshotCommit.destroy(spark, tbl)
       graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
       SnapshotCommit.commit(spark, tbl) { dir =>
@@ -1660,7 +1619,6 @@ class ExtensionsSpec extends SparkSpec {
           assert(rows() === base)
       }
     }
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     // A plain catalog table runs Spark's own plan for the same shapes.
     val plain = "ins_shape_plain"
@@ -1682,7 +1640,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "merge_subq_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     SnapshotCommit.commit(spark, tbl) { dir =>
       spark.range(0, 10).select(col("id"), (col("id") * 10).as("v"))
@@ -1703,7 +1660,6 @@ class ExtensionsSpec extends SparkSpec {
     val after = rows()
     assert(after.size === 14 && !after.contains(1L))
     assert(after(0L) === -1L && after(2L) === -1L && after(3L) === 30L)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1792,7 +1748,6 @@ class ExtensionsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.ext.GraftSqlParser
     import graft.storage.SnapshotCommit
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     SnapshotCommit.commit(spark, tbl) { dir =>
       spark.range(0, rows).select(col("id").as("k"),
@@ -1863,7 +1818,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(live.filter(col("status") === "U").count() ===
       (0L until 20000L).count(_ % 97 == 5) -
         (0 until 50).map(_ * 400L + 7).count(_ % 97 == 5))
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1916,7 +1870,6 @@ class ExtensionsSpec extends SparkSpec {
         st == null || st.isEmpty || !st.hasNonNullValue
       }, "the rewritten sidecar must carry no usable statistics")
     } finally footer.close()
-    spark.sql(s"REFRESH TABLE ${tbl}__dv")
     assert(live.count() === 18001L, "a stats-less sidecar must still mask")
     assert(live.filter(col("k") % 10 === 3).count() === 0L)
     assert(countAsOf(vBefore) === 20001L)
@@ -1948,7 +1901,39 @@ class ExtensionsSpec extends SparkSpec {
     assert(feed === Set((14L, "U", "update_preimage"),
       (14L, "M", "update_postimage"), (13L, "M", "insert"),
       (50000L, "M", "insert")), feed.toString)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+  }
+
+  test("a masked read over a Spark-written multi-part sidecar reads its " +
+      "_dv directory as one root path: no listing job, whatever the part " +
+      "count") {
+    import org.apache.spark.sql.functions._
+    import graft.ext.GraftSqlParser
+    import graft.storage.{DeletionVectors, SnapshotCommit}
+    val tbl = "dv_parts_tbl"
+    sentinelOnlyTable(tbl)
+    GraftSqlParser.sql(spark, s"DELETE FROM $tbl WHERE k % 250 = 3")
+    def live = DeletionVectors.read(spark, tbl)
+    val (oneFileJobs, n0) = jobsOf(live.collect().length)
+    assert(n0 === 19921)
+
+    // Rewrite the sidecar the way older tables hold it: Spark-written,
+    // two rows a file, more parts than Spark lists serially (32).
+    val dvDir = new org.apache.hadoop.fs.Path(
+      SnapshotCommit.currentLocation(spark, tbl).get, "_dv")
+    val rows = DeletionVectors.sidecarRowsAt(spark, dvDir).get
+    spark.createDataFrame(rows).toDF("f", "p", "v").coalesce(1)
+      .write.mode("overwrite").option("maxRecordsPerFile", 2L)
+      .parquet(dvDir.toString)
+    val parts = dvDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dvDir).count(_.getPath.getName.endsWith(".parquet"))
+    assert(parts > 32, s"$parts parts")
+
+    val (jobs, n) = jobsOf(live.collect().length)
+    assert(n === 19921)
+    assert(jobs.size === oneFileJobs.size, jobs.mkString("\n"))
+    assert(live.filter(col("k") % 250 === 3).count() === 0L)
+    assert(live.count() === 19921L)
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1958,7 +1943,6 @@ class ExtensionsSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit, StatsSkipping}
     val tbl = "dv_sentinel_count_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     StatsSkipping.commitWithStats(spark, tbl, "id") { stage =>
       spark.range(0, 3000).select(col("id"), (col("id") % 7).as("g"))
@@ -1974,7 +1958,6 @@ class ExtensionsSpec extends SparkSpec {
     val plan = n.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
     assert(!plan.contains("Scan parquet"), plan)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1999,7 +1982,86 @@ class ExtensionsSpec extends SparkSpec {
       assert(SnapshotCommit.currentVersion(spark, tbl) === before)
       assert(SnapshotCommit.dataFiles(spark, tbl).map(_._1).sorted === files)
     }
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
+    SnapshotCommit.destroy(spark, tbl)
+  }
+
+  test("the deletion vector is a file of its version: DML and maintenance " +
+      "register no `<t>__dv` catalog entry, a rebuild at the same path " +
+      "masks only its own deletes, and a fresh session reads the same rows") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.functions._
+    import graft.ext.GraftSqlParser
+    import graft.storage.{DeletionVectors, SnapshotCommit, StatsSkipping}
+    val tbl = "dv_by_path_tbl"
+    def build(): Unit = {
+      SnapshotCommit.destroy(spark, tbl)
+      StatsSkipping.commitWithStats(spark, tbl, "k") { stage =>
+        spark.range(0, 1000).select(col("id").as("k"), (col("id") % 7).as("v"))
+          .repartitionByRange(4, col("k")).write.parquet(stage)
+      }
+      SnapshotCommit.register(spark, tbl)
+    }
+    def sql(q: String): Unit = GraftSqlParser.sql(spark, q).collect()
+    def rows(s: SparkSession): Map[Long, Long] =
+      DeletionVectors.read(s, tbl).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // count(*) through the mask: the metadata rewrite reads only the
+    // sidecar, which it must find under the data files' own directory.
+    def counted(): Long = {
+      val n = DeletionVectors.read(spark, tbl).agg(count(lit(1)))
+      val v = n.collect()(0).getLong(0)
+      val scanned = new org.apache.spark.sql.execution.adaptive
+          .AdaptiveSparkPlanHelper {}.collect(n.queryExecution.executedPlan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.inputFiles.toSeq
+      }.flatten
+      assert(scanned.nonEmpty && scanned.forall(_.contains("/_dv/")),
+        scanned.mkString(", "))
+      v
+    }
+    StatsSkipping.installRule(spark)
+
+    build()
+    sql(s"DELETE FROM $tbl WHERE k < 100")
+    assert(rows(spark).keySet === (100L until 1000L).toSet)
+    sql(s"UPDATE $tbl SET v = 100 WHERE k >= 900")
+    spark.sql("CREATE OR REPLACE TEMP VIEW dv_by_path_src AS SELECT * " +
+      "FROM VALUES (500L, -5L), (2000L, -6L) AS s(k, v)")
+    sql(s"MERGE INTO $tbl t USING dv_by_path_src s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    sql(s"OPTIMIZE $tbl")
+    sql(s"DELETE FROM $tbl WHERE k % 10 = 3")
+    val vRestore = DeletionVectors.version(spark, tbl)
+    sql(s"DELETE FROM $tbl WHERE k % 10 = 4")
+    sql(s"RESTORE TABLE $tbl TO VERSION AS OF $vRestore")
+    sql(s"DELETE FROM $tbl WHERE k % 10 = 5")
+    sql(s"VACUUM $tbl RETAIN 1 VERSIONS")
+    // The vacuum folded the k % 10 = 3 delete; k % 10 = 5 stays a
+    // coordinate, so the read below goes through the mask's join.
+    val dv = new org.apache.hadoop.fs.Path(
+      SnapshotCommit.currentLocation(spark, tbl).get, "_dv")
+    assert(DeletionVectors.sidecarRowsAt(spark, dv).get.exists(_._2 >= 0))
+    val expected = ((100L until 1000L) :+ 2000L)
+      .filter(k => k % 10 != 3 && k % 10 != 5)
+      .map(k => k -> (if (k == 500L) -5L else if (k == 2000L) -6L
+        else if (k >= 900L) 100L else k % 7)).toMap
+    assert(rows(spark) === expected)
+    assert(counted() === expected.size.toLong)
+    assert(!spark.catalog.listTables().collect().exists(_.name == s"${tbl}__dv"))
+
+    // Rebuilt at the same path, the table reuses v2/_dv for its first
+    // delete; the read must list the new sidecar, not the old run's.
+    build()
+    sql(s"DELETE FROM $tbl WHERE k % 2 = 0")
+    val odd = (0L until 1000L).filter(_ % 2 == 1).map(k => k -> k % 7).toMap
+    assert(rows(spark) === odd)
+    assert(counted() === 500L)
+    sql(s"DELETE FROM $tbl WHERE k < 11")
+    assert(rows(spark) === odd.filter(_._1 >= 11L))
+    assert(counted() === 495L)
+    // A session that never read the table: empty relation cache.
+    assert(rows(spark.newSession()) === odd.filter(_._1 >= 11L))
+    assert(!spark.catalog.listTables().collect().exists(_.name == s"${tbl}__dv"))
     SnapshotCommit.destroy(spark, tbl)
   }
 }

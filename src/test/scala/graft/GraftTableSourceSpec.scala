@@ -214,7 +214,6 @@ class GraftTableSourceSpec extends SparkSpec {
   test("change commits fail loudly; skipChangeCommits streams the " +
       "appends and ignores removals/DV changes") {
     val tbl = "gts_change_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     val ckpt = SparkSpec.tempDir("gts_ckpt_chg").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -252,7 +251,6 @@ class GraftTableSourceSpec extends SparkSpec {
     assert(seen.asScala.toSet === (100L until 105L).toSet,
       s"skipChangeCommits must skip the change commit's added files " +
         s"too (Delta semantics), got ${seen.asScala.toSet}")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -262,7 +260,6 @@ class GraftTableSourceSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.streaming.GraftTableSource
     val tbl = "gts_fingerprint_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     // The fingerprint as manifests recorded it before it moved to the
     // driver: one Spark aggregate over the version's `_dv` directory.
@@ -302,7 +299,6 @@ class GraftTableSourceSpec extends SparkSpec {
         .write.parquet(new Path(dir, "_dv").toString)
       SnapshotCommit.carryData(spark, cur, new Path(dir))
     }
-    DeletionVectors.realign(spark, tbl)
     assert(dv().getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(dv()).count(_.getPath.getName.endsWith(".parquet")) > 1)
     GraftSqlParser.sql(spark, s"INSERT INTO $tbl VALUES (101, 202)")
@@ -313,14 +309,12 @@ class GraftTableSourceSpec extends SparkSpec {
     assert(check().startsWith("18:"))
     DeletionVectors.delete(spark, tbl, col("id") === 101)
     assert(check().startsWith("19:"))
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
   test("a CHUNKED initial snapshot masks pre-existing DV deletes in " +
       "EVERY chunk, not just the first (r17 corruption fix)") {
     val tbl = "gts_chunkmask_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     // 6 files x 10 rows; the delete hits every file (id % 10 == 0), so
     // any unmasked chunk would resurrect at least one dead row.
@@ -351,7 +345,6 @@ class GraftTableSourceSpec extends SparkSpec {
       (0L until 60L).filterNot(_ % 10 == 0).toSet,
       "every chunk of the initial snapshot must serve the DV-masked " +
         s"state; got ${seen.asScala.toSet.toSeq.sorted}")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -359,7 +352,6 @@ class GraftTableSourceSpec extends SparkSpec {
       "loudly (default) and skips exactly (skipChangeCommits) — " +
       "endpoint-only diffing missed it (r17)") {
     val tbl = "gts_midchange_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     val ckpt = SparkSpec.tempDir("gts_ckpt_mid").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -400,7 +392,6 @@ class GraftTableSourceSpec extends SparkSpec {
     seen.clear()
     drain(tbl, ckpt, skipChangeCommits = true)(collect)
     assert(seen.asScala.toSet === (100L until 105L).toSet)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -456,7 +447,6 @@ class GraftTableSourceSpec extends SparkSpec {
   test("a widening ALTER observed mid-stream fails loudly; a versioned " +
       "INSERT INTO streams as a plain append (r17)") {
     val tbl = "gts_alter_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     val ckpt = SparkSpec.tempDir("gts_ckpt_alter").toString
@@ -510,7 +500,6 @@ class GraftTableSourceSpec extends SparkSpec {
       s"the restarted stream serves the post-alter append, got " +
         s"${seen.asScala.toSet}")
     assert(wide.get() > 0, "the restarted stream carries the new column")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -518,7 +507,6 @@ class GraftTableSourceSpec extends SparkSpec {
       "across restarts; default start serves only future changes; " +
       "unanswerable spans fail the stream (r17)") {
     val tbl = "gts_cdc_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     graft.ext.GraftSqlParser.sql(spark, s"CREATE TABLE $tbl AS " +
@@ -596,7 +584,6 @@ class GraftTableSourceSpec extends SparkSpec {
     assert(causes(e).exists(m => m != null &&
       m.contains("WITHOUT change-data-feed")),
       s"wanted the unrecorded-span failure, got: ${causes(e)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -605,7 +592,6 @@ class GraftTableSourceSpec extends SparkSpec {
       "with later DML") {
     import graft.streaming.SnapshotSink
     val tbl = "sink_cdc_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     assert(SnapshotSink.append(spark, tbl, 0L,
@@ -633,7 +619,6 @@ class GraftTableSourceSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
       .toSet
     assert(del === Set((4L, "delete", 3L)), s"got $del")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -641,7 +626,6 @@ class GraftTableSourceSpec extends SparkSpec {
       "INCLUSIVE (Delta's contract), startingTimestamp replays from " +
       "an instant, and misapplied options are loud") {
     val tbl = "gts_cdc_start_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     graft.ext.GraftSqlParser.sql(spark, s"CREATE TABLE $tbl AS " +
@@ -706,7 +690,6 @@ class GraftTableSourceSpec extends SparkSpec {
     assert(causes(e).exists(m => m != null &&
       m.contains("after the latest change commit")),
       s"wanted the past-latest failure, got: ${causes(e)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 

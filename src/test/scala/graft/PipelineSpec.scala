@@ -815,7 +815,6 @@ class PipelineSpec extends SparkSpec {
     assert(!SnapshotSink.append(spark, tbl, 2L, b1),
       "post-compaction replay re-appended a committed batch")
     assert(spark.table(tbl).count() === 150L)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     // An EMPTY first micro-batch into a fresh table (zero partitions,
     // and several empty ones), then a non-empty one: both versions

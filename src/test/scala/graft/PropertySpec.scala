@@ -202,7 +202,6 @@ class PropertySpec extends SparkSpec {
     for (((p1, p2), i) <- preds.zipWithIndex) {
       val tbl = s"dv_prop_$i"
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
       spark.range(0, 500).select(col("id"), (col("id") * 2).as("v"))
         .write.mode("overwrite").format("parquet").saveAsTable(tbl)
       DeletionVectors.delete(spark, tbl, p1)

@@ -9,6 +9,13 @@ import graft.queries.StorageQueries
   */
 class StorageSpec extends SparkSpec {
 
+  /** The current version's `_dv` sidecar rows; None when that version
+    * has no `_dv` directory. */
+  private def currentSidecar(tbl: String): Option[Seq[(String, Long, Long)]] =
+    graft.storage.DeletionVectors.sidecarRowsAt(spark,
+      new org.apache.hadoop.fs.Path(
+        graft.storage.SnapshotCommit.currentLocation(spark, tbl).get, "_dv"))
+
   test("bucketed join + same-key aggregation runs without a shuffle") {
     val df = StorageQueries.b1BucketedJoin.fn(spark, Sf0001)
     df.collect()
@@ -87,7 +94,6 @@ class StorageSpec extends SparkSpec {
     import graft.storage.DeletionVectors
     val tbl = "dv_spec_tbl"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     spark.range(0, 1000).select(col("id"), (col("id") * 3).as("v"))
       .write.mode("overwrite").format("parquet").saveAsTable(tbl)
     def listing(): Set[(String, Long, Long)] = {
@@ -110,7 +116,7 @@ class StorageSpec extends SparkSpec {
     // compact folds the vectors in: files rewritten, sidecar gone,
     // visible rows unchanged
     DeletionVectors.compact(spark, tbl)
-    assert(!spark.catalog.tableExists(s"${tbl}__dv"))
+    assert(currentSidecar(tbl).isEmpty)
     assert(spark.table(tbl).count() === 810)
     assert(DeletionVectors.read(spark, tbl).count() === 810)
   }
@@ -120,7 +126,6 @@ class StorageSpec extends SparkSpec {
     import graft.storage.DeletionVectors
     val tbl = "dv_tt_spec_tbl"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     spark.range(0, 1000).select(col("id"), (col("id") * 3).as("v"))
       .write.mode("overwrite").format("parquet").saveAsTable(tbl)
     def listing(): Set[(String, Long, Long)] = {
@@ -420,7 +425,7 @@ class StorageSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "dv_conc_spec_tbl"
-    Seq(tbl, s"${tbl}__dv").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
     SnapshotCommit.destroy(spark, tbl)
     spark.range(0, 1000).select(col("id"), (col("id") * 3).as("v"))
       .write.mode("overwrite").format("parquet").saveAsTable(tbl)
@@ -464,7 +469,7 @@ class StorageSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.storage.{DeletionVectors, Optimize}
     val tbl = "opt_dv_spec_tbl"
-    Seq(tbl, s"${tbl}__dv").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
     graft.storage.SnapshotCommit.destroy(spark, tbl)
     spark.range(0, 5000)
       .select(col("id"), lpad(col("id").cast("string"), 64, "x").as("pad"))
@@ -480,8 +485,7 @@ class StorageSpec extends SparkSpec {
     // the SAME tables: compaction must preserve DV semantics. Deleted
     // rows stay deleted (now physically), the sidecar is purged, and
     // both the raw table and the DV view agree.
-    assert(!spark.catalog.tableExists(s"${tbl}__dv"),
-      "sidecar survived the compaction")
+    assert(currentSidecar(tbl).isEmpty, "sidecar survived the compaction")
     assert(spark.table(tbl).select("id").collect().map(_.getLong(0)).toSet
       === liveBefore, "optimize resurrected or lost soft-deleted rows")
     assert(DeletionVectors.read(spark, tbl).count() === 4000)
@@ -534,10 +538,8 @@ class StorageSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.storage.DeletionVectors
     val tbl = "dv_vac_spec_tbl"
-    Seq(tbl, s"${tbl}__dv").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      graft.core.CatalogUtil.dropOrphanLocation(spark, t)
-    }
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     // Range layout gives each file a disjoint id range, so the v1/v2
     // deletes (ids < 500) leave the upper-range files untouched while
     // v3 (%7) spreads over every file.
@@ -585,9 +587,8 @@ class StorageSpec extends SparkSpec {
     assert(after.keySet.exists(_.startsWith("vacuum-")),
       "no vacuum-rewritten file present")
     // Sidecar: folded entries gone, v3 rebased, version chain intact.
-    val sidecar = spark.table(s"${tbl}__dv")
-    assert(sidecar.filter(col("p") >= 0 && col("v") <= v2).count() === 0,
-      "folded sidecar entries survived the vacuum")
+    assert(!currentSidecar(tbl).get.exists { case (_, p, v) =>
+        p >= 0 && v <= v2 }, "folded sidecar entries survived the vacuum")
     assert(DeletionVectors.version(spark, tbl) === v3)
     val v4 = DeletionVectors.delete(spark, tbl, col("id") === 1)
     assert(v4 === 4L)
@@ -602,10 +603,8 @@ class StorageSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val tbl = "dv_vac_parity_tbl"
-    Seq(tbl, s"${tbl}__dv").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      graft.core.CatalogUtil.dropOrphanLocation(spark, t)
-    }
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    graft.core.CatalogUtil.dropOrphanLocation(spark, tbl)
     SnapshotCommit.destroy(spark, tbl)
     spark.range(0, 1000).select(col("id"), (col("id") * 3).as("payload"))
       .repartitionByRange(4, col("id"))
@@ -618,9 +617,7 @@ class StorageSpec extends SparkSpec {
         col("_metadata.row_index"))
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2)))
       .toMap
-    def sidecar(): Seq[(String, Long, Long)] =
-      spark.table(s"${tbl}__dv").select("f", "p", "v").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    def sidecar(): Seq[(String, Long, Long)] = currentSidecar(tbl).get
 
     val v1 = DeletionVectors.delete(spark, tbl, col("id") % 10 === 0)
     // Every row of the file holding id 0 folds (range layout: that file
@@ -693,7 +690,6 @@ class StorageSpec extends SparkSpec {
       (now(id)._1, now(id)._2, v) }.sorted
     assert(sideAfter.filter(_._2 >= 0).sorted === expected)
     assert(DeletionVectors.version(spark, tbl) === hwm)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -762,7 +758,7 @@ class StorageSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.storage.DeletionVectors
     val tbl = "dv_midrange_restore_tbl"
-    Seq(tbl, s"${tbl}__dv").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
     graft.storage.SnapshotCommit.destroy(spark, tbl)
     spark.range(0, 1000).select(col("id"), (col("id") * 3).as("payload"))
       .repartitionByRange(4, col("id"))
@@ -969,7 +965,6 @@ class StorageSpec extends SparkSpec {
     import graft.storage.{DeletionVectors, SnapshotCommit}
     val src = "clone_src_tbl"; val dst = "clone_dst_tbl"
     Seq(src, dst).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS ${t}__dv")
       SnapshotCommit.destroy(spark, t)
     }
     SnapshotCommit.commit(spark, src) { dir =>
@@ -1253,7 +1248,6 @@ class StorageSpec extends SparkSpec {
     val tbl = "stats_life_tbl"
     val cln = "stats_life_cln"
     Seq(tbl, cln).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS ${t}__dv")
       SnapshotCommit.destroy(spark, t)
     }
     StatsSkipping.commitWithStats(spark, tbl, "id") { stage =>
@@ -1267,7 +1261,7 @@ class StorageSpec extends SparkSpec {
       df.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec =>
           f.relation.location.inputFiles
-            .count(p => !p.contains("/_dv/") && !p.contains("__dv"))
+            .count(p => !p.contains("/_dv/"))
       }.sum
     def narrow(t: String) =
       DeletionVectors.read(spark, t).filter(col("id").between(100, 200))
@@ -1301,7 +1295,6 @@ class StorageSpec extends SparkSpec {
     assert(scanned(compacted) < after, "compaction shed the stats sidecar")
     assert(compacted.count() === 90L)
     Seq(tbl, cln).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS ${t}__dv")
       SnapshotCommit.destroy(spark, t)
     }
   }
@@ -1364,7 +1357,6 @@ class StorageSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.storage.{DeletionVectors, Optimize, SnapshotCommit, StatsSkipping}
     val tbl = "zopt_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     SnapshotCommit.commit(spark, tbl) { dir =>
       spark.range(0, 65536).select(
@@ -1383,7 +1375,7 @@ class StorageSpec extends SparkSpec {
       df.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec =>
           f.relation.location.inputFiles
-            .count(p => !p.contains("/_dv/") && !p.contains("__dv"))
+            .count(p => !p.contains("/_dv/"))
       }.sum
     // Before: no sidecar, random layout — every file planned.
     assert(scanned(spark.table(tbl).filter(col("b").between(0, 15))) === 16)
@@ -1395,7 +1387,7 @@ class StorageSpec extends SparkSpec {
     assert(w > 0 && w < 16, s"zorder optimize planned $w/16 files")
     // ...the deletion vector folded in (a=0 stays gone, sidecar
     // dropped), and the live view is value-identical to pre-optimize.
-    assert(!spark.catalog.tableExists(s"${tbl}__dv"))
+    assert(currentSidecar(tbl).isEmpty)
     assert(q.agg(count(lit(1)), sum(col("a")), sum(col("b"))).head()
       === expected, "zorder optimize changed the live view's values")
     assert(q.filter(col("a") === 0L).count() === 0L,
@@ -1471,7 +1463,6 @@ class StorageSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.storage.{DeletionVectors, Optimize, SnapshotCommit, StatsSkipping}
     val tbl = "magg_rule_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     StatsSkipping.commitWithStats(spark, tbl, Seq("id", "d", "m", "x")) {
       stage =>
@@ -1617,7 +1608,6 @@ class StorageSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.storage.{DeletionVectors, SnapshotCommit, StatsSkipping}
     val tbl = "magg_dv_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     StatsSkipping.commitWithStats(spark, tbl, "id") { stage =>
       spark.range(0, 5000).select(col("id"), (col("id") % 7).as("g"))
@@ -1663,7 +1653,6 @@ class StorageSpec extends SparkSpec {
     assert(filtered.collect()(0).getLong(0) ===
       spark.range(0, 5000).filter(col("id") % 10 =!= 0 && col("id") % 7 === 3)
         .count())
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1680,7 +1669,6 @@ class StorageSpec extends SparkSpec {
     val tblS = "dml_probe_stats_tbl"
     val tblN = "dml_probe_nostats_tbl"
     def build(tbl: String, withStats: Boolean): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
       SnapshotCommit.destroy(spark, tbl)
       def write(dir: String): Unit =
         spark.range(0, 320000)
@@ -1768,7 +1756,6 @@ class StorageSpec extends SparkSpec {
     assert(liveS.agg(sum(col("v"))).head().getLong(0) ===
       liveN.agg(sum(col("v"))).head().getLong(0))
     Seq(tblS, tblN).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS ${t}__dv")
       SnapshotCommit.destroy(spark, t)
     }
   }
@@ -1783,7 +1770,6 @@ class StorageSpec extends SparkSpec {
     // exactly those files (r18: the coordinates name them), not the
     // table — the scan's file count is the pin.
     val tbl = "cdc_prune_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     SnapshotCommit.commit(spark, tbl) { dir =>
       spark.range(0, 320000)
@@ -1829,7 +1815,6 @@ class StorageSpec extends SparkSpec {
     val files = scanFiles(arm)
     assert(files <= 3,
       s"delete-arm scan must read the touched files, got $files/32")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1841,7 +1826,6 @@ class StorageSpec extends SparkSpec {
     // size. Above 1 MiB, where older builds moved DELETE, RESTORE and
     // the change feed to Spark jobs, they add no job around that read.
     val tbl = "dv_large_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     val n = 800000L
     SnapshotCommit.commit(spark, tbl) { dir =>
@@ -1880,7 +1864,6 @@ class StorageSpec extends SparkSpec {
     assert(rstJobs.isEmpty, rstJobs.mkString("\n"))
     assert(DeletionVectors.read(spark, tbl).count() ===
       raw.filter(!first).count())
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1889,7 +1872,6 @@ class StorageSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.storage.{DeletionVectors, SnapshotCommit, StatsSkipping}
     val tbl = "magg_miskey_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     StatsSkipping.commitWithStats(spark, tbl, "id") { stage =>
       spark.range(0, 1000).select(col("id"), (col("id") % 7).as("g"))
@@ -1936,7 +1918,6 @@ class StorageSpec extends SparkSpec {
     val good = DeletionVectors.read(spark, tbl).agg(count(lit(1)).as("n"))
     assert(scans(good) === 1)
     assert(good.collect()(0).getLong(0) === 900L)
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 
@@ -1946,7 +1927,6 @@ class StorageSpec extends SparkSpec {
     import graft.ext.GraftSqlParser
     import graft.storage.{DeletionVectors, SnapshotCommit, StatsSkipping}
     val tbl = "merge_touch_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
     // 4 range-clustered files over disjoint id ranges, with an `id`
     // stats sidecar — the committed-and-clustered layout a MERGE
@@ -1990,7 +1970,6 @@ class StorageSpec extends SparkSpec {
     val pruned = StatsSkipping.survivingFiles(spark, tbl, "id", 60L, 70L)
     assert(pruned.size === 1,
       s"stats skipping must survive a MERGE, got ${pruned.size} files")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}__dv")
     SnapshotCommit.destroy(spark, tbl)
   }
 }
